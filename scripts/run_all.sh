@@ -1,12 +1,17 @@
 #!/usr/bin/env bash
-# One-command round validation: compile -> tests -> correctness at two
-# scale factors -> headline bench. Exits non-zero on the first failure.
+# One-command round validation: compile -> tests -> task-retry probe ->
+# correctness at two scale factors -> headline bench. Exits non-zero on
+# the first failure.
 # Dev tool only - not part of the shipped library.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 sbt -batch compile
 sbt -batch test
+
+# Task-retry determinism (salted aggregation, salted join, the
+# Graft.dedupCorpus pipeline): exits non-zero unless all three probes pass.
+sbt -batch "runMain graft.RetryProbe"
 
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/graft_runall_sf001"
 python scripts/verify_local.py /root/testdata/sf0.01 /tmp/graft_runall_sf001

@@ -74,7 +74,8 @@ object Bench {
       try {
         val src = scala.io.Source.fromFile(p)
         val txt = try src.mkString finally src.close()
-        // a diagnostic run (hygiene off) must never arm the gate
+        // a hygiene-off diagnostic run (older builds stamped it) must
+        // never arm the gate
         if (txt.contains("\"release_skipped\":true")) None
         else "\"queries\":\\{([^}]*)\\}".r
           .findFirstMatchIn(txt.replace("\\\"", "\""))
@@ -298,20 +299,8 @@ object Bench {
     // (the original releaseAllBlocks comment's async-unpersist lesson).
     // The entry-level releases after it find their blocks already
     // dropped, so their async removal is a no-op.
-    // Diagnostic A/B knob: SPARK_GRAFT_SKIP_RELEASE=1 disables the
-    // between-execution hygiene, reproducing the pre-r19 stale-entry
-    // reuse regime (timed runs silently rewire onto the previous
-    // execution's materialized blocks). For adjudicating whether a
-    // cross-regime delta is the honest-rebuild shift or a plan change —
-    // never for publishing: the artifact is stamped release_skipped and
-    // bench_diff refuses it as a baseline.
-    val skipRelease = sys.env.get("SPARK_GRAFT_SKIP_RELEASE").contains("1")
-    if (skipRelease)
-      System.err.println("[bench] SPARK_GRAFT_SKIP_RELEASE=1: hygiene off," +
-        " numbers reflect the flattered reuse regime (diagnostic only)")
-    def releaseAllBlocks(): Unit = if (!skipRelease) {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+    def releaseAllBlocks(): Unit = {
+      graft.core.Caches.freeAll(spark)
       graft.core.Caches.release(spark)
       spark.catalog.clearCache()
       sweepTmpIndexes()
@@ -458,14 +447,11 @@ object Bench {
     // parsed neither round ("parsed": null, empty PERF per_query). The
     // stdout line is therefore the CONTRACT fields only (metric, value,
     // unit, queries, failed, sf) so it fits a narrow capture; nothing
-    // about the timing methodology changes. Exception: a diagnostic
-    // run's release_skipped stamp stays on stdout too — a flattered
-    // hygiene-off line must self-identify wherever it is read from.
+    // about the timing methodology changes.
     val hygiene =
-      s""","warmup_failures":$warmupFailures,"retried":$retried,"retry_untrusted":$retryUntrusted,"loadavg_preflight":${f"$loadavg%.2f"},"sibling_jvms":${siblings.size},"sibling_jvms_post":${siblingsPost.size},"load_poisoned":$poisonedFinal,"cal_pre":${f"$calPre%.3f"},"cal_post":${f"$calPost%.3f"},"cal_healthy":${calHealthy.map(h => f"$h%.3f").getOrElse("null")},"machine_degraded":$machineDegraded,"release_skipped":$skipRelease"""
-    val slimTail = if (skipRelease) s""","release_skipped":true}""" else "}"
+      s""","warmup_failures":$warmupFailures,"retried":$retried,"retry_untrusted":$retryUntrusted,"loadavg_preflight":${f"$loadavg%.2f"},"sibling_jvms":${siblings.size},"sibling_jvms_post":${siblingsPost.size},"load_poisoned":$poisonedFinal,"cal_pre":${f"$calPre%.3f"},"cal_post":${f"$calPost%.3f"},"cal_healthy":${calHealthy.map(h => f"$h%.3f").getOrElse("null")},"machine_degraded":$machineDegraded"""
     val slimLine =
-      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir"$slimTail"""
+      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir"}"""
     val fullLine =
       s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir"$hygiene}"""
     // Self-contained artifact twin: the FULL line (hygiene included) is
@@ -476,8 +462,9 @@ object Bench {
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] could not write BENCH_LAST.json: $e") }
     // stop() BEFORE the println so the contract line is the program's
-    // last stdout — nothing can land after it in the driver's tail.
-    spark.stop()
-    println(slimLine)
+    // last stdout, where a bounded tail capture finds it; `finally`
+    // prints it even when stop() throws.
+    try spark.stop()
+    finally println(slimLine)
   }
 }

@@ -80,8 +80,7 @@ object Drill {
       })
 
     def release(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      graft.core.Caches.freeAll(spark)
       graft.core.Caches.release(spark)
       spark.catalog.clearCache()
       System.gc()

@@ -47,8 +47,7 @@ object StressBench {
         // the full-sweep run died broadcasting in a late stage from
         // exactly this. Outside the timed region; every stage builds
         // its own frames (the shared-graph group was split for this).
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        graft.core.Caches.freeAll(spark)
         // r19: also drop the CacheManager PLAN entries (RDD-level
         // unpersist never removes them — they accumulate across ~60
         // stages and every later stage's planning compares against

@@ -1,6 +1,23 @@
 package graft.core
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.rdd.{GraftBlocks, RDD}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
+
+/** An eagerly checkpointed frame and the blocks it reads. `df` is the
+  * checkpoint, or a frame [[map]]ped from it; [[free]] removes the
+  * blocks, after which `df` can no longer be read (a local checkpoint
+  * has no lineage to recompute from).
+  */
+final class Pinned private[core] (val df: DataFrame, blocks: RDD[_]) {
+
+  /** A frame computed from `df` that reads the same blocks. */
+  def map(f: DataFrame => DataFrame): Pinned = new Pinned(f(df), blocks)
+
+  /** Remove the blocks. Idempotent. */
+  def free(blocking: Boolean): Unit = GraftBlocks.unpersist(blocks, blocking)
+}
 
 /** Session-scoped registry of DataFrames an operator persisted
   * INTERNALLY and could not release itself.
@@ -20,19 +37,26 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * later query's planning pays a canonicalized-plan comparison against
   * each of them.
   *
-  * Contract: operators register internal persists with [[track]]; a
-  * long-lived session (a query service, a bench/verify harness, a
-  * notebook) calls [[release]] between independent jobs, AFTER
-  * materializing the results it needs. Releasing is always safe for
-  * correctness — persist is an optimization, a released frame
-  * recomputes from lineage — it only forfeits reuse within a job that
-  * is still running, so release at job boundaries.
+  * Contract: operators register internal persists with [[track]] and
+  * shared eager checkpoints with [[pinShared]]; a long-lived session (a
+  * query service, a bench/verify harness, a notebook) calls [[release]]
+  * between independent jobs, AFTER materializing the results it needs.
+  *
+  * Invariant: release only BETWEEN executions, never while a job that
+  * reads a tracked frame can still run. A released persist recomputes
+  * from lineage, but a released checkpoint has none — its blocks were
+  * the only copy — so a query still running over it fails.
   *
   * Frames that an operator CAN release itself (it runs an internal
   * action before returning, e.g. GD training or an eager index build)
   * follow the materialize-then-unpersist discipline at the call site
   * instead ([[graft.text.Curation]] scoredDisposition) and never land
-  * here.
+  * here; iterated checkpoints free their previous round through
+  * [[pin]] / [[Pinned.free]].
+  *
+  * This object is the only code that knows where a checkpoint's blocks
+  * live (the RDD behind the plan's `LogicalRDD` leaf) and how they are
+  * removed without Spark's truncated-lineage WARN.
   */
 object Caches {
 
@@ -62,12 +86,52 @@ object Caches {
     df
   }
 
+  /** The RDDs behind `df`'s `LogicalRDD` leaves: a checkpoint's blocks. */
+  private def leafRdds(df: Dataset[_]): Seq[RDD[_]] =
+    df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+
+  /** Eager `localCheckpoint` at `level`: the blocks are written before
+    * this returns, and the handle frees exactly them.
+    */
+  def pin(df: DataFrame, level: StorageLevel): Pinned = {
+    // Label the checkpoint's job and RDDs with pin's caller, as a direct
+    // localCheckpoint call there would be, not with this line.
+    val sc = df.sparkSession.sparkContext
+    val saved = sc.getLocalProperty(CallSiteShort)
+    new Throwable().getStackTrace
+      .find(!_.getClassName.startsWith("graft.core.Caches"))
+      .foreach(f => sc.setCallSite(
+        s"localCheckpoint at ${f.getFileName}:${f.getLineNumber}"))
+    val ck =
+      try df.localCheckpoint(eager = true, storageLevel = level)
+      finally sc.setLocalProperty(CallSiteShort, saved)
+    new Pinned(ck, leafRdds(ck).head)
+  }
+
+  /** The local property `SparkContext.setCallSite` writes. */
+  private val CallSiteShort = "callSite.short"
+
+  /** [[pin]] a frame several consumers of a lazy result share, and
+    * [[track]] it: its blocks live until the session's next [[release]].
+    */
+  def pinShared(df: DataFrame, level: StorageLevel): DataFrame =
+    track(pin(df, level).df)
+
+  /** Remove the blocks of every persisted RDD in `spark`'s context,
+    * blocking — a harness's sweep between executions, which also frees
+    * blocks nothing tracked.
+    */
+  def freeAll(spark: SparkSession): Unit =
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(GraftBlocks.unpersist(_, blocking = true))
+
   /** Unpersist every frame tracked against `spark` (removing both the
     * storage blocks and the CacheManager plan entry — `df.unpersist`,
-    * unlike RDD-level unpersist, drops the `CachedData` record).
-    * Non-blocking: block removal overlaps the caller's next job.
-    * Returns the number of frames released. Idempotent; a frame the
-    * caller already unpersisted is a no-op.
+    * unlike RDD-level unpersist, drops the `CachedData` record) and free
+    * the checkpoint blocks its plan reads, which the CacheManager does
+    * not know about. Non-blocking: block removal overlaps the caller's
+    * next job. Returns the number of frames released. Idempotent; a
+    * frame the caller already unpersisted is a no-op.
     */
   def release(spark: SparkSession): Int = {
     val fs = synchronized { sweepStopped(); frames.remove(spark) }
@@ -75,14 +139,7 @@ object Caches {
     fs.foreach { df =>
       try df.unpersist(blocking = false)
       catch { case scala.util.control.NonFatal(_) => () }
-      // localCheckpointed frames (r22): their blocks live on the plan's
-      // LogicalRDD leaf, not in the CacheManager — df.unpersist alone
-      // would leak them across a long verify session. Extracted from
-      // the tracked frame's OWN plan, so this can never free another
-      // query's storage; unpersist is idempotent.
-      try df.queryExecution.logical.collect {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-      }.foreach(_.unpersist(false))
+      try leafRdds(df).foreach(GraftBlocks.unpersist(_, blocking = false))
       catch { case scala.util.control.NonFatal(_) => () }
     }
     fs.size

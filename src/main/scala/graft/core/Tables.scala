@@ -93,7 +93,6 @@ object Tables {
     */
   private[core] def spreadCached(df: DataFrame, key: String,
                                  path: String): DataFrame = {
-    if (sys.env.get("GRAFT_NO_SPREAD").contains("1")) return df
     val n = math.max(2, df.sparkSession.sparkContext.defaultParallelism / 4)
     val narrow = narrowVerdicts.computeIfAbsent(s"$path#$n",
       _ => java.lang.Boolean.valueOf(df.rdd.getNumPartitions < n))

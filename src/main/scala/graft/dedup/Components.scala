@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.core.Caches
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -41,18 +42,6 @@ object Components {
     * diameter up to ~2^(maxIter-1), so the throw only fires on a
     * genuine bug.
     */
-  /** The RDD holding a localCheckpointed frame's materialized blocks —
-    * extracted from the frame's OWN plan (a LogicalRDD leaf), so freeing
-    * it can never touch another query's storage. (Diffing
-    * `sc.getPersistentRDDs` before/after would race with concurrent
-    * queries checkpointing on the shared session — the verify harness
-    * runs queries on a thread pool.)
-    */
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.logical.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }
-
   /** Edge count above which the adjacency is rebuilt as a
     * partitioning-preserving cache (see connectedComponents). Tunable
     * for tests/benchmarks via -Dgraft.components.adjPartitionThreshold.
@@ -132,12 +121,12 @@ object Components {
     // once; DISK_ONLY because each round streams it exactly once —
     // holding 2×|edges| rows in storage memory for the whole loop
     // starved an 8g heap at 20M+ edges (UNABLE_TO_ACQUIRE_MEMORY).
-    val adjBase = edges
+    val adjPin = Caches.pin(edges
       .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
       .union(edges.select(col(bCol).cast("long").as("src"),
         col(aCol).cast("long").as("dst")))
-      .distinct()
-      .localCheckpoint(eager = true, storageLevel = StorageLevel.DISK_ONLY)
+      .distinct(), StorageLevel.DISK_ONLY)
+    val adjBase = adjPin.df
     // Past ~1M edges the loop's dominant cost is re-shuffling + re-sorting
     // the adjacency for EVERY round's sort-merge join (a checkpointed
     // frame has UnknownPartitioning under AQE, so Catalyst must exchange
@@ -169,7 +158,7 @@ object Components {
       import spark.implicits._
       val labels = driverUnionFind(
         adjBase.select(col("src"), col("dst")).as[(Long, Long)].collect())
-      checkpointRdd(adjBase).foreach(_.unpersist(blocking = true))
+      adjPin.free(blocking = true)
       onRounds(0) // no distributed rounds ran
       return spark.createDataset(
         spark.sparkContext.parallelize(labels.toIndexedSeq,
@@ -200,12 +189,19 @@ object Components {
     // result from ONE groupBy over adj (both directions are present, so
     // every node is a src) — no join, and one fewer loop round. The loop
     // still runs to a zero-change fixpoint, so labels are unaffected.
-    var comp = adj
+    // The round's checkpointed label frame: nothing references the
+    // previous one once the next round's checkpoint exists, but its
+    // blocks stay in storage memory until explicitly freed. At graph
+    // scale (20M+ edges → ~0.5 GB of label blocks PER ROUND) leaving
+    // ~11 rounds resident starves execution memory — the 20M-edge
+    // StressBench stage died with UNABLE_TO_ACQUIRE_MEMORY before this
+    // free.
+    var cur = Caches.pin(adj
       .groupBy(col("src"))
       .agg(min(col("dst")).as("_nmin"))
       .select(col("src").as("id"),
-        least(col("src"), col("_nmin")).as("comp"))
-      .localCheckpoint(eager = true, storageLevel = labelLevel)
+        least(col("src"), col("_nmin")).as("comp")), labelLevel)
+    var comp = cur.df
     // One propagate-and-jump step, lazily composed: adopt the min label
     // among self and neighbors, then pointer-jump to the label's label
     // (path halving — depth of the label forest collapses geometrically).
@@ -229,13 +225,6 @@ object Components {
     }
     var converged = false
     var i = 0
-    // The previous round's checkpointed label frame: nothing references
-    // it once the new round's checkpoint exists, but its blocks stay in
-    // storage memory until explicitly freed. At graph scale (20M+
-    // edges → ~0.5 GB of label blocks PER ROUND) leaving ~11 rounds
-    // resident starves execution memory — the 20M-edge StressBench
-    // stage died with UNABLE_TO_ACQUIRE_MEMORY before this free.
-    var prevRound: Option[org.apache.spark.rdd.RDD[_]] = checkpointRdd(comp)
     while (!converged && i < maxIter) {
       // The convergence count rides the checkpoint materialization via
       // observe(): ONE job per round instead of checkpoint + count.
@@ -243,17 +232,16 @@ object Components {
       // 3.6s vs 2.9s on the pipeline capstone — the doubled join DAG
       // per job costs more than the barrier it saves.)
       val obs = org.apache.spark.sql.Observation()
-      val updated = step(comp)
+      val updated = Caches.pin(step(comp)
         .observe(obs,
           sum(when(col("next") < col("comp"), 1L).otherwise(0L))
-            .as("changed"))
-        .localCheckpoint(eager = true, storageLevel = labelLevel)
+            .as("changed")), labelLevel)
       val changed = obs.get("changed").asInstanceOf[Long]
-      comp = updated.select(col("id"), col("next").as("comp"))
-      // The new checkpoint is materialized (localCheckpoint is eager),
-      // so the previous round's blocks are now unreachable — free them.
-      prevRound.foreach(_.unpersist(blocking = true))
-      prevRound = checkpointRdd(updated)
+      comp = updated.df.select(col("id"), col("next").as("comp"))
+      // The new checkpoint is materialized (pin is eager), so the
+      // previous round's blocks are now unreachable — free them.
+      cur.free(blocking = true)
+      cur = updated
       converged = changed == 0
       i += 1
     }
@@ -264,7 +252,7 @@ object Components {
     // The adjacency served only the loop; the returned frame is a
     // projection of the LAST round's checkpoint (kept resident).
     if (!(adj eq adjBase)) adj.unpersist(blocking = true)
-    checkpointRdd(adjBase).foreach(_.unpersist(blocking = true))
+    adjPin.free(blocking = true)
     comp
   }
 
@@ -336,12 +324,9 @@ object Components {
     // appeared five times per execution, each dragging a multi-second
     // task-binary deserialization of the giant detector plan). Eager =
     // one detector pass; the truncated lineage also shrinks every
-    // later consumer's task binary to a LogicalRDD scan. Blocks land
-    // at the AQE-coalesced width and Caches.release frees them via the
-    // plan's LogicalRDD leaf.
-    val edges = graft.core.Caches.track(
-      edgesProv.localCheckpoint(eager = true,
-        storageLevel = StorageLevel.DISK_ONLY))
+    // later consumer's task binary to a checkpoint scan. Blocks land
+    // at the AQE-coalesced width; Caches.release frees them.
+    val edges = Caches.pinShared(edgesProv, StorageLevel.DISK_ONLY)
     val comp = dedupClusters(
       edges.select(col("id_a"), col("id_b")).distinct(), "id_a", "id_b")
     val clusterSrc = edges

@@ -2,7 +2,6 @@ package graft.dedup
 
 import graft.functions.GraftFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -705,28 +704,12 @@ object Dedup {
       when(col(s"_t$j") > 0, lit(1L << j)).otherwise(0L)
     }.reduce(_ + _)
     val aggs = minCols ++ votes
-    if (fusedAggEnabled) {
-      // Single-buffer typed Aggregator path (see [[FusedSigAgg]]): same
-      // native hash inputs, one ObjectHashAggregate state instead of a
-      // 68-column hash-aggregate row. Values are bit-identical
-      // (spec-pinned). MEASURED SLOWER at bench scale (sf0.1 idle box,
-      // median-of-3: dedup_provenance_clusters 5.15s vs 4.45s
-      // relational): the UDAF is opaque to Catalyst, so the unpersisted
-      // fan-out in the provenance capstone can no longer prune the
-      // aggregate per consumer — both branches pay the full 68-wide
-      // state — while the relational form's 68 columns are codegen'd
-      // and prune to 8 (minhash branch) / 60 (simhash branch). Default
-      // stays relational; the switch preserves the measurement.
-      val fusedUdaf = org.apache.spark.sql.functions.udaf(
-        new FusedSigAgg(numHashes, bits),
-        ExpressionEncoder[(Seq[Long], Long)]())
-      shingleDf
-        .select(col(idCol), mh.as("_mh"), sh.as("_sh"))
-        .groupBy(col(idCol))
-        .agg(fusedUdaf(col("_mh"), col("_sh")).as("_f"))
-        .select(col(idCol), col("_f.sig").as("sig"),
-          col("_f.simhash").as("simhash"))
-    } else shingleDf
+    // Relational 68-column hash aggregate, not a single-buffer typed
+    // Aggregator: a UDAF is opaque to Catalyst, so a consumer reading
+    // only `sig` or only `simhash` could no longer prune the aggregate
+    // to 8 / 60 columns (measured at sf0.1: dedup_provenance_clusters
+    // 5.15s via the Aggregator vs 4.45s relational).
+    shingleDf
       .select(col(idCol), mh.as("_mh"), sh.as("_sh"))
       .groupBy(col(idCol))
       .agg(aggs.head, aggs.tail: _*)
@@ -734,16 +717,6 @@ object Dedup {
         array((0 until numHashes).map(j => col(s"_m$j")): _*).as("sig"),
         assembled.as("simhash"))
   }
-
-  /** Switch for [[fusedSignatures]]' aggregation plumbing: default is the
-    * relational 68-column hash aggregate; set `graft.dedup.fusedAgg`
-    * (or GRAFT_FUSED_AGG) to use the [[FusedSigAgg]] single-buffer
-    * Aggregator. Values are identical either way.
-    */
-  private def fusedAggEnabled: Boolean =
-    sys.props.get("graft.dedup.fusedAgg")
-      .orElse(sys.env.get("GRAFT_FUSED_AGG"))
-      .exists(v => v == "1" || v.equalsIgnoreCase("true"))
 
   /** Winnowing fingerprints (Schleimer, Wilkerson, Aiken, SIGMOD 2003 —
     * the MOSS algorithm): hash every token k-gram, then keep the MINIMUM
@@ -1137,35 +1110,34 @@ object Dedup {
     * Returns (persisted token-array frame, per-doc base `(idCol,
     * n_tokens)`, position map `(idCol, i, pos, tok)` with `i` 1-based
     * doc-relative and `pos` global, full stream `(pos, tok)` incl.
-    * separators, the offsets checkpoint pin).
+    * separators, the pinned offsets the other frames read).
     */
   private def globalTokenStream(docs: DataFrame, idCol: String,
                                 textCol: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame,
-         Option[org.apache.spark.rdd.RDD[_]]) = {
+      : (DataFrame, DataFrame, DataFrame, DataFrame, graft.core.Pinned) = {
     // Corpus-sized: DISK_ONLY persist, lineage kept for recovery (see
     // repeatedSpanStats).
     val toks = graft.core.Caches.track(docs
       .select(col(idCol), split(col(textCol), " ").as("_toks"))
       .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
     val base = toks.select(col(idCol), size(col("_toks")).as("n_tokens"))
-    val (offsets, pin) = SuffixRank.prefixOffsets(
+    val offsets = SuffixRank.prefixOffsets(
       base.select(col(idCol), (col("n_tokens") + 1).cast("long").as("_cnt")),
       idCol, "_cnt")
     val posed = toks
       .select(col(idCol), posexplode(col("_toks")).as(Seq("_p0", "tok")))
-      .join(offsets.select(col(idCol), col("_off")), Seq(idCol))
+      .join(offsets.df.select(col(idCol), col("_off")), Seq(idCol))
       .select(col(idCol), (col("_p0") + 1).as("i"),
         (col("_off") + col("_p0")).as("pos"), col("tok"))
     // Separator = "\\u0001" + doc id: the control-char prefix keeps it
     // disjoint from every real token (corpus tokens are whitespace-split
     // text), and the id suffix makes each separator unique, so no two
     // separator positions can ever share an L-prefix.
-    val seps = offsets
+    val seps = offsets.df
       .select((col("_off") + col("_cnt") - 1).as("pos"),
         concat(lit("\u0001"), col(idCol).cast("string")).as("tok"))
     val stream = posed.select(col("pos"), col("tok")).union(seps)
-    (toks, base, posed, stream, pin)
+    (toks, base, posed, stream, offsets)
   }
 
   /** Public view of [[globalTokenStream]]: just the `(pos, tok)` stream
@@ -1192,17 +1164,17 @@ object Dedup {
   private def saMarkedSpans(docs: DataFrame, idCol: String,
                             textCol: String, L: Int)
       : (DataFrame, DataFrame, DataFrame) = {
-    val (toks, base, posed, stream, pin) =
+    val (toks, base, posed, stream, offsets) =
       globalTokenStream(docs, idCol, textCol)
     val flagged = SuffixRank.repeatedGramPositions(stream, "pos", "tok", L)
     // Boilerplate-sized: eager checkpoint both cuts the SA lineage for
-    // the downstream island/strip plans and lets the offsets pin free.
+    // the downstream island/strip plans and lets the offsets free.
     val marked = flagged
       .join(posed.select(col("pos"), col(idCol), col("i")), "pos")
       .select(col(idCol), col("i"), (col("i") + (L - 1)).as("e"))
       .localCheckpoint(eager = true,
         storageLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    pin.foreach(_.unpersist(blocking = false))
+    offsets.free(blocking = false)
     (toks, base, marked)
   }
 

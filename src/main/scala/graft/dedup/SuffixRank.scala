@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.core.{Caches, Pinned}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -76,11 +77,6 @@ object SuffixRank {
     */
   private val HistLevel = org.apache.spark.storage.StorageLevel.DISK_ONLY
 
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.logical.collectFirst {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }
-
   /** Global 1-based dense rank of `keys`' rows (assumed distinct) under
     * lexicographic order of `ordCols`, without a single-task window:
     * range-partition on the order columns, checkpoint to pin the
@@ -89,17 +85,16 @@ object SuffixRank {
     * (windows partitioned by partition id run in parallel) + the
     * partition's cumulative offset (broadcast — one row per partition).
     *
-    * Returns (ranked frame with a `rank` column, total row count, the
-    * pinned checkpoint's RDD for the caller to free once consumers are
-    * materialized).
+    * Returns (the ranked frame with a `rank` column, pinned for the
+    * caller to free once its consumers are materialized; the total row
+    * count).
     */
   private def globalDenseRank(keys: DataFrame, ordCols: Seq[String])
-      : (DataFrame, Long, Option[org.apache.spark.rdd.RDD[_]]) = {
+      : (Pinned, Long) = {
     val spark = keys.sparkSession
-    val sorted = keys
-      .repartitionByRange(ordCols.map(col): _*)
-      .localCheckpoint(eager = true, storageLevel = SerLevel)
-    val counts = sorted
+    val sorted = Caches.pin(
+      keys.repartitionByRange(ordCols.map(col): _*), SerLevel)
+    val counts = sorted.df
       .groupBy(spark_partition_id().as("_pid")).count()
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
     val total = counts.map(_._2).sum
@@ -108,7 +103,7 @@ object SuffixRank {
     }.init.zip(counts).map { case ((_, off), (pid, _)) => (pid, off) }
     import spark.implicits._
     val offDf = offsets.toSeq.toDF("_pid", "_off")
-    val ranked = sorted
+    val ranked = sorted.map(_
       .withColumn("_pid", spark_partition_id())
       .join(broadcast(offDf), Seq("_pid"), "left")
       .withColumn("rank",
@@ -116,8 +111,8 @@ object SuffixRank {
           row_number().over(
             Window.partitionBy(col("_pid"))
               .orderBy(ordCols.map(col): _*)).cast("long"))
-      .drop("_pid", "_off")
-    (ranked, total, checkpointRdd(sorted))
+      .drop("_pid", "_off"))
+    (ranked, total)
   }
 
   /** Distributed EXCLUSIVE prefix sum: one output row per input row,
@@ -130,16 +125,13 @@ object SuffixRank {
     * physical partition id run in parallel) plus broadcast partition
     * offsets (one row per partition crosses the driver, not data).
     *
-    * Returns (frame with `_off` added, the pinned checkpoint's RDD for
-    * the caller to free once consumers are materialized).
+    * Returns the frame with `_off` added, pinned: the caller frees it
+    * once its consumers are materialized.
     */
-  def prefixOffsets(df: DataFrame, ordCol: String, countCol: String)
-      : (DataFrame, Option[org.apache.spark.rdd.RDD[_]]) = {
+  def prefixOffsets(df: DataFrame, ordCol: String, countCol: String): Pinned = {
     val spark = df.sparkSession
-    val sorted = df
-      .repartitionByRange(col(ordCol))
-      .localCheckpoint(eager = true, storageLevel = SerLevel)
-    val counts = sorted
+    val sorted = Caches.pin(df.repartitionByRange(col(ordCol)), SerLevel)
+    val counts = sorted.df
       .groupBy(spark_partition_id().as("_pid"))
       .agg(sum(col(countCol).cast("long")).as("_c"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
@@ -148,7 +140,7 @@ object SuffixRank {
     }.init.zip(counts).map { case ((_, off), (pid, _)) => (pid, off) }
     import spark.implicits._
     val offDf = offsets.toSeq.toDF("_pid", "_poff")
-    val out = sorted
+    sorted.map(_
       .withColumn("_pid", spark_partition_id())
       .join(broadcast(offDf), Seq("_pid"), "left")
       .withColumn("_off",
@@ -156,19 +148,17 @@ object SuffixRank {
           coalesce(sum(col(countCol).cast("long")).over(
             Window.partitionBy(col("_pid")).orderBy(col(ordCol))
               .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .drop("_pid", "_poff")
-    (out, checkpointRdd(sorted))
+      .drop("_pid", "_poff"))
   }
 
   /** The doubling loop's output: final ranks (a permutation of 1..n over
     * `pos`), the stream length, and — when history was requested — every
-    * round's (prefixLen, rank frame) in ascending prefixLen order
-    * (1, 2, 4, …; the last entry is `ranks` itself) with the pinned
-    * RDDs the caller must free.
+    * round's (prefixLen, pinned rank frame) in ascending prefixLen order
+    * (1, 2, 4, …; the last entry is `ranks` itself), which the caller
+    * must free.
     */
   private case class Doubling(ranks: DataFrame, n: Long,
-                              history: Seq[(Long, DataFrame)],
-                              pins: Seq[org.apache.spark.rdd.RDD[_]])
+                              history: Seq[(Long, Pinned)])
 
   private def doubling(tokens: DataFrame, posCol: String, tokCol: String,
                        keepHistory: Boolean): Doubling = {
@@ -176,31 +166,25 @@ object SuffixRank {
     // them — then they go to disk (see HistLevel) so memory stays O(2)
     // frames regardless of round count.
     val roundLevel = if (keepHistory) HistLevel else SerLevel
-    val toks = tokens
-      .select(col(posCol).cast("long").as("pos"), col(tokCol).cast("string").as("tok"))
-      .localCheckpoint(eager = true, storageLevel = SerLevel)
-    val n = toks.count()
+    val toks = Caches.pin(tokens
+      .select(col(posCol).cast("long").as("pos"), col(tokCol).cast("string").as("tok")),
+      SerLevel)
+    val n = toks.df.count()
     if (n == 0) {
-      checkpointRdd(toks).foreach(_.unpersist(blocking = true))
-      val empty = toks.select(col("pos"), lit(0L).as("rank")).where(lit(false))
-      return Doubling(empty, 0L, Nil, Nil)
+      toks.free(blocking = true)
+      val empty = toks.df.select(col("pos"), lit(0L).as("rank")).where(lit(false))
+      return Doubling(empty, 0L, Nil)
     }
 
-    var history = List.empty[(Long, DataFrame)]
-    var pins = List.empty[org.apache.spark.rdd.RDD[_]]
+    var history = List.empty[(Long, Pinned)]
 
     // Round 0: rank by first token alone (prefix length 1).
-    val (tokRanks, nDistinct0, pin0) = globalDenseRank(toks.select("tok").distinct(), Seq("tok"))
-    var cur = toks.join(tokRanks, "tok")
-      .select(col("pos"), col("rank"))
-      .localCheckpoint(eager = true, storageLevel = roundLevel)
-    checkpointRdd(toks).foreach(_.unpersist(blocking = true))
-    pin0.foreach(_.unpersist(blocking = true))
-    if (keepHistory) {
-      history ::= (1L, cur)
-      pins :::= checkpointRdd(cur).toList
-    }
-    var prev = if (keepHistory) None else checkpointRdd(cur)
+    val (tokRanks, nDistinct0) = globalDenseRank(toks.df.select("tok").distinct(), Seq("tok"))
+    var cur = Caches.pin(toks.df.join(tokRanks.df, "tok")
+      .select(col("pos"), col("rank")), roundLevel)
+    toks.free(blocking = true)
+    tokRanks.free(blocking = true)
+    if (keepHistory) history ::= (1L, cur)
 
     var nDistinct = nDistinct0
     var k = 1L
@@ -209,22 +193,16 @@ object SuffixRank {
     while (nDistinct < n && round < maxRounds) {
       // Pair each position's rank with the rank k positions ahead;
       // sentinel 0 (< all real ranks) when the suffix ends within k.
-      val ahead = cur.select((col("pos") - k).as("pos"), col("rank").as("_r2"))
-      val paired = cur.withColumnRenamed("rank", "_r1")
+      val ahead = cur.df.select((col("pos") - k).as("pos"), col("rank").as("_r2"))
+      val paired = cur.df.withColumnRenamed("rank", "_r1")
         .join(ahead, Seq("pos"), "left")
         .na.fill(0L, Seq("_r2"))
-      val (pairRanks, d, pin) = globalDenseRank(paired.select("_r1", "_r2").distinct(), Seq("_r1", "_r2"))
-      val next = paired.join(pairRanks, Seq("_r1", "_r2"))
-        .select(col("pos"), col("rank"))
-        .localCheckpoint(eager = true, storageLevel = roundLevel)
-      pin.foreach(_.unpersist(blocking = true))
-      if (keepHistory) {
-        history ::= (2 * k, next)
-        pins :::= checkpointRdd(next).toList
-      } else {
-        prev.foreach(_.unpersist(blocking = true))
-        prev = checkpointRdd(next)
-      }
+      val (pairRanks, d) = globalDenseRank(paired.select("_r1", "_r2").distinct(), Seq("_r1", "_r2"))
+      val next = Caches.pin(paired.join(pairRanks.df, Seq("_r1", "_r2"))
+        .select(col("pos"), col("rank")), roundLevel)
+      pairRanks.free(blocking = true)
+      if (keepHistory) history ::= (2 * k, next)
+      else cur.free(blocking = true)
       cur = next
       nDistinct = d
       k *= 2
@@ -233,7 +211,7 @@ object SuffixRank {
     if (nDistinct < n) throw new IllegalStateException(
       s"suffixRanks: ranks not separated after $round rounds " +
         "(positions non-contiguous?)")
-    Doubling(cur, n, history.reverse, pins)
+    Doubling(cur.df, n, history.reverse)
   }
 
   /** (pos, tok) → (pos, rank): the 1-based lexicographic suffix rank of
@@ -274,45 +252,39 @@ object SuffixRank {
   def lcpArray(tokens: DataFrame, posCol: String, tokCol: String): DataFrame = {
     val d = doubling(tokens, posCol, tokCol, keepHistory = true)
     if (d.n <= 1) {
-      d.pins.foreach(_.unpersist(blocking = true))
+      d.history.foreach(_._2.free(blocking = true))
       return d.ranks.select(col("rank"), col("pos"),
         col("pos").as("pos_next"), lit(0L).as("lcp")).where(lit(false))
     }
     // Rank-adjacent pairs: (rank, pos=sa[rank], pos_next=sa[rank+1]).
     val nxt = d.ranks.select((col("rank") - 1).as("rank"), col("pos").as("pos_next"))
-    var pairs = d.ranks.select(col("rank"), col("pos"))
+    var pairs = Caches.pin(d.ranks.select(col("rank"), col("pos"))
       .join(nxt, "rank")
-      .withColumn("lcp", lit(0L))
-      .localCheckpoint(eager = true, storageLevel = SerLevel)
-    var prev = checkpointRdd(pairs)
+      .withColumn("lcp", lit(0L)), SerLevel)
     // The final (fully separated) frame is consumed right there in the
     // pair construction and never by the descent (LCP < its prefix
     // length by construction) — free it now that `pairs` materialized.
-    checkpointRdd(d.history.last._2).foreach(_.unpersist(blocking = true))
+    d.history.last._2.free(blocking = true)
     // Greedy descent over the remaining levels, largest first. Each
     // level frame is consumed by exactly this one step, so its blocks
     // are released as soon as the step's state frame materializes —
     // peak retained frames stay O(2) regardless of round count.
-    for ((len, frame) <- d.history.init.reverse) {
-      val ra = frame.select(col("pos").as("_pa"), col("rank").as("_ra"))
-      val rb = frame.select(col("pos").as("_pb"), col("rank").as("_rb"))
-      val next = pairs
+    for ((len, level) <- d.history.init.reverse) {
+      val ra = level.df.select(col("pos").as("_pa"), col("rank").as("_ra"))
+      val rb = level.df.select(col("pos").as("_pb"), col("rank").as("_rb"))
+      val next = Caches.pin(pairs.df
         .join(ra, col("pos") + col("lcp") === col("_pa"), "left")
         .join(rb, col("pos_next") + col("lcp") === col("_pb"), "left")
         .withColumn("lcp",
           when(col("_ra").isNotNull && col("_ra") === col("_rb"),
             col("lcp") + len).otherwise(col("lcp")))
-        .select(col("rank"), col("pos"), col("pos_next"), col("lcp"))
-        .localCheckpoint(eager = true, storageLevel = SerLevel)
-      prev.foreach(_.unpersist(blocking = true))
-      checkpointRdd(frame).foreach(_.unpersist(blocking = true))
-      prev = checkpointRdd(next)
+        .select(col("rank"), col("pos"), col("pos_next"), col("lcp")),
+        SerLevel)
+      pairs.free(blocking = true)
+      level.free(blocking = true)
       pairs = next
     }
-    // Safety net (unpersist is idempotent): every pin was already freed
-    // level-by-level above.
-    d.pins.foreach(_.unpersist(blocking = false))
-    pairs
+    pairs.df
   }
 
   /** Exact-substring repeat detection (the Lee et al. 2022 primitive):

@@ -253,12 +253,11 @@ object Composition {
     // plan would keep the session's fixed shuffle width however small
     // the data. Lineage truncation is the established trade for these
     // fan-in frames (Components adjacency discipline); Caches.release
-    // frees checkpoint blocks through the plan's LogicalRDD.
-    val tfFull = graft.core.Caches.track(
+    // frees the checkpoint blocks.
+    val tfFull = graft.core.Caches.pinShared(
       toks.groupBy(col("fold"), col("id"), col("label"), col("term"))
-        .agg(count(lit(1)).as("_tf"))
-        .localCheckpoint(eager = true, storageLevel =
-          org.apache.spark.storage.StorageLevel.DISK_ONLY))
+        .agg(count(lit(1)).as("_tf")),
+      org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val folds = (0 until k).toDF("fold")
     val classes = base.select(col("label")).distinct()
     val capsDf = caps.toDF("vocab_cap")
@@ -279,11 +278,10 @@ object Composition {
     // measured): the rollup is referenced by ~6 consumers below; lazily
     // persisted it was recomputed by racing AQE subquery jobs AND read
     // through full-width task waves of near-empty tasks.
-    val fltCounts = graft.core.Caches.track(
+    val fltCounts = graft.core.Caches.pinShared(
       tfFull.groupBy(col("fold"), col("label"), col("term"))
-        .agg(sum(col("_tf")).as("_cflt"))
-        .localCheckpoint(eager = true, storageLevel =
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .agg(sum(col("_tf")).as("_cflt")),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tCounts = fltCounts.groupBy(col("term"))
       .agg(sum(col("_cflt")).as("_ct"))
     val ftCounts = fltCounts.groupBy(col("fold"), col("term"))
@@ -337,11 +335,10 @@ object Composition {
     // k×|C| rows AT ANY CORPUS SCALE (folds × classes) — the AQE-sized
     // eager checkpoint lands it in one block everywhere, and the eager
     // pass prevents the same concurrent-materialization race as above.
-    val flDocs = graft.core.Caches.track(
+    val flDocs = graft.core.Caches.pinShared(
       base.groupBy(col("fold"), col("label"))
-        .agg(count(lit(1)).as("_ndfl"))
-        .localCheckpoint(eager = true, storageLevel =
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .agg(count(lit(1)).as("_ndfl")),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val labelDocs = flDocs.groupBy(col("label")).agg(sum(col("_ndfl")).as("_ndl"))
     val foldDocs = flDocs.groupBy(col("fold")).agg(sum(col("_ndfl")).as("_ndf"))
     val nDocs = flDocs.agg(sum(col("_ndfl")).as("_nd"))

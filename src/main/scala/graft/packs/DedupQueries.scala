@@ -491,9 +491,8 @@ object DedupQueries extends QueryPack {
       // stages — racing a lazy persist re-ran the shingle explode; the
       // eager checkpoint materializes it exactly once at the
       // AQE-coalesced width (tracked: released by the harness sweep).
-      val sh = graft.core.Caches.track(docShingles(s, dir)
-        .localCheckpoint(eager = true,
-          storageLevel = StorageLevel.DISK_ONLY))
+      val sh = graft.core.Caches.pinShared(docShingles(s, dir),
+        StorageLevel.DISK_ONLY)
       val sig = Dedup.minhashSignatures(sh, "doc_id", numHashes = 8)
       val cand = Dedup.minhashBandCandidates(sig, "doc_id", rowsPerBand = 2)
       Dedup.jaccardPairs(sh, "doc_id", threshold = 0.05,

@@ -1209,19 +1209,16 @@ object Similarity {
     // AQE-coalesced width — bytes-derived, so ~1 block at bench scale
     // and full width at corpus scale. Lineage truncation is the
     // established trade for these loop/fan-in frames (the Components
-    // adjacency discipline). Session-tracked: Caches.release frees
-    // checkpoint blocks through the plan's LogicalRDD.
-    val edges = graft.core.Caches.track(graph
+    // adjacency discipline). Session-tracked: Caches.release frees the
+    // checkpoint blocks.
+    val edges = graft.core.Caches.pinShared(graph
       .select(col("src_id").cast("long").as("a"),
-        col("neighbor_id").cast("long").as("b"))
-      .localCheckpoint(eager = true,
-        storageLevel = StorageLevel.MEMORY_AND_DISK_SER))
-    val und = graft.core.Caches.track(edges
+        col("neighbor_id").cast("long").as("b")),
+      StorageLevel.MEMORY_AND_DISK_SER)
+    // feeds the degree count and all three legs — same treatment
+    val und = graft.core.Caches.pinShared(edges
       .unionAll(edges.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      // feeds the degree count and all three legs — same treatment
-      .localCheckpoint(eager = true,
-        storageLevel = StorageLevel.MEMORY_AND_DISK_SER))
+      .distinct(), StorageLevel.MEMORY_AND_DISK_SER)
     // hub-intermediate guard on the ID-SIZED edge list (degree in the
     // symmetric closure = out-degree + reciprocated in-degree)
     val okMid = und.groupBy(col("b")).agg(count(lit(1)).as("_d"))
@@ -1240,18 +1237,13 @@ object Similarity {
     // vecs joins (two per expansion side + two direct); this pays the
     // attach once plus one join for the direct leg's second vector.
     // Vector-fat (edge-proportional rows × the embedding array) →
-    // DISK_ONLY, the knnGraphCells withVec precedent (a fat frame
-    // cached in-heap competes with the self-join's execution memory;
-    // r17 A/B). Session-tracked: released at job boundaries.
-    // Vector-fat (edge-proportional rows × the embedding array) →
     // DISK_ONLY blocks, the knnGraphCells withVec precedent (a fat
     // frame held in-heap competes with the self-join's execution
-    // memory; r17 A/B). Same eager/AQE-width reasoning as edges/und.
-    val attachedAllCk = graft.core.Caches.track(und
+    // memory; r17 A/B). Same eager/AQE-width reasoning as edges/und;
+    // session-tracked: released at job boundaries.
+    val attachedAllCk = graft.core.Caches.pinShared(und
       .join(vecs, col("a") === col("_vid"))
-      .select(col("a"), col("b"), col("_v"))
-      .localCheckpoint(eager = true,
-        storageLevel = StorageLevel.DISK_ONLY))
+      .select(col("a"), col("b"), col("_v")), StorageLevel.DISK_ONLY)
     // re-spread for the CPU-heavy mid-join map sides — identity at
     // corpus width, one small exchange at bench width (see
     // knnGraphCells' withVecW note)
@@ -1497,46 +1489,40 @@ object Similarity {
     // (the min-fold plan would nest k deep), so localCheckpoint stays —
     // the Components loop discipline — at DISK_ONLY to keep k rounds of
     // blocks out of storage memory. Durability waiver as in Components.
-    var cur = pts
+    var cur = graft.core.Caches.pin(pts
       .crossJoin(broadcast(sel.select(col("_v").as("_sv"))))
       .select(col("id"), col("_v"),
-        graft.plans.GraftExpressions.l2sq(col("_v"), col("_sv")).as("_mind"))
-      .localCheckpoint(eager = true, storageLevel = StorageLevel.DISK_ONLY)
-    // The round's checkpoint supersedes the previous one the moment it
-    // is (eagerly) materialized — without this release the traversal
-    // keeps k CORPUS-SIZED block sets alive at once (k=32 ⇒ 32× the
-    // corpus on executor disks; the Components prevRound discipline).
-    def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.logical.collectFirst {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-      }
-    var prevCur = checkpointRdd(cur)
+        graft.plans.GraftExpressions.l2sq(col("_v"), col("_sv")).as("_mind")),
+      StorageLevel.DISK_ONLY)
     for (r <- 2 to k) {
       // argmax mind, ties to lowest id, over not-yet-selected points
-      val next = cur
+      val next = cur.df
         .join(sel.select(col("id")), Seq("id"), "left_anti")
         .agg(min(struct((-col("_mind")).as("nm"), col("id").as("nid"))).as("_x"))
         .select(col("_x.nid").as("_nid"), (-col("_x.nm")).as("_nd"))
-      val nextRow = cur.crossJoin(broadcast(next))
+      val nextRow = cur.df.crossJoin(broadcast(next))
         .where(col("id") === col("_nid"))
         .select(lit(r).as("sel_rank"), col("id"), col("_v"),
           col("_nd").as("_rad"))
         .localCheckpoint()
       sel = sel.unionByName(nextRow).localCheckpoint()
-      cur = cur
+      val folded = graft.core.Caches.pin(cur.df
         .crossJoin(broadcast(nextRow.select(col("_v").as("_sv"))))
         .select(col("id"), col("_v"),
           least(col("_mind"),
             graft.plans.GraftExpressions.l2sq(col("_v"), col("_sv")))
-            .as("_mind"))
-        .localCheckpoint(eager = true, storageLevel = StorageLevel.DISK_ONLY)
-      prevCur.foreach(_.unpersist(blocking = false))
-      prevCur = checkpointRdd(cur)
+            .as("_mind")), StorageLevel.DISK_ONLY)
+      // The round's checkpoint supersedes the previous one the moment it
+      // is (eagerly) materialized — without this release the traversal
+      // keeps k CORPUS-SIZED block sets alive at once (k=32 ⇒ 32× the
+      // corpus on executor disks; the Components round discipline).
+      cur.free(blocking = false)
+      cur = folded
     }
     // sel is (eagerly) checkpointed ≤k rows — the result no longer reads
     // pts or cur, so both release NOW instead of leaking for the session
     // (the Curation materialize-then-unpersist discipline).
-    prevCur.foreach(_.unpersist(blocking = false))
+    cur.free(blocking = false)
     pts.unpersist(blocking = false)
     sel.select(col("sel_rank"), col("id"),
       (round(sqrt(col("_rad")), 6) + lit(0.0)).as("radius"))

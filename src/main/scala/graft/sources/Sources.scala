@@ -48,11 +48,6 @@ object Sources {
     */
   def spreadIfNarrow(df: DataFrame, key: org.apache.spark.sql.Column,
                      partitions: Int = 0): DataFrame = {
-    // Diagnostic A/B knob (r21): GRAFT_NO_SPREAD=1 disables the
-    // conditional spread so a single binary can measure spread-vs-raw in
-    // adjacent runs on the same session settings. Never set in the
-    // driver contract.
-    if (sys.env.get("GRAFT_NO_SPREAD").contains("1")) return df
     val n = if (partitions > 0) partitions
       else df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions >= n) df else df.repartition(n, key)

@@ -604,10 +604,9 @@ object TextAnalysis {
     // re-tokenize the corpus before a block landed. Eager = exactly one
     // tokenize pass, blocks at the AQE-coalesced width (occurrence-
     // scale frame, so usually a handful). Tracked for release.
-    val idx = graft.core.Caches.track(positionalIndex(docs, idCol, textCol)
-      .where(col("term").isin(phrase.distinct: _*))
-      .localCheckpoint(eager = true, storageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val idx = graft.core.Caches.pinShared(positionalIndex(docs, idCol, textCol)
+      .where(col("term").isin(phrase.distinct: _*)),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     phraseCountsFromIndex(idx, idCol, phrase)
   }
 
@@ -814,10 +813,9 @@ object TextAnalysis {
       "phrases must be non-empty and every phrase needs at least one term")
     val allTerms = phrases.flatten.distinct
     // same eager/AQE-width materialization as phraseMatchCounts (r22)
-    val idx = graft.core.Caches.track(positionalIndex(docs, idCol, textCol)
-      .where(col("term").isin(allTerms: _*))
-      .localCheckpoint(eager = true, storageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val idx = graft.core.Caches.pinShared(positionalIndex(docs, idCol, textCol)
+      .where(col("term").isin(allTerms: _*)),
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     phrases.zipWithIndex.map { case (p, pid) =>
       phraseCountsFromIndex(idx, idCol, p)
         .select(lit(pid).as("phrase_id"), col(idCol), col("n_matches"))

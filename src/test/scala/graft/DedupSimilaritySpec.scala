@@ -70,26 +70,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
     }
   }
 
-  test("FusedSigAgg single-buffer path is bit-identical to the relational fused form") {
-    val corpus = spark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("text"))
-    val sh = Dedup.shingles(corpus, "doc_id", "text").localCheckpoint()
-    def run() = Dedup.fusedSignatures(sh, "doc_id", numHashes = 8, bits = 60)
-      .as[(Long, Seq[Long], Long)].collect()
-      .map(r => r._1 -> (r._2, r._3)).toMap
-    val relational = run()
-    System.setProperty("graft.dedup.fusedAgg", "1")
-    try {
-      val viaAgg = run()
-      assert(viaAgg.keySet === relational.keySet)
-      viaAgg.foreach { case (id, (sig, s60)) =>
-        assert(sig === relational(id)._1, s"minhash doc $id")
-        assert(s60 === relational(id)._2, s"simhash doc $id")
-      }
-    } finally System.clearProperty("graft.dedup.fusedAgg")
-  }
-
   test("facade fused family matches the single-detector derivations") {
     val corpus = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")

@@ -125,13 +125,13 @@ class SuffixRankSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(41)
     val rows = (0 until 97).map(i => (f"k$i%03d", rnd.nextInt(50) + 1L))
     val df = rows.toDF("k", "c")
-    val (out, pin) = SuffixRank.prefixOffsets(df, "k", "c")
-    val got = out.select(col("k"), col("_off")).as[(String, Long)]
+    val offsets = SuffixRank.prefixOffsets(df, "k", "c")
+    val got = offsets.df.select(col("k"), col("_off")).as[(String, Long)]
       .collect().toMap
     val sortedRows = rows.sortBy(_._1)
     val expected = sortedRows.map(_._1)
       .zip(sortedRows.map(_._2).scanLeft(0L)(_ + _).init).toMap
-    pin.foreach(_.unpersist(blocking = true))
+    offsets.free(blocking = true)
     assert(got === expected)
   }
 

@@ -1,8 +1,17 @@
 package graft
 
+import graft.core.Caches
 import graft.text.TextAnalysis
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{Configurator, Property}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Unit fixtures for text-analysis operators whose corpus-scale behavior
   * is pinned by the `text_*` oracles — these pin the hand-computable
@@ -397,6 +406,40 @@ class TextAnalysisSpec extends AnyFunSuite {
     }
   }
 
+  /** RDD ids behind a frame's checkpoint leaves. */
+  private def blockIds(df: DataFrame): Set[Int] =
+    df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet
+
+  private def persistedIds: Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Runs `body` with WARN enabled on Spark's RDD loggers (the session
+    * logs at ERROR) and returns the WARN messages they emitted.
+    */
+  private def rddWarns[A](body: => A): (A, Seq[String]) = {
+    val name = "org.apache.spark.rdd"
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("rdd-warns", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) lines.add(e.getMessage.getFormattedMessage): Unit
+    }
+    app.start()
+    val ctx = LoggerContext.getContext(false)
+    val prev = ctx.getLogger(name).getLevel
+    Configurator.setLevel(name, Level.WARN)
+    ctx.getConfiguration.getLoggerConfig(name).addAppender(app, null, null)
+    ctx.updateLoggers()
+    try {
+      val a = body
+      (a, lines.asScala.toSeq)
+    } finally {
+      ctx.getConfiguration.getLoggerConfig(name).removeAppender(app.getName)
+      Configurator.setLevel(name, prev)
+      app.stop()
+    }
+  }
+
   test("Caches: lazy internal persists are tracked, release drops them " +
     "and results still recompute") {
     val docs = Seq((1L, "a b a b"), (2L, "b a b")).toDF("doc_id", "text")
@@ -404,12 +447,64 @@ class TextAnalysisSpec extends AnyFunSuite {
     val out = TextAnalysis.bigramLmScore(docs, "doc_id", "text")
     assert(graft.core.Caches.trackedCount(spark) === before + 1)
     val first = out.collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    val released = Graft.releaseCaches(spark)
-    assert(released >= 1)
+    // a shared eager checkpoint rides the same registry
+    val shared = Caches.pinShared(docs, StorageLevel.MEMORY_AND_DISK)
+    assert(graft.core.Caches.trackedCount(spark) === before + 2)
+    assert(blockIds(shared).subsetOf(persistedIds))
+    val (released, warns) = rddWarns(Graft.releaseCaches(spark))
+    assert(released >= 2)
     assert(graft.core.Caches.trackedCount(spark) === 0)
+    assert((blockIds(shared) & persistedIds).isEmpty)
+    assert(!warns.exists(_.contains("was locally checkpointed")), warns)
     // release forfeits reuse, never correctness: recompute matches
     assert(out.collect().map(r => (r.getLong(0), r.getLong(2))).toSet
       === first)
+  }
+
+  test("Caches: Pinned.free removes exactly its own blocks, quietly") {
+    // positive control: Spark's own unpersist logs the WARN `free` avoids
+    val raw = spark.sparkContext.parallelize(1 to 4).localCheckpoint()
+    raw.count()
+    val (_, rawWarns) = rddWarns(raw.unpersist(blocking = true))
+    assert(rawWarns.exists(_.contains("was locally checkpointed")), rawWarns)
+
+    val a = Caches.pin(Seq(1L, 2L, 3L).toDF("x"), StorageLevel.MEMORY_AND_DISK)
+    val b = Caches.pin(Seq(4L, 5L).toDF("y"), StorageLevel.MEMORY_AND_DISK)
+    val (aIds, bIds) = (blockIds(a.df), blockIds(b.df))
+    assert(aIds.size === 1 && (aIds ++ bIds).subsetOf(persistedIds))
+    val before = persistedIds
+    val (_, warns) = rddWarns(a.free(blocking = true))
+    assert(before -- persistedIds === aIds)
+    assert(bIds.subsetOf(persistedIds))
+    assert(b.df.as[Long].collect().sorted.toSeq === Seq(4L, 5L))
+    assert(warns.isEmpty, warns)
+    b.free(blocking = true)
+    assert((bIds & persistedIds).isEmpty)
+  }
+
+  test("Caches: iterated checkpoint loops keep only the returned frame's " +
+    "blocks") {
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (7L, 8L))
+      .toDF("a", "b")
+    val key = "graft.components.driverUfThreshold"
+    val prev = sys.props.put(key, "0") // force the distributed label loop
+    val before = persistedIds
+    val comp =
+      try graft.dedup.Components.connectedComponents(edges, "a", "b")
+      finally prev match {
+        case Some(v) => sys.props.put(key, v): Unit
+        case None => sys.props.remove(key): Unit
+      }
+    assert(persistedIds -- before === blockIds(comp))
+    assert(comp.as[(Long, Long)].collect().toMap ===
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L, 7L -> 7L, 8L -> 7L))
+
+    val toks = "b a n a n a b a n".split(" ").toSeq.zipWithIndex
+      .map { case (t, i) => (i.toLong, t) }.toDF("pos", "tok")
+    val before2 = persistedIds
+    val lcp = graft.dedup.SuffixRank.lcpArray(toks, "pos", "tok")
+    assert(persistedIds -- before2 === blockIds(lcp))
+    assert(lcp.count() === 8L)
   }
 
   test("pplBuckets: thirds ordered by mean LM score, head = highest, " +
