@@ -1,12 +1,21 @@
 #!/usr/bin/env bash
-# One-command round validation: compile -> tests -> task-retry probe ->
-# correctness at two scale factors -> headline bench. Exits non-zero on
-# the first failure.
+# One-command round validation: compile -> smoke -> tests -> task-retry
+# probe -> correctness at two scale factors -> headline bench. Exits
+# non-zero on the first failure.
 # Dev tool only - not part of the shipped library.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
 sbt -batch compile
+
+# Smoke: the contract entry on sf0.001 must return rows.
+sbt -batch "runMain graft.Smoke" | tee /tmp/graft_smoke_out.txt
+rows=$(sed -n 's/^ENTRY_ROWS=\([0-9]*\)$/\1/p' /tmp/graft_smoke_out.txt | tail -1)
+if [ "${rows:-0}" -le 0 ]; then
+    echo "smoke: ENTRY_ROWS=${rows:-missing}, expected > 0" >&2
+    exit 1
+fi
+
 sbt -batch test
 
 # Task-retry determinism (salted aggregation, salted join, the
@@ -21,6 +30,8 @@ python scripts/verify_local.py /root/testdata/sf0.1 /tmp/graft_runall_sf01
 
 # Bench + per-query regression gate: fails on >1.5x per-query slowdowns
 # vs the last round's BENCH_r*.json unless BASELINE.md carries a
-# `bench-waiver: <query>` line.
+# `bench-waiver: <query>` line. The contract JSON line must be the
+# bench's literal last stdout line.
 sbt -batch "runMain graft.Bench" | tee /tmp/graft_bench_out.txt
+tail -1 /tmp/graft_bench_out.txt | python3 -m json.tool > /dev/null
 python scripts/bench_diff.py /tmp/graft_bench_out.txt

@@ -13,21 +13,63 @@ import org.apache.spark.sql.SparkSession
   * uniformly). The bench now pre-flights the machine before the timed
   * region — alive sibling JVMs (any java process that is not this
   * process or an ancestor, e.g. the sbt launcher) and 1-minute loadavg —
-  * waits up to SPARK_GRAFT_LOAD_RETRIES (default 3) times
-  * SPARK_GRAFT_LOAD_WAIT (default 45s) for the box to go idle, and if
-  * it is still busy stamps `"load_poisoned": true` rather than silently
-  * publishing a noise number. Per-query breach retries additionally
-  * bracket the retry batch with the fixed-work CPU canary and stamp
-  * `retry_untrusted` when the machine would not certify (see the gate
-  * comment below — the r14 dedup_segment_clean failure mode). After the timed suite the sibling check
-  * runs AGAIN (a stray JVM that starts mid-suite — the exact r8/r9
-  * failure mode — must not yield a clean stamp; loadavg is not
-  * re-checked post-suite because our own just-finished queries dominate
-  * it). The observed loadavg and sibling counts (plus the sibling
-  * pids/commands on stderr) always ride in the JSON line, so a poisoned
-  * artifact is self-identifying.
+  * waits up to [[LoadRetries]] times [[LoadWaitSec]] for the box to go
+  * idle, and if it is still busy stamps `"load_poisoned": true` rather
+  * than silently publishing a noise number. Per-query breach retries
+  * additionally bracket the retry batch with the fixed-work CPU canary
+  * and stamp `retry_untrusted` when the machine would not certify (see
+  * the gate comment below — the r14 dedup_segment_clean failure mode).
+  * After the timed suite the sibling check runs AGAIN (a stray JVM that
+  * starts mid-suite — the exact r8/r9 failure mode — must not yield a
+  * clean stamp; loadavg is not re-checked post-suite because our own
+  * just-finished queries dominate it). The observed loadavg and sibling
+  * counts (plus the sibling pids/commands on stderr) always ride in the
+  * JSON line, so a poisoned artifact is self-identifying.
+  *
+  * Every hygiene threshold is a constant below; the environment picks
+  * only the data (SPARK_GRAFT_SF_DIR), the core count (SPARK_GRAFT_CPUS)
+  * and an explicit baseline artifact (SPARK_GRAFT_BENCH_BASELINE).
   */
 object Bench {
+
+  /** Pre-flight: 1-minute loadavg above which the box counts as busy. */
+  private val LoadMax = 2.0
+  /** Pre-flight and retry canary: at most [[LoadRetries]] waits of
+    * [[LoadWaitSec]] seconds for the box to go idle.
+    */
+  private val LoadRetries = 3
+  private val LoadWaitSec = 45
+  /** Thermal settle: re-measure the pre-canary while it reads above this
+    * multiple of the healthy anchor, at most [[SettleRetries]] waits of
+    * [[SettleWaitSec]] seconds.
+    */
+  private val SettleRatio = 1.2
+  private val SettleWaitSec = 60
+  private val SettleRetries = 6
+  /** Timed executions per query; the median is published. */
+  private val Runs = 3
+  /** A median above this multiple of the baseline re-runs the query. */
+  private val GateRatio = 1.5
+  /** A retry whose bracketing canary exceeds this multiple of the anchor
+    * is stamped `retry_untrusted`.
+    */
+  private val CanaryRatio = 1.3
+
+  /** The bench's data directory, core count and session (one shuffle
+    * partition per core, AQE on). Drill and Explain use the same three,
+    * so their stage tables and plans are the bench's.
+    */
+  private[graft] lazy val sfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  private[graft] lazy val cpus: Int =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+  private[graft] def session(): SparkSession = SparkSession.builder()
+    .master(s"local[$cpus]")
+    .config("spark.sql.shuffle.partitions", cpus.toString)
+    .config("spark.sql.adaptive.enabled", "true")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
 
   /** Pids of this process and its ancestor chain (sbt launcher, shell). */
   private def ancestorPids(): Set[Long] = {
@@ -140,36 +182,31 @@ object Bench {
   def main(args: Array[String]): Unit = {
     // Pre-flight BEFORE SparkSession init (our own JVM hasn't generated
     // load yet, so the reading reflects ambient machine state). Up to
-    // `retries` waits of `retryWaitSec` each — several short waits, not
+    // `LoadRetries` waits of `LoadWaitSec` each — several short waits, not
     // one: a 1-min loadavg decaying from a just-exited legitimate stage
     // (compile, verify) needs ~2 min to fall below the gate, while a
     // genuinely occupied box stays busy through all retries and gets
     // stamped, not hidden.
-    val loadMax = sys.env.getOrElse("SPARK_GRAFT_LOAD_MAX", "2.0").toDouble
-    val retryWaitSec = sys.env.getOrElse("SPARK_GRAFT_LOAD_WAIT", "45").toInt
-    val retries = sys.env.getOrElse("SPARK_GRAFT_LOAD_RETRIES", "3").toInt
-    def busy(): Boolean = siblingJvms().nonEmpty || loadAvg1() > loadMax
+    def busy(): Boolean = siblingJvms().nonEmpty || loadAvg1() > LoadMax
     var attempt = 0
-    while (busy() && attempt < retries) {
+    while (busy() && attempt < LoadRetries) {
       attempt += 1
       System.err.println(
         s"[bench] pre-flight: box busy (loadavg=${loadAvg1()}, " +
           s"siblings=${siblingJvms().map(_._1).mkString(",")}); " +
-          s"wait $attempt/$retries of ${retryWaitSec}s")
-      Thread.sleep(retryWaitSec * 1000L)
+          s"wait $attempt/$LoadRetries of ${LoadWaitSec}s")
+      Thread.sleep(LoadWaitSec * 1000L)
     }
     val loadavg = loadAvg1()
     val siblings = siblingJvms()
-    val poisoned = siblings.nonEmpty || loadavg > loadMax
+    val poisoned = siblings.nonEmpty || loadavg > LoadMax
     if (poisoned) {
       System.err.println(
         s"[bench] pre-flight FAILED after retry: loadavg=$loadavg " +
-          s"(max $loadMax), sibling JVMs: " +
+          s"(max $LoadMax), sibling JVMs: " +
           siblings.map { case (pid, c) => s"$pid:$c" }.mkString(" "))
     }
 
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Absolute canary anchor (r17): the RELATIVE pre/post canary can
     // only compare a run against ITSELF or another round — a whole
     // artifact produced on a uniformly slow machine carried no
@@ -194,28 +231,22 @@ object Bench {
     // just-finished compile/test/verify stages) and decays back on its
     // own — a run certified at that moment wastes a whole timed suite on
     // a transient. So when a healthy anchor exists and the first reading
-    // exceeds settleRatio x healthy, wait and re-measure (bounded) before
+    // exceeds SettleRatio x healthy, wait and re-measure (bounded) before
     // adopting cal_pre; a genuinely degraded box stays hot through every
     // wait and still gets stamped. The final machine_degraded stamp
     // additionally anchors on min(cal_pre, cal_post): a pre-canary
     // artifact that decayed mid-run self-identifies as thermal, while a
     // box slow at BOTH ends is genuinely degraded.
-    val settleRatio =
-      sys.env.getOrElse("SPARK_GRAFT_SETTLE_RATIO", "1.2").toDouble
-    val settleWaitSec =
-      sys.env.getOrElse("SPARK_GRAFT_SETTLE_WAIT", "60").toInt
-    val settleRetries =
-      sys.env.getOrElse("SPARK_GRAFT_SETTLE_RETRIES", "6").toInt
-    var calPre = cpuCalibrate(cpus.toInt)
+    var calPre = cpuCalibrate(cpus)
     var settles = 0
-    while (calHealthy.exists(h => h > 0 && calPre > h * settleRatio) &&
-      settles < settleRetries) {
+    while (calHealthy.exists(h => h > 0 && calPre > h * SettleRatio) &&
+      settles < SettleRetries) {
       settles += 1
       System.err.println(f"[bench] pre-canary $calPre%.3fs above " +
-        f"${settleRatio}x healthy ${calHealthy.getOrElse(0.0)}%.3fs - " +
-        f"thermal settle $settles/$settleRetries of ${settleWaitSec}s")
-      Thread.sleep(settleWaitSec * 1000L)
-      calPre = cpuCalibrate(cpus.toInt)
+        f"${SettleRatio}x healthy ${calHealthy.getOrElse(0.0)}%.3fs - " +
+        f"thermal settle $settles/$SettleRetries of ${SettleWaitSec}s")
+      Thread.sleep(SettleWaitSec * 1000L)
+      calPre = cpuCalibrate(cpus)
     }
     val machineDegradedPre =
       calHealthy.exists(h => h > 0 && calPre > h * degradedFactor)
@@ -232,13 +263,7 @@ object Bench {
     // min() so a missing/over-generous anchor never LOOSENS the gate.
     val calAnchor = calHealthy.filter(_ > 0)
       .map(math.min(_, calPre)).getOrElse(calPre)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = session()
     spark.sparkContext.setLogLevel("WARN")
 
     // warmup: trigger codegen + parquet reader init outside timed region
@@ -247,9 +272,8 @@ object Bench {
     val names =
       if (args.nonEmpty) args.toSeq else SparkEntry.benchNames
     // Per-query numbers swing ±0.3s run to run on local[32] (GC, JIT,
-    // scheduler); each query runs `runs` times and reports the MEDIAN, so
+    // scheduler); each query runs `Runs` times and reports the MEDIAN, so
     // round-over-round deltas reflect plan changes, not run variance.
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     // (name, seconds, succeeded, warmupFailed). A failed query reports -1
     // in the JSON and is EXCLUDED from the total so a fast failure can't
     // flatter the headline number the driver consumes.
@@ -321,18 +345,17 @@ object Bench {
     // landed exactly on that query's 3-run window and the MEDIAN of a
     // uniformly poisoned window is still poisoned. The pre/post sibling
     // checks can't catch sub-minute contention, so the gate moves
-    // per-query: when a median breaches gateRatio× the previous round's
+    // per-query: when a median breaches GateRatio× the previous round's
     // artifact (BENCH_r*.json in cwd), the query re-runs a second full
     // batch LATER in wall-clock and the BETTER median is published. A
     // genuine plan regression is slow in both batches and still reported
     // slow; a transient spike is not reproducible minutes later and gets
     // corrected. Retried queries are stamped in the JSON (`retried`) so
     // the artifact self-identifies which numbers needed a second look.
-    val gateRatio = sys.env.getOrElse("SPARK_GRAFT_GATE_RATIO", "1.5").toDouble
     val base = baselineTimes()
     if (base.nonEmpty)
       System.err.println(s"[bench] retry gate armed: ${base.size} baseline " +
-        s"queries, breach at ${gateRatio}x")
+        s"queries, breach at ${GateRatio}x")
     val results = names.flatMap { name =>
       SparkEntry.queries.get(name).map { fn =>
         // One untimed warmup execution per query: JIT compilation, codegen
@@ -350,7 +373,7 @@ object Bench {
             System.err.println(s"[bench] $name warmup failed: ${e.getMessage}")
             true }
         releaseAllBlocks()
-        def timedBatch(): Seq[Double] = (1 to runs).flatMap { _ =>
+        def timedBatch(): Seq[Double] = (1 to Runs).flatMap { _ =>
           val t0 = System.nanoTime()
           val t = try { fn(spark, sfDir).count()
             Some((System.nanoTime() - t0) / 1e9) }
@@ -361,14 +384,14 @@ object Bench {
           t
         }
         val times = timedBatch()
-        if (times.size < runs) (name, -1.0, false, warmupFailed, false, false)
+        if (times.size < Runs) (name, -1.0, false, warmupFailed, false, false)
         else {
-          val med = times.sorted.apply(runs / 2)
-          val breach = base.get(name).exists(b => b > 0 && med > b * gateRatio)
+          val med = times.sorted.apply(Runs / 2)
+          val breach = base.get(name).exists(b => b > 0 && med > b * GateRatio)
           if (!breach) (name, med, true, warmupFailed, false, false)
           else {
             System.err.println(f"[bench] $name median $med%.3fs breaches " +
-              f"${gateRatio}x baseline ${base(name)}%.3fs " +
+              f"${GateRatio}x baseline ${base(name)}%.3fs " +
               f"(loadavg=${loadAvg1()}%.2f) - re-measuring")
             // Per-query retry canary (r14 lesson): contention that spans
             // BOTH batch windows defeats a bare better-of-two retry — the
@@ -384,27 +407,25 @@ object Bench {
             // says "this number was re-measured on a machine the canary
             // would not certify" instead of silently passing it off as
             // reconciled.
-            val canaryMax =
-              sys.env.getOrElse("SPARK_GRAFT_CANARY_RATIO", "1.3").toDouble
             var waits = 0
-            var canaryNow = cpuCalibrate(cpus.toInt)
-            while (canaryNow > calAnchor * canaryMax && waits < retries) {
+            var canaryNow = cpuCalibrate(cpus)
+            while (canaryNow > calAnchor * CanaryRatio && waits < LoadRetries) {
               waits += 1
               System.err.println(f"[bench] $name retry canary degraded " +
                 f"($canaryNow%.3fs vs anchor $calAnchor%.3fs); " +
-                f"wait $waits/$retries of ${retryWaitSec}s")
-              Thread.sleep(retryWaitSec * 1000L)
-              canaryNow = cpuCalibrate(cpus.toInt)
+                f"wait $waits/$LoadRetries of ${LoadWaitSec}s")
+              Thread.sleep(LoadWaitSec * 1000L)
+              canaryNow = cpuCalibrate(cpus)
             }
             val t2 = timedBatch()
-            val canaryPost = cpuCalibrate(cpus.toInt)
-            val trusted = canaryNow <= calAnchor * canaryMax &&
-              canaryPost <= calAnchor * canaryMax
+            val canaryPost = cpuCalibrate(cpus)
+            val trusted = canaryNow <= calAnchor * CanaryRatio &&
+              canaryPost <= calAnchor * CanaryRatio
             if (!trusted)
               System.err.println(f"[bench] $name retry ran on a degraded " +
                 f"machine (canary $canaryNow%.3f/$canaryPost%.3fs vs " +
                 f"anchor $calAnchor%.3fs) - stamping retry_untrusted")
-            val med2 = if (t2.size < runs) med else t2.sorted.apply(runs / 2)
+            val med2 = if (t2.size < Runs) med else t2.sorted.apply(Runs / 2)
             (name, math.min(med, med2), true, warmupFailed, true, !trusted)
           }
         }
@@ -423,7 +444,7 @@ object Bench {
           siblingsPost.map { case (pid, c) => s"$pid:$c" }.mkString(" "))
     }
     val poisonedFinal = poisoned || siblingsPost.nonEmpty
-    val calPost = cpuCalibrate(cpus.toInt)
+    val calPost = cpuCalibrate(cpus)
     // min(pre, post): a pre-canary that was thermal decays by suite end
     // (post certifies the run); a genuinely slow box fails both.
     val machineDegraded = calHealthy.exists(h =>

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 import scala.collection.mutable
@@ -17,15 +16,8 @@ import scala.collection.mutable
   */
 object Drill {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sfDir = Bench.sfDir
+    val spark = Bench.session()
     spark.sparkContext.setLogLevel("WARN")
     spark.read.parquet(s"$sfDir/region.parquet").count()
 

@@ -1,23 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print formatted physical plans for selected queries (plan
   * hygiene audit — pushdown, broadcast, codegen spans).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    // Bench-matching session settings (r21): plans are judged against the
+    // The bench's data and session (r21): plans are judged against the
     // bench's session, so the explain session must plan with the same
     // core count / shuffle partitions or exchange shapes drift.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sfDir = Bench.sfDir
+    val spark = Bench.session()
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else Seq("q1_agg")
     names.foreach { name =>

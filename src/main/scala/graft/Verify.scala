@@ -43,7 +43,7 @@ object Verify {
             .parquet(s"$outDir/$name")
           catch { case e: Throwable =>
             System.err.println(s"[verify] $name failed: ${e.getMessage}")
-            if (sys.env.contains("GRAFT_VERIFY_TRACE")) e.printStackTrace()
+            e.printStackTrace()
           } finally {
             graft.core.Caches.release(sess): Unit
           }

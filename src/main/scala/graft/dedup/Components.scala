@@ -29,28 +29,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object Components {
 
-  /** Edges (aCol, bCol) → (id, component) with component = min node id
-    * reachable. Nodes are the ids present in edges; isolated docs are
-    * their own component and can be unioned in by the caller.
-    *
-    * Throws if `maxIter` rounds pass without a fixpoint — silently
-    * returning partially-propagated labels would split real clusters
-    * with no signal. Note `maxIter` INCLUDES the final zero-change
-    * confirmation round (the fixpoint is only known once a round
-    * changes nothing), so the label-improvement budget is maxIter-1
-    * rounds — with pointer jumping that still covers any graph of
-    * diameter up to ~2^(maxIter-1), so the throw only fires on a
-    * genuine bug.
-    */
-  /** Edge count above which the adjacency is rebuilt as a
-    * partitioning-preserving cache (see connectedComponents). Tunable
-    * for tests/benchmarks via -Dgraft.components.adjPartitionThreshold.
-    */
-  private def adjPartitionThreshold: Long =
-    sys.props.get("graft.components.adjPartitionThreshold")
-      .orElse(sys.env.get("GRAFT_ADJ_PARTITION_THRESHOLD"))
-      .map(_.toLong).getOrElse(1000000L)
-
   /** Adjacency-row count (2×edges after dedup) BELOW which the label
     * loop is replaced by a driver-side union-find over the collected
     * edge list (r22, the r21-deferred rung): a bench-scale graph
@@ -61,13 +39,8 @@ object Components {
     * 100 TB path) runs unchanged — StressBench's 20M-edge stage never
     * sees the driver path. The collect is bounded by construction:
     * threshold × 16 bytes ≤ ~32 MB against the 8g driver heap.
-    * Tunable via -Dgraft.components.driverUfThreshold (tests pin both
-    * paths against each other through it).
     */
-  private def driverUfThreshold: Long =
-    sys.props.get("graft.components.driverUfThreshold")
-      .orElse(sys.env.get("GRAFT_DRIVER_UF_THRESHOLD"))
-      .map(_.toLong).getOrElse(2000000L)
+  private val DriverUfThreshold = 2000000L
 
   /** Driver-side min-label union-find over a collected (src, dst)
     * adjacency — the exact fixpoint [[connectedComponents]]'s loop
@@ -112,9 +85,31 @@ object Components {
     out.result()
   }
 
+  /** Edges (aCol, bCol) → (id, component) with component = min node id
+    * reachable. Nodes are the ids present in edges; isolated docs are
+    * their own component and can be unioned in by the caller.
+    *
+    * Throws if `maxIter` rounds pass without a fixpoint — silently
+    * returning partially-propagated labels would split real clusters
+    * with no signal. Note `maxIter` INCLUDES the final zero-change
+    * confirmation round (the fixpoint is only known once a round
+    * changes nothing), so the label-improvement budget is maxIter-1
+    * rounds — with pointer jumping that still covers any graph of
+    * diameter up to ~2^(maxIter-1), so the throw only fires on a
+    * genuine bug.
+    */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 20,
-                          onRounds: Int => Unit = _ => ()): DataFrame = {
+                          onRounds: Int => Unit = _ => ()): DataFrame =
+    resolve(edges, aCol, bCol, maxIter, onRounds, DriverUfThreshold)
+
+  /** [[connectedComponents]] with the driver union-find cutoff as an
+    * argument: `driverUfBelow = 0` runs the label loop on any graph, which
+    * is how specs pin the loop against the union-find on small graphs.
+    */
+  private[graft] def resolve(edges: DataFrame, aCol: String, bCol: String,
+                             maxIter: Int, onRounds: Int => Unit,
+                             driverUfBelow: Long): DataFrame = {
 
     // The adjacency (both directions of every edge) is the loop's
     // biggest relation and every round joins it on dst. Materialize it
@@ -127,24 +122,6 @@ object Components {
         col(aCol).cast("long").as("dst")))
       .distinct(), StorageLevel.DISK_ONLY)
     val adjBase = adjPin.df
-    // Past ~1M edges the loop's dominant cost is re-shuffling + re-sorting
-    // the adjacency for EVERY round's sort-merge join (a checkpointed
-    // frame has UnknownPartitioning under AQE, so Catalyst must exchange
-    // it each time). Rebuild it as a hash-partitioned, per-partition-
-    // sorted CACHE: a cached plan keeps outputPartitioning/outputOrdering
-    // visible to consumers (AQE is disabled inside cached subplans by
-    // default — canChangeCachedPlanOutputPartitioning=false), so every
-    // round's adj⋈labels join reuses the layout — zero exchange and zero
-    // sort on the 2×|edges| side, per round. Measured at 22.5M edges /
-    // 10 rounds: 305s → 189s (and 2M edges: 15.2s → 10.6s). Below the
-    // threshold the extra build shuffle + columnar cache write costs more
-    // than the ~3 rounds of tiny exchanges it saves (~1.4× on the sf0.1
-    // bench graphs), so small graphs keep the plain checkpoint. The
-    // count is free — it streams the already-materialized checkpoint.
-    // The base checkpoint stays resident behind the cache for the loop's
-    // lifetime (it IS the cache's recompute source — localCheckpoint
-    // truncated the lineage above it): 2× the adjacency on disk, zero
-    // extra memory, freed together at the end.
     val nAdjRows = adjBase.count()
     // Small-graph rung (r22): the fixpoint of min-label propagation is
     // plain connected components, so below the threshold compute it
@@ -152,8 +129,8 @@ object Components {
     // of slim long pairs) instead of paying the loop's per-round
     // barrier stages. Identical output by definition of the fixpoint
     // (comp = min reachable id, the label loop's invariant);
-    // ComponentsSpec pins both paths against each other.
-    if (nAdjRows < driverUfThreshold) {
+    // DedupSimilaritySpec pins both paths against each other.
+    if (nAdjRows < driverUfBelow) {
       val spark = edges.sparkSession
       import spark.implicits._
       val labels = driverUnionFind(
@@ -165,26 +142,33 @@ object Components {
           math.max(1, spark.sparkContext.defaultParallelism / 4)))
         .toDF("id", "comp")
     }
-    val adj =
-      if (nAdjRows < adjPartitionThreshold) adjBase
-      else adjBase
-        .repartition(col("dst"))
-        .sortWithinPartitions(col("dst"))
-        .persist(StorageLevel.DISK_ONLY)
-    // Label checkpoints store SERIALIZED on large graphs: the default
-    // deserialized MEMORY_AND_DISK holds every label row as an object
-    // (~70B for a 2-long row vs ~20B serialized). With two round-frames
-    // resident plus join execution memory, deserialized labels put the
-    // 22.5M-node stress graph within GC-timing distance of an 8g heap —
-    // the same run would pass or OOM depending on ambient load.
-    // Serialized blocks are ~3× smaller and unroll incrementally. Below
-    // the same threshold that gates the adjacency cache, the per-round
-    // serialize/deserialize CPU outweighs the heap it saves (measured:
-    // unconditional SER cost dedup_provenance_clusters 3.5→5.0s at
-    // sf0.1), so small graphs keep the deserialized default.
-    val labelLevel =
-      if (nAdjRows < adjPartitionThreshold) StorageLevel.MEMORY_AND_DISK
-      else StorageLevel.MEMORY_AND_DISK_SER
+    // Past the cutoff the loop's dominant cost is re-shuffling +
+    // re-sorting the adjacency for EVERY round's sort-merge join (a
+    // checkpointed frame has UnknownPartitioning under AQE, so Catalyst
+    // must exchange it each time). Rebuild it as a hash-partitioned,
+    // per-partition-sorted CACHE: a cached plan keeps
+    // outputPartitioning/outputOrdering visible to consumers (AQE is
+    // disabled inside cached subplans by default —
+    // canChangeCachedPlanOutputPartitioning=false), so every round's
+    // adj⋈labels join reuses the layout — zero exchange and zero sort on
+    // the 2×|edges| side, per round. Measured at 22.5M edges / 10
+    // rounds: 305s → 189s (and 2M edges: 15.2s → 10.6s). The base
+    // checkpoint stays resident behind the cache for the loop's lifetime
+    // (it IS the cache's recompute source — localCheckpoint truncated the
+    // lineage above it): 2× the adjacency on disk, zero extra memory,
+    // freed together at the end.
+    val adj = adjBase
+      .repartition(col("dst"))
+      .sortWithinPartitions(col("dst"))
+      .persist(StorageLevel.DISK_ONLY)
+    // Label checkpoints store SERIALIZED: the deserialized MEMORY_AND_DISK
+    // default holds every label row as an object (~70B for a 2-long row
+    // vs ~20B serialized). With two round-frames resident plus join
+    // execution memory, deserialized labels put the 22.5M-node stress
+    // graph within GC-timing distance of an 8g heap — the same run would
+    // pass or OOM depending on ambient load. Serialized blocks are ~3×
+    // smaller and unroll incrementally.
+    val labelLevel = StorageLevel.MEMORY_AND_DISK_SER
     // Initial label = min(id, min neighbor): the first propagate round's
     // result from ONE groupBy over adj (both directions are present, so
     // every node is a src) — no join, and one fewer loop round. The loop
@@ -251,7 +235,7 @@ object Components {
     onRounds(i) // diagnostic: rounds INCLUDING the zero-change confirm
     // The adjacency served only the loop; the returned frame is a
     // projection of the LAST round's checkpoint (kept resident).
-    if (!(adj eq adjBase)) adj.unpersist(blocking = true)
+    adj.unpersist(blocking = true)
     adjPin.free(blocking = true)
     comp
   }

@@ -2,82 +2,62 @@ package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions.call_function
 
 /** Registration for graft's native expressions. */
 object GraftExpressions {
 
-  private val dotInfo = new ExpressionInfo(
-    classOf[DotProduct].getName, "graft_dot")
+  private type Builder = Seq[Expression] => Expression
 
-  private def dotBuilder(children: Seq[Expression]): Expression = {
-    require(children.size == 2, "graft_dot expects exactly 2 arguments")
-    DotProduct(children.head, children(1))
-  }
+  /** A registry entry whose builder checks the argument count. */
+  private def fn(name: String, cls: Class[_ <: Expression], arity: Int)(
+      make: Builder): (FunctionIdentifier, ExpressionInfo, Builder) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+      (children: Seq[Expression]) => {
+        require(children.size == arity,
+          s"$name expects exactly $arity arguments, got ${children.size}")
+        make(children)
+      })
 
-  private def cosineBuilder(children: Seq[Expression]): Expression = {
-    require(children.size == 2, "graft_cosine expects exactly 2 arguments")
-    CosineSimilarity(children.head, children(1))
-  }
+  /** Every graft SQL function: name, expression class, arity and
+    * constructor. [[register]] and [[GraftSparkExtensions]] both install
+    * exactly this table.
+    */
+  private[plans] val functions: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] = Seq(
+    fn("graft_dot", classOf[DotProduct], 2)(c => DotProduct(c(0), c(1))),
+    fn("graft_cosine", classOf[CosineSimilarity], 2)(
+      c => CosineSimilarity(c(0), c(1))),
+    fn("graft_l2sq", classOf[L2DistSq], 2)(c => L2DistSq(c(0), c(1))),
+    fn("graft_nearest_cell", classOf[NearestCell], 2)(
+      c => NearestCell(c(0), c(1))),
+    // (vec, cells, n)
+    fn("graft_nearest_cells", classOf[NearestCellsTopN], 3)(
+      c => NearestCellsTopN(c(0), c(1), c(2))),
+    fn("graft_md5_seed_hashes", classOf[Md5SeedHashes], 2)(
+      c => Md5SeedHashes(c(0), c(1))),
+    fn("graft_md5_prefix_long", classOf[Md5PrefixLong], 2)(
+      c => Md5PrefixLong(c(0), c(1))),
+    // (array_a, array_b, required)
+    fn("graft_sorted_overlap", classOf[SortedOverlap], 3)(
+      c => SortedOverlap(c(0), c(1), c(2))),
+    // Spark's OWN bloom machinery (the expressions behind the optimizer's
+    // InjectRuntimeFilter), surfaced as callable functions: the built-in
+    // rule only fires past multi-GB scan thresholds, so the explicit
+    // operator form (operators.Relational.bloomPreFilterJoin) uses these
+    // to apply the identical semi-join pruning deterministically at any
+    // scale.
+    // (xxhash64_value, est_items, num_bits)
+    fn("graft_bloom_agg", classOf[BloomFilterAggregate], 3)(
+      c => new BloomFilterAggregate(c(0), c(1), c(2))),
+    // (bloom_binary, xxhash64_value)
+    fn("graft_bloom_might_contain", classOf[BloomFilterMightContain], 2)(
+      c => BloomFilterMightContain(c(0), c(1))))
 
-  private def l2sqBuilder(children: Seq[Expression]): Expression = {
-    require(children.size == 2, "graft_l2sq expects exactly 2 arguments")
-    L2DistSq(children.head, children(1))
-  }
-
-  private def nearestCellBuilder(children: Seq[Expression]): Expression = {
-    require(children.size == 2,
-      "graft_nearest_cell expects exactly 2 arguments")
-    NearestCell(children.head, children(1))
-  }
-
-  private def nearestCellsBuilder(children: Seq[Expression]): Expression = {
-    require(children.size == 3,
-      "graft_nearest_cells expects (vec, cells, n)")
-    NearestCellsTopN(children(0), children(1), children(2))
-  }
-
-  private def md5SeedBuilder(children: Seq[Expression]): Expression = {
-    require(children.size == 2,
-      "graft_md5_seed_hashes expects exactly 2 arguments")
-    Md5SeedHashes(children.head, children(1))
-  }
-
-  private def md5PrefixBuilder(children: Seq[Expression]): Expression = {
-    require(children.size == 2,
-      "graft_md5_prefix_long expects exactly 2 arguments")
-    Md5PrefixLong(children.head, children(1))
-  }
-
-  private def sortedOverlapBuilder(children: Seq[Expression]): Expression = {
-    require(children.size == 3,
-      "graft_sorted_overlap expects (array_a, array_b, required)")
-    SortedOverlap(children(0), children(1), children(2))
-  }
-
-  // Spark's OWN bloom machinery (the expressions behind the optimizer's
-  // InjectRuntimeFilter), surfaced as callable functions: the built-in
-  // rule only fires past multi-GB scan thresholds, so the explicit
-  // operator form (operators.Relational.bloomPreFilterJoin) uses these
-  // to apply the identical semi-join pruning deterministically at any
-  // scale.
-  private def bloomAggBuilder(children: Seq[Expression]): Expression = {
-    require(children.size == 3,
-      "graft_bloom_agg expects (xxhash64_value, est_items, num_bits)")
-    new org.apache.spark.sql.catalyst.expressions.aggregate
-      .BloomFilterAggregate(children(0), children(1), children(2))
-  }
-
-  private def bloomMightContainBuilder(children: Seq[Expression]): Expression = {
-    require(children.size == 2,
-      "graft_bloom_might_contain expects (bloom_binary, xxhash64_value)")
-    org.apache.spark.sql.catalyst.expressions
-      .BloomFilterMightContain(children(0), children(1))
-  }
-
-  /** Session-scoped registration (idempotent). Call before first use when
-    * the session was not built with [[GraftSparkExtensions]].
+  /** Session-scoped registration (idempotent): installs every function
+    * the session does not have yet. Call before first use; on a session
+    * built with [[GraftSparkExtensions]] it finds them all present.
     */
   def register(spark: SparkSession): Unit = {
     // session-scoped optimizer injection (the extensions path injects the
@@ -86,30 +66,12 @@ object GraftExpressions {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ DotProductRewrite
     }
-    // skip when already registered: createOrReplaceTempFunction logs a
-    // replacement WARN per call, which floods driver logs when every
-    // query pack re-registers on the same session
+    // only missing names: re-registering logs a replacement WARN per
+    // call, which floods driver logs when every query pack re-registers
+    // on the same session
     val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier("graft_dot"))) {
-      registry.createOrReplaceTempFunction("graft_dot", dotBuilder, "built-in")
-      registry.createOrReplaceTempFunction(
-        "graft_cosine", cosineBuilder, "built-in")
-      registry.createOrReplaceTempFunction(
-        "graft_l2sq", l2sqBuilder, "built-in")
-      registry.createOrReplaceTempFunction(
-        "graft_nearest_cell", nearestCellBuilder, "built-in")
-      registry.createOrReplaceTempFunction(
-        "graft_nearest_cells", nearestCellsBuilder, "built-in")
-      registry.createOrReplaceTempFunction(
-        "graft_md5_seed_hashes", md5SeedBuilder, "built-in")
-      registry.createOrReplaceTempFunction(
-        "graft_md5_prefix_long", md5PrefixBuilder, "built-in")
-      registry.createOrReplaceTempFunction(
-        "graft_bloom_agg", bloomAggBuilder, "built-in")
-      registry.createOrReplaceTempFunction(
-        "graft_bloom_might_contain", bloomMightContainBuilder, "built-in")
-      registry.createOrReplaceTempFunction(
-        "graft_sorted_overlap", sortedOverlapBuilder, "built-in")
+    functions.foreach { case (id, info, builder) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
     }
   }
 
@@ -140,70 +102,6 @@ object GraftExpressions {
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => DotProductRewrite)
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_dot expects exactly 2 arguments")
-        DotProduct(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_cosine expects exactly 2 arguments")
-        CosineSimilarity(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_l2sq"),
-      new ExpressionInfo(classOf[L2DistSq].getName, "graft_l2sq"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_l2sq expects exactly 2 arguments")
-        L2DistSq(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nearest_cell"),
-      new ExpressionInfo(classOf[NearestCell].getName, "graft_nearest_cell"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "graft_nearest_cell expects exactly 2 arguments")
-        NearestCell(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_nearest_cells"),
-      new ExpressionInfo(classOf[NearestCellsTopN].getName,
-        "graft_nearest_cells"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "graft_nearest_cells expects (vec, cells, n)")
-        NearestCellsTopN(children(0), children(1), children(2))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_md5_seed_hashes"),
-      new ExpressionInfo(classOf[Md5SeedHashes].getName,
-        "graft_md5_seed_hashes"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "graft_md5_seed_hashes expects exactly 2 arguments")
-        Md5SeedHashes(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_md5_prefix_long"),
-      new ExpressionInfo(classOf[Md5PrefixLong].getName,
-        "graft_md5_prefix_long"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "graft_md5_prefix_long expects exactly 2 arguments")
-        Md5PrefixLong(children.head, children(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_sorted_overlap"),
-      new ExpressionInfo(classOf[SortedOverlap].getName,
-        "graft_sorted_overlap"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "graft_sorted_overlap expects (array_a, array_b, required)")
-        SortedOverlap(children(0), children(1), children(2))
-      }))
+    GraftExpressions.functions.foreach(ext.injectFunction)
   }
 }

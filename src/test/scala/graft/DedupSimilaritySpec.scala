@@ -525,18 +525,14 @@ class DedupSimilaritySpec extends AnyFunSuite {
         (51L to 60L).map(i => (100L, i)) ++ // star hub=100, min=51
         Seq((200L, 201L), (201L, 202L), (202L, 200L)) // cycle
     val edges = edgeSeq.toDF("id_a", "id_b")
-    def run(): Map[Long, Long] =
-      Components.connectedComponents(edges, "id_a", "id_b")
-        .as[(Long, Long)].collect().toMap
-    val viaDriver = run() // default threshold >> |edges|: driver path
-    val key = "graft.components.driverUfThreshold"
-    val prev = sys.props.put(key, "0") // force the distributed loop
-    val viaLoop =
-      try run()
-      finally prev match {
-        case Some(v) => sys.props.put(key, v): Unit
-        case None => sys.props.remove(key): Unit
-      }
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.as[(Long, Long)].collect().toMap
+    // default cutoff >> |edges|: driver path
+    val viaDriver = labels(Components.connectedComponents(edges, "id_a", "id_b"))
+    var rounds = -1
+    val viaLoop = labels(Components.resolve(edges, "id_a", "id_b",
+      maxIter = 20, onRounds = n => rounds = n, driverUfBelow = 0))
+    assert(rounds > 1) // the distributed label loop ran
     assert(viaDriver === viaLoop)
     assert((1L to 40L).forall(viaDriver(_) == 1L))
     assert(viaDriver(100L) == 51L && (51L to 60L).forall(viaDriver(_) == 51L))

@@ -486,15 +486,10 @@ class TextAnalysisSpec extends AnyFunSuite {
     "blocks") {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (7L, 8L))
       .toDF("a", "b")
-    val key = "graft.components.driverUfThreshold"
-    val prev = sys.props.put(key, "0") // force the distributed label loop
     val before = persistedIds
-    val comp =
-      try graft.dedup.Components.connectedComponents(edges, "a", "b")
-      finally prev match {
-        case Some(v) => sys.props.put(key, v): Unit
-        case None => sys.props.remove(key): Unit
-      }
+    // driverUfBelow = 0 forces the distributed label loop
+    val comp = graft.dedup.Components.resolve(edges, "a", "b",
+      maxIter = 20, onRounds = _ => (), driverUfBelow = 0)
     assert(persistedIds -- before === blockIds(comp))
     assert(comp.as[(Long, Long)].collect().toMap ===
       Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L, 7L -> 7L, 8L -> 7L))
