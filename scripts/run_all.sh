@@ -7,6 +7,9 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 
 sbt -batch compile
+# The benchmark harness compiles against this checkout's public modules:
+# a moved or deleted method it calls fails here, not at the next bench run.
+(cd perfbench && sbt -batch compile)
 
 # Smoke: the contract entry on sf0.001 must return rows.
 sbt -batch "runMain graft.Smoke" | tee /tmp/graft_smoke_out.txt
@@ -19,7 +22,8 @@ fi
 sbt -batch test
 
 # Task-retry determinism (salted aggregation, salted join, the
-# Graft.dedupCorpus pipeline): exits non-zero unless all three probes pass.
+# Components.dedupCorpus pipeline): exits non-zero unless all three probes
+# pass.
 sbt -batch "runMain graft.RetryProbe"
 
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/graft_runall_sf001"

@@ -56,8 +56,8 @@ object Bench {
   private val CanaryRatio = 1.3
 
   /** The bench's data directory, core count and session (one shuffle
-    * partition per core, AQE on). Drill and Explain use the same three,
-    * so their stage tables and plans are the bench's.
+    * partition per core, AQE on). Drill uses the same three, so its
+    * stage tables and plans are the bench's.
     */
   private[graft] lazy val sfDir: String =
     sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 import scala.collection.mutable
@@ -13,11 +14,38 @@ import scala.collection.mutable
   * shuffle read/write, input bytes, task-skew max/median) and the final
   * executed plan's operator metrics — where the guide's "measure first"
   * loop reads its numbers on a UI-less box.
+  *
+  * `--plan q1 q2 …` is the plan audit (pushdown, broadcast, codegen
+  * spans): it prints each query's formatted physical plan and executes
+  * nothing. Both modes plan on Bench's session, so exchange shapes and
+  * partition counts are the bench's.
   */
 object Drill {
   def main(args: Array[String]): Unit = {
     val sfDir = Bench.sfDir
     val spark = Bench.session()
+    val (plan, rest) = args.toSeq.partition(_ == "--plan")
+    val names = if (rest.nonEmpty) rest else Seq("q1_agg")
+    if (plan.nonEmpty) printPlans(spark, sfDir, names)
+    else profile(spark, sfDir, names)
+    spark.stop()
+  }
+
+  private def printPlans(spark: SparkSession, sfDir: String,
+                         names: Seq[String]): Unit = {
+    spark.sparkContext.setLogLevel("ERROR")
+    names.foreach { name =>
+      SparkEntry.queries.get(name) match {
+        case None => println(s"unknown query: $name")
+        case Some(fn) =>
+          println(s"\n===== $name =====")
+          fn(spark, sfDir).explain("formatted")
+      }
+    }
+  }
+
+  private def profile(spark: SparkSession, sfDir: String,
+                      names: Seq[String]): Unit = {
     spark.sparkContext.setLogLevel("WARN")
     spark.read.parquet(s"$sfDir/region.parquet").count()
 
@@ -78,7 +106,6 @@ object Drill {
       System.gc()
     }
 
-    val names = if (args.nonEmpty) args.toSeq else Seq("q1_agg")
     names.foreach { name =>
       SparkEntry.queries.get(name) match {
         case None => println(s"unknown query: $name")
@@ -144,6 +171,5 @@ object Drill {
           release()
       }
     }
-    spark.stop()
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicBoolean
 
+import graft.dedup.Components
 import graft.operators.Skew
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.SparkSession
@@ -93,11 +94,11 @@ object RetryProbe {
         textCol.as("text")).repartition(8)
     val textExpr = expr("concat_ws(' ', transform(sequence(1, 20), " +
       "i -> concat('t', pmod(hash(pmod(id, 1800), i), 500))))")
-    // The CANONICAL facade pipeline, not a re-implementation — if the
-    // corpus-dedup edge construction ever changes shape, the probe tests
-    // the new shape automatically.
+    // The CANONICAL corpus-dedup pipeline, not a re-implementation — if
+    // the corpus-dedup edge construction ever changes shape, the probe
+    // tests the new shape automatically.
     def clusters(docs: org.apache.spark.sql.DataFrame) =
-      Graft.dedupCorpus(docs, "doc_id", "text")
+      Components.dedupCorpus(docs, "doc_id", "text")
         .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getInt(2))))
         .toMap
     val cleanClusters = clusters(docsWith(textExpr))

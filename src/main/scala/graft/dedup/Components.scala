@@ -325,4 +325,66 @@ object Components {
       .select(col("id"), col("comp"), col("is_survivor"),
         col("cluster_size"), col("sources"))
   }
+
+  /** End-to-end corpus dedup: exact-duplicate edges ∪ banded-minhash
+    * near-dup edges → connected components → one canonical survivor per
+    * cluster. Returns (id, component, is_survivor) — filter
+    * `is_survivor = 1` for the deduplicated corpus.
+    */
+  def dedupCorpus(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val exact = Dedup.exactPairs(docs, idCol, textCol)
+    val sh = Dedup.shingles(docs, idCol, textCol)
+    val near = Dedup.minhashBandCandidates(
+      Dedup.minhashSignatures(sh, idCol), idCol)
+    dedupClusters(exact.union(near).distinct(), "id_a", "id_b")
+  }
+  /** Corpus dedup over the UNION of every near-dup detector — exact md5 ∪
+    * banded MinHash ∪ Manku-blocked SimHash ∪ embedding cosine — with
+    * per-cluster provenance: `sources` lists which detectors contributed
+    * edges to each cluster (exact is certain; cosine is a judgment call —
+    * downstream filtering needs to know). `emb` rows join the doc graph
+    * by id equality (embIdCol values must share idCol's domain).
+    * Cosine edges are SemDeDup cell-gated by `centersLong`/`centerCol`
+    * (see [[Dedup.embeddingNearDupCells]]) — no entry point here builds an
+    * all-pairs plan.
+    */
+  def dedupCorpusProvenance(docs: DataFrame, idCol: String, textCol: String,
+                            emb: DataFrame, embIdCol: String, arrCol: String,
+                            centersLong: DataFrame, centerCol: String,
+                            cosineThreshold: Double = 0.9): DataFrame = {
+    val exact = Dedup.exactPairs(docs, idCol, textCol)
+      .select(col("id_a"), col("id_b"), lit("exact").as("src"))
+    // Fused signature pass — minhash + simhash from ONE corpus scan,
+    // persisted so neither consumer re-reads the corpus: the cache is one
+    // row per doc (id + 8 longs + 1 long), ~tens of GB per 10^10 docs —
+    // cheap next to a second 100 TB scan. (Without persist Catalyst
+    // prunes the aggregate per branch and scans twice.)
+    val fused = Dedup.fusedSignatures(
+      Dedup.shingles(docs, idCol, textCol), idCol, bits = 60).persist()
+    val near = Dedup.minhashCandidatesFromSignatures(fused, idCol)
+      .select(col("id_a"), col("id_b"), lit("minhash").as("src"))
+    val sim = Dedup.simhashPairsFromSignatures(fused, idCol)
+      .select(col("id_a"), col("id_b"), lit("simhash").as("src"))
+    val cos = Dedup.embeddingNearDupCells(emb, embIdCol, arrCol,
+        centersLong, centerCol, cosineThreshold)
+      .select(col("id_a"), col("id_b"), lit("cosine").as("src"))
+    val clusters = provenanceClusters(
+      exact.unionByName(near).unionByName(sim).unionByName(cos))
+    // provenanceClusters eagerly localCheckpoints the edge set, so the
+    // fused cache has served its purpose — release it rather than letting
+    // repeated calls accumulate cached signature tables for the session's
+    // lifetime
+    fused.unpersist()
+    clusters
+  }
+  /** SemDeDup end to end: cell-gated cosine pairs → components over
+    * the full universe → one survivor per semantic cluster.
+    */
+  def semanticPrune(emb: DataFrame, idCol: String, arrCol: String,
+                    centersLong: DataFrame, centerCol: String,
+                    threshold: Double, nProbe: Int = 2): DataFrame =
+    dedupClustersAll(
+      Dedup.embeddingNearDupCells(emb, idCol, arrCol,
+        centersLong, centerCol, threshold, nProbe = nProbe),
+      "id_a", "id_b", emb.select(col(idCol)), idCol)
 }

@@ -1416,4 +1416,126 @@ object Dedup {
       .where(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("cos"), 4).as("cos"))
   }
+
+  // ---- end-to-end detector chains (corpus in, pairs or index out) ----
+
+  /** Exact-duplicate edges (id_a, id_b), id_a < id_b: docs with the same
+    * md5 of `textCol`. The exact edge source of every corpus-dedup graph.
+    */
+  def exactPairs(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val hashed = docs.select(col(idCol), md5(col(textCol)).as("_h"))
+    hashed.select(col(idCol).as("id_a"), col("_h"))
+      .join(hashed.select(col(idCol).as("id_b"), col("_h")), "_h")
+      .where(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"))
+  }
+
+  /** Near-duplicate pairs above a Jaccard threshold via the banded
+    * MinHash pipeline (candidates only — the 100 TB path end to end).
+    */
+  def minhashNearDuplicates(docs: DataFrame, idCol: String, textCol: String,
+                            threshold: Double): DataFrame = {
+    val sh = shingles(docs, idCol, textCol)
+    val sig = minhashSignatures(sh, idCol)
+    val cand = minhashBandCandidates(sig, idCol)
+    jaccardPairs(sh, idCol, threshold, candidates = Some(cand))
+  }
+  /** Two-stage fuzzy dedup, edit-distance flavor: banded-minhash
+    * candidates verified by exact Levenshtein ratio <= maxRatio
+    * (candidate-bounded, never corpus-quadratic).
+    */
+  def editVerifiedNearDuplicates(docs: DataFrame, idCol: String,
+                                 textCol: String,
+                                 maxRatio: Double = 0.3): DataFrame = {
+    val sig = minhashSignatures(shingles(docs, idCol, textCol), idCol)
+    val cand = minhashBandCandidates(sig, idCol)
+    editVerifyPairs(cand, docs, idCol, textCol)
+      .where(col("edit_ratio") <= maxRatio)
+  }
+
+  /** Exact-Levenshtein verdict columns for candidate pairs (id_a, id_b):
+    * attaches both texts and emits `edit_dist` + `edit_ratio`. The
+    * O(|a|·|b|) levenshtein is evaluated ONCE per pair — the ratio is
+    * derived from the `edit_dist` column in a second projection, and
+    * CollapseProject keeps a non-cheap alias referenced twice
+    * un-inlined, so this does not rely on codegen subexpression
+    * elimination. A both-empty pair is ratio 0.0 by definition
+    * (identical empties ARE duplicates — not a null to drop).
+    */
+  def editVerifyPairs(cand: DataFrame, docs: DataFrame, idCol: String,
+                      textCol: String): DataFrame =
+    cand
+      .join(docs.select(col(idCol).as("id_a"), col(textCol).as("_ta")),
+        "id_a")
+      .join(docs.select(col(idCol).as("id_b"), col(textCol).as("_tb")),
+        "id_b")
+      .select(col("id_a"), col("id_b"),
+        levenshtein(col("_ta"), col("_tb")).as("edit_dist"),
+        greatest(length(col("_ta")), length(col("_tb"))).as("_maxlen"))
+      .select(col("id_a"), col("id_b"), col("edit_dist"),
+        when(col("_maxlen") === 0, lit(0.0))
+          .otherwise(round(col("edit_dist").cast("double") / col("_maxlen"), 4))
+          .as("edit_ratio"))
+  /** SimHash near-duplicate pairs at scale: Manku multi-block candidate
+    * index over wide signatures, exact recall within `maxHamming`.
+    */
+  def simhashNearDuplicates(docs: DataFrame, idCol: String, textCol: String,
+                            maxHamming: Int = 3, bits: Int = 60): DataFrame = {
+    val sig = simhash(shingles(docs, idCol, textCol), idCol, bits)
+    simhashPairsBlocked(sig, idCol, maxHamming, bits)
+  }
+
+  // ---- fused "all detectors" signature surface ----
+  // Each single-detector method above scans the corpus once; running
+  // several detectors that way scans it once PER DETECTOR — the dominant
+  // cost at 100 TB. The fused family computes every signature in one
+  // shingle pass; persist (or localCheckpoint) the result and derive each
+  // detector's view from it without touching the corpus again.
+
+  /** One-scan signature table (idCol, `sig array<long>` minhash family,
+    * `simhash long`) — bit-identical to the separate
+    * [[Dedup.minhashSignatures]]/[[Dedup.simhash]] passes (spec-pinned).
+    * One row per doc: cheap to persist, tiny next to the corpus.
+    */
+  def corpusSignatures(docs: DataFrame, idCol: String, textCol: String,
+                       numHashes: Int = 8, bits: Int = 60): DataFrame =
+    fusedSignatures(shingles(docs, idCol, textCol), idCol, numHashes, bits)
+  /** Banded-minhash candidate pairs from a [[corpusSignatures]] frame. */
+  def minhashCandidatesFromSignatures(fused: DataFrame,
+                                      idCol: String): DataFrame =
+    minhashBandCandidates(
+      fused.select(col(idCol), posexplode(col("sig")).as(Seq("h", "minhash"))),
+      idCol)
+  /** Static (band, band_sig) index from a [[corpusSignatures]] frame —
+    * the [[nearDupAgainstIndex]] corpus side, derived without a fresh
+    * corpus scan.
+    */
+  def bandIndexFromSignatures(fused: DataFrame, idCol: String): DataFrame =
+    bandSignatures(
+        fused.select(col(idCol),
+          posexplode(col("sig")).as(Seq("h", "minhash"))), idCol)
+      .select(col("band"), col("band_sig")).distinct()
+  /** Manku-blocked simhash pairs from a [[corpusSignatures]] frame. */
+  def simhashPairsFromSignatures(fused: DataFrame, idCol: String,
+                                 maxHamming: Int = 3,
+                                 bits: Int = 60): DataFrame =
+    simhashPairsBlocked(fused.select(col(idCol), col("simhash")),
+      idCol, maxHamming, bits)
+  /** Static (band, band_sig) index over a corpus for the streaming
+    * near-dup gate; pair with [[nearDupAgainstIndex]].
+    */
+  def nearDupIndex(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    bandIndex(docs, idCol, textCol)
+      .select(col("band"), col("band_sig")).distinct()
+  /** The id-carrying (id, band, band_sig) minhash band index — the
+    * materialized artifact the incremental-ingest family (provenance
+    * pairs, merge maintenance) joins against.
+    */
+  def bandIndex(docs: DataFrame, idCol: String, textCol: String): DataFrame =
+    bandSignatures(
+      minhashSignatures(shingles(docs, idCol, textCol), idCol), idCol)
+  /** Subset-duplication pairs: |A∩B| / min(|A|,|B|) over shingles. */
+  def containmentNearDuplicates(docs: DataFrame, idCol: String,
+                                textCol: String, threshold: Double): DataFrame =
+    containmentPairs(shingles(docs, idCol, textCol), idCol, threshold)
 }

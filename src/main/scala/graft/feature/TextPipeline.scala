@@ -53,4 +53,24 @@ object TextPipeline {
 
   def fitTfidf(docs: DataFrame, vocabSize: Int = 1 << 18): PipelineModel =
     tfidfPipeline(vocabSize = vocabSize).fit(docs)
+
+  /** Global vocabulary with deterministic sort-based indices.
+    *
+    * ⚠ Scale note: `term_idx` comes from `row_number` over an
+    * UNPARTITIONED window — a single-partition global sort over the
+    * vocabulary. Fine for verification and vocabularies that fit one
+    * executor (vocab size ≪ corpus size, typically ≤ millions of terms),
+    * but for the 100 TB path use [[tfidfPipeline]] /
+    * [[hashingTfidfPipeline]] (ml `CountVectorizer`/`HashingTF`), whose
+    * hash-based indices need no global sort.
+    */
+  def countVectorizeFit(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    docs.select(col(idCol), explode(split(col(textCol), " ")).as("term"))
+      .groupBy(col("term"))
+      .agg(countDistinct(col(idCol)).as("df"), count(lit(1)).as("tf"))
+      .withColumn("term_idx",
+        (row_number().over(Window.orderBy(col("term"))) - 1).cast("long"))
+  }
 }

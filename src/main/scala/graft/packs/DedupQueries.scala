@@ -22,12 +22,8 @@ object DedupQueries extends QueryPack {
   // source shared by dedup_pipeline_clusters and dedup_clusters_total
   // (one definition, so the twins and their oracles cannot drift apart).
   private def pipelineEdges(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables(s, dir).documents
-    val hashed = docs.select(col("doc_id"), md5(col("text")).as("_h"))
-    val exactEdges = hashed.select(col("doc_id").as("id_a"), col("_h"))
-      .join(hashed.select(col("doc_id").as("id_b"), col("_h")), "_h")
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
+    val exactEdges = Dedup.exactPairs(Tables(s, dir).documents, "doc_id",
+      "text")
     val sig = Dedup.minhashSignatures(docShingles(s, dir), "doc_id",
       numHashes = 8)
     val near = Dedup.minhashBandCandidates(sig, "doc_id", rowsPerBand = 2)
@@ -194,7 +190,7 @@ object DedupQueries extends QueryPack {
       val sig = Dedup.minhashSignatures(docShingles(s, dir), "doc_id",
         numHashes = 8)
       val cand = Dedup.minhashBandCandidates(sig, "doc_id", rowsPerBand = 2)
-      graft.Graft.editVerifyPairs(cand, docs, "doc_id", "text")
+      Dedup.editVerifyPairs(cand, docs, "doc_id", "text")
         .withColumn("verified", col("edit_ratio") <= 0.3)
         .orderBy(col("id_a"), col("id_b"))
     }),
@@ -440,18 +436,14 @@ object DedupQueries extends QueryPack {
     // per-cluster provenance (which detectors fired). The full-corpus
     // answer to "is this a duplicate, and says who".
     "dedup_provenance_clusters" -> ((s, dir) => {
-      val docs = Tables(s, dir).documents
-      val hashed = docs.select(col("doc_id"), md5(col("text")).as("_h"))
-      val exact = hashed.select(col("doc_id").as("id_a"), col("_h"))
-        .join(hashed.select(col("doc_id").as("id_b"), col("_h")), "_h")
-        .where(col("id_a") < col("id_b"))
+      val exact = Dedup.exactPairs(Tables(s, dir).documents, "doc_id", "text")
         .select(col("id_a"), col("id_b"), lit("exact").as("src"))
       // Fused signature operator, UNPERSISTED here on purpose: Catalyst
       // prunes the fused aggregate per consumer (minhash branch keeps the
       // 8 mins, simhash branch the 60 votes), so this degrades into two
       // pruned parallel passes — measured fastest at bench scale (1.4s vs
       // 2.2s separate / 1.7s checkpointed). The deployment path that must
-      // not scan a 100 TB corpus twice is Graft.dedupCorpusProvenance,
+      // not scan a 100 TB corpus twice is Components.dedupCorpusProvenance,
       // which persists the fused output instead.
       val fused = Dedup.fusedSignatures(docShingles(s, dir), "doc_id",
         numHashes = 8, bits = 60)

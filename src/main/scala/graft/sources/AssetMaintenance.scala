@@ -90,7 +90,10 @@ object AssetMaintenance {
     // top-level partition directory.
     val perDir = scala.collection.mutable.Map.empty[String, Long]
     var before = 0L
-    val rootStr = root.toUri.getPath
+    // listed paths come back fully qualified: qualify the root the same
+    // way, or a relative / differently-qualified `path` never prefixes
+    // them and nothing is selected
+    val rootStr = fs.makeQualified(root).toUri.getPath
     val it0 = fs.listFiles(root, true)
     while (it0.hasNext) {
       val f = it0.next()
@@ -140,8 +143,9 @@ object AssetMaintenance {
     // a measurable driver gap locally and is minutes of round-trips on
     // an object store. Failure behavior is unchanged: every partition
     // still restores itself on its own failure, and the first failure
-    // is rethrown after the batch (no new partial states — the
-    // sequential loop also left prior swaps installed on failure).
+    // is rethrown after the batch with the others attached as suppressed
+    // (no new partial states — the sequential loop also left prior swaps
+    // installed on failure).
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(8, math.max(1, values.size)))
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -171,7 +175,11 @@ object AssetMaintenance {
         })
       }.foreach(_.get())
     } finally pool.shutdown()
-    if (!failures.isEmpty) throw failures.peek()
+    if (!failures.isEmpty) {
+      val first = failures.poll()
+      failures.forEach(first.addSuppressed(_))
+      throw first
+    }
     fs.delete(tmp, true)
     (before, dataFileCount(spark, path))
   }

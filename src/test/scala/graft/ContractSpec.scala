@@ -1,7 +1,11 @@
 package graft
 
+import graft.dedup.{Components, Dedup}
+import graft.feature.TextPipeline
 import graft.multimodal.Multimodal
 import graft.mlops.Composition
+import graft.operators.Sampling
+import graft.text.TextAnalysis
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -62,24 +66,24 @@ class ContractSpec extends AnyFunSuite {
   test("Graft facade composes an end-to-end pipeline") {
     val docs = Seq((0L, "a b c d e f"), (1L, "a b c d e f"), (2L, "x y z w q r"))
       .toDF("doc_id", "text")
-    val vocab = Graft.countVectorizeFit(docs, "doc_id", "text")
+    val vocab = TextPipeline.countVectorizeFit(docs, "doc_id", "text")
     assert(vocab.count() === 12)
-    val dups = Graft.minhashNearDuplicates(docs, "doc_id", "text", 0.9)
+    val dups = Dedup.minhashNearDuplicates(docs, "doc_id", "text", 0.9)
       .as[(Long, Long, Double)].collect()
     assert(dups.toSeq === Seq((0L, 1L, 1.0)))
-    assert(Graft.dedupExact(docs, "doc_id", "text").count() === 2)
-    val q = Graft.textQuality(docs, "doc_id", "text")
+    assert(Dedup.dropExactDuplicates(docs, "doc_id", "text").count() === 2)
+    val q = TextAnalysis.qualityFeatures(docs, "doc_id", "text")
     assert(q.columns.contains("is_quality") && q.count() === 3)
     // end-to-end corpus dedup: docs 0 and 1 cluster, 0 survives; doc 2
     // shares no edges so it is absent (isolated = trivially unique)
-    val clusters = Graft.dedupCorpus(docs, "doc_id", "text")
+    val clusters = Components.dedupCorpus(docs, "doc_id", "text")
       .as[(Long, Long, Int)].collect().toSet
     assert(clusters === Set((0L, 0L, 1), (1L, 0L, 0)))
     // round-6 facade surface: splits, quantization, media decode
-    val split = Graft.splitTrainValTest(docs, col("doc_id"))
+    val split = Sampling.assignSplit(docs, col("doc_id"), 800, 100)
     assert(split.columns.contains("split") && split.count() === 3)
     val media = graft.multimodal.Multimodal.encodeCorpus(docs)
-    assert(Graft.decodeMedia(media).count() === 3)
+    assert(Multimodal.decodeMedia(media).count() === 3)
   }
 
   test("validation gate fails fast with precise messages (D12)") {

@@ -74,23 +74,23 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val corpus = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val fused = graft.Graft.corpusSignatures(corpus, "doc_id", "text")
+    val fused = Dedup.corpusSignatures(corpus, "doc_id", "text")
       .localCheckpoint()
-    val candF = graft.Graft.minhashCandidatesFromSignatures(fused, "doc_id")
+    val candF = Dedup.minhashCandidatesFromSignatures(fused, "doc_id")
       .as[(Long, Long)].collect().toSet
     val candDirect = Dedup.minhashBandCandidates(
         Dedup.minhashSignatures(
           Dedup.shingles(corpus, "doc_id", "text"), "doc_id"), "doc_id")
       .as[(Long, Long)].collect().toSet
     assert(candF === candDirect)
-    val idxF = graft.Graft.bandIndexFromSignatures(fused, "doc_id")
+    val idxF = Dedup.bandIndexFromSignatures(fused, "doc_id")
       .as[(Int, String)].collect().toSet
-    val idxDirect = graft.Graft.nearDupIndex(corpus, "doc_id", "text")
+    val idxDirect = Dedup.nearDupIndex(corpus, "doc_id", "text")
       .as[(Int, String)].collect().toSet
     assert(idxF === idxDirect)
-    val simF = graft.Graft.simhashPairsFromSignatures(fused, "doc_id")
+    val simF = Dedup.simhashPairsFromSignatures(fused, "doc_id")
       .as[(Long, Long, Int)].collect().toSet
-    val simDirect = graft.Graft.simhashNearDuplicates(corpus, "doc_id", "text")
+    val simDirect = Dedup.simhashNearDuplicates(corpus, "doc_id", "text")
       .as[(Long, Long, Int)].collect().toSet
     assert(simF === simDirect)
   }
@@ -408,10 +408,10 @@ class DedupSimilaritySpec extends AnyFunSuite {
     ).toDF("vec_id", "embedding")
     val centers = Seq((0L, 1, 1.0), (0L, 2, 0.0), (1L, 1, 0.0), (1L, 2, 1.0))
       .toDF("cell", "dim", "c")
-    val gated = graft.Graft.cosineNearDuplicates(
+    val gated = Dedup.embeddingNearDupCells(
         emb, "vec_id", "embedding", centers, "cell", 0.99)
       .as[(Long, Long, Double)].collect()
-    val exact = graft.Graft.cosineNearDuplicatesExact(
+    val exact = Dedup.embeddingNearDup(
         emb, "vec_id", "embedding", 0.99)
       .as[(Long, Long, Double)].collect()
     assert(gated.toSeq === Seq((0L, 1L, 1.0)))
@@ -1291,6 +1291,28 @@ class DedupSimilaritySpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       Similarity.compactIvfIndex(spark, bare)
     }
+  }
+
+  test("compactPartitionedAsset compacts an asset named by a relative path") {
+    // relative to the JVM's working directory; the file listing returns
+    // fully qualified paths, which the asset root must still prefix
+    val base = java.nio.file.Paths.get("target")
+    java.nio.file.Files.createDirectories(base)
+    val rel = java.nio.file.Files.createTempDirectory(base, "graft_rel_asset")
+      .toString
+    assert(!new java.io.File(rel).isAbsolute)
+    try {
+      val rows = spark.range(64).select(col("id"), (col("id") % 4).as("p"))
+      rows.repartition(4).write.partitionBy("p").mode("overwrite").parquet(rel)
+      rows.repartition(4).write.partitionBy("p").mode("append").parquet(rel)
+      def ids() = spark.read.parquet(rel).as[(Long, Int)].collect().toSet
+      val idsBefore = ids()
+      val (b, a) = graft.sources.AssetMaintenance
+        .compactPartitionedAsset(spark, rel, "p")
+      assert(a < b, s"compaction must cut the file count: $b -> $a")
+      assert(a === 4, s"one file per partition expected: $a")
+      assert(ids() === idsBefore)
+    } finally org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(rel))
   }
 
   test("retrainIvfIndex: rebuilt asset holds the union, centroids " +

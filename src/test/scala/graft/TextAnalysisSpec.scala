@@ -451,7 +451,7 @@ class TextAnalysisSpec extends AnyFunSuite {
     val shared = Caches.pinShared(docs, StorageLevel.MEMORY_AND_DISK)
     assert(graft.core.Caches.trackedCount(spark) === before + 2)
     assert(blockIds(shared).subsetOf(persistedIds))
-    val (released, warns) = rddWarns(Graft.releaseCaches(spark))
+    val (released, warns) = rddWarns(Caches.release(spark))
     assert(released >= 2)
     assert(graft.core.Caches.trackedCount(spark) === 0)
     assert((blockIds(shared) & persistedIds).isEmpty)
