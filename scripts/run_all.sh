@@ -10,6 +10,10 @@ sbt -batch compile
 # The benchmark harness compiles against this checkout's public modules:
 # a moved or deleted method it calls fails here, not at the next bench run.
 (cd perfbench && sbt -batch compile)
+# The harness's own self-test: seeded inputs are reproducible and the
+# oracle CTE rewrite marks only shared CTEs. It reads perfbench/ and
+# writes only its scratch dir under .perfbench/.
+python3 perfbench/selftest.py
 
 # Smoke: the contract entry on sf0.001 must return rows.
 sbt -batch "runMain graft.Smoke" | tee /tmp/graft_smoke_out.txt

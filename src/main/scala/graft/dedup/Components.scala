@@ -37,52 +37,55 @@ object Components {
     * where the same fixpoint is microseconds of driver CPU on a
     * ≤32 MB collect. Above the threshold the checkpointed loop (the
     * 100 TB path) runs unchanged — StressBench's 20M-edge stage never
-    * sees the driver path. The collect is bounded by construction:
-    * threshold × 16 bytes ≤ ~32 MB against the 8g driver heap.
+    * sees the driver path. The collect is bounded by construction: two
+    * primitive `long[]` per partition, threshold × 16 bytes ≤ ~32 MB
+    * against the 8g driver heap; the forest adds a sorted `long[]` of
+    * node ids and an `int[]` of parents, ≤ 12 bytes per row.
     */
   private val DriverUfThreshold = 2000000L
 
   /** Driver-side min-label union-find over a collected (src, dst)
-    * adjacency — the exact fixpoint [[connectedComponents]]'s loop
-    * reaches: comp(id) = min node id reachable from id. Path-halving
-    * find + union by min root keeps the forest shallow; the final pass
-    * maps every node to its root's minimum member, which IS the root
-    * (roots are always the minimum of their tree by the union rule).
+    * adjacency, one pair of primitive arrays per partition — the exact
+    * fixpoint [[connectedComponents]]'s loop reaches: comp(id) = min node
+    * id reachable from id. Nodes are indexed by their rank in the sorted
+    * id array, so a lower index is a lower id: union by min root keeps
+    * every root its tree's minimum, and path halving keeps the forest
+    * shallow. Returns (ids, comps), ids ascending.
     */
-  private def driverUnionFind(adj: Array[(Long, Long)]): Array[(Long, Long)] = {
-    val parent = new java.util.HashMap[Long, Long](adj.length * 2)
-    def find(x0: Long): Long = {
+  private def driverUnionFind(
+      adj: Array[(Array[Long], Array[Long])]): (Array[Long], Array[Long]) = {
+    // the adjacency carries both directions of every edge, so every node
+    // is a src: the node set is the distinct srcs
+    val ids = Array.concat(adj.map(_._1).toSeq: _*)
+    java.util.Arrays.sort(ids)
+    var n = 0
+    var i = 0
+    while (i < ids.length) {
+      if (n == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
+      i += 1
+    }
+    val parent = Array.tabulate(n)(identity)
+    def find(x0: Int): Int = {
       var x = x0
-      var p = parent.getOrDefault(x, x)
-      while (p != x) { // path halving
-        val gp = parent.getOrDefault(p, p)
-        parent.put(x, gp)
-        x = gp
-        p = parent.getOrDefault(x, x)
+      while (parent(x) != x) { // path halving
+        parent(x) = parent(parent(x))
+        x = parent(x)
       }
       x
     }
-    var i = 0
-    while (i < adj.length) {
-      val (a, b) = adj(i)
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) { // min id becomes the root → root = min of its tree
-        if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, 0, n, id)
+    adj.foreach { case (src, dst) =>
+      i = 0
+      while (i < src.length) {
+        val ra = find(index(src(i))); val rb = find(index(dst(i)))
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+        i += 1
       }
-      i += 1
     }
-    // node set = every endpoint (adjacency carries both directions, so
-    // every node appears as src; dst included for safety at zero cost)
-    val seen = new java.util.HashSet[Long](adj.length * 2)
-    val out = Array.newBuilder[(Long, Long)]
+    val comps = new Array[Long](n)
     i = 0
-    while (i < adj.length) {
-      val (a, b) = adj(i)
-      if (seen.add(a)) out += ((a, find(a)))
-      if (seen.add(b)) out += ((b, find(b)))
-      i += 1
-    }
-    out.result()
+    while (i < n) { comps(i) = ids(find(i)); i += 1 }
+    (java.util.Arrays.copyOf(ids, n), comps)
   }
 
   /** Edges (aCol, bCol) → (id, component) with component = min node id
@@ -133,13 +136,20 @@ object Components {
     if (nAdjRows < driverUfBelow) {
       val spark = edges.sparkSession
       import spark.implicits._
-      val labels = driverUnionFind(
-        adjBase.select(col("src"), col("dst")).as[(Long, Long)].collect())
+      val (ids, comps) = driverUnionFind(
+        adjBase.select(col("src"), col("dst")).rdd.mapPartitions { it =>
+          val src = Array.newBuilder[Long]; val dst = Array.newBuilder[Long]
+          it.foreach { r => src += r.getLong(0); dst += r.getLong(1) }
+          Iterator.single((src.result(), dst.result()))
+        }.collect())
       adjPin.free(blocking = true)
       onRounds(0) // no distributed rounds ran
-      return spark.createDataset(
-        spark.sparkContext.parallelize(labels.toIndexedSeq,
-          math.max(1, spark.sparkContext.defaultParallelism / 4)))
+      // ship the labels as primitive slices; tuples exist only in tasks
+      val slices = math.max(1, spark.sparkContext.defaultParallelism / 4)
+      val chunk = math.max(1, (ids.length + slices - 1) / slices)
+      return spark.sparkContext
+        .parallelize(ids.grouped(chunk).zip(comps.grouped(chunk)).toSeq, slices)
+        .flatMap { case (is, cs) => is.iterator.zip(cs.iterator) }
         .toDF("id", "comp")
     }
     // Past the cutoff the loop's dominant cost is re-shuffling +

@@ -9,6 +9,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Clustering + decomposition (SURVEY §2.6).
   *
@@ -94,34 +96,108 @@ object ClusterOps {
     */
   /** Deterministic Lloyd's algorithm, `iters` fixed rounds: centers seeded
     * from the k lowest-id points (no RNG), each round re-assigns every
-    * point to its nearest center (ties broken by center id) and recomputes
-    * centers as coordinate means. Fixed iteration count + deterministic
-    * seeding makes the whole fit SQL-mirrorable — the oracled counterpart
-    * of the RNG-seeded `fitKMeans` (ml k-means‖). Empty clusters drop out
-    * (inner join), matching the SQL twin. Each round is one broadcast
-    * join + two aggregations — linear scans, no driver-side state.
+    * point to its nearest center and recomputes centers as coordinate
+    * means. Fixed iteration count + deterministic seeding makes the whole
+    * fit SQL-mirrorable — the oracled counterpart of the RNG-seeded
+    * `fitKMeans` (ml k-means‖).
+    *
+    * The input is read once: [[PointPack]] packs it one row per id,
+    * persisted for the fit. A round is one pass over the pack: the argmin
+    * runs in-task against the broadcast centers, and per-task
+    * (cid, dim) → (Σ v, n) partials merge on the driver into the next
+    * centers. Driver state is the k×dims centers. A point's distance to a
+    * center is Σ(v − c)² over the dims both carry; a center sharing no dim
+    * with a point is not its candidate, a point with no candidate is not
+    * assigned, ties go to the lowest cid, and empty clusters drop out
+    * (the SQL twin's inner-join semantics).
+    *
+    * Returns (cid, dim, c) with `dim` typed as the input's.
     */
   def lloydIterations(pointsLong: DataFrame, idCol: String, k: Int,
                       iters: Int): DataFrame = {
-    // Seed = the k lowest ids by RANK, not by value (`id < k` only works
-    // for dense 0-based ids; sparse/offset ids would silently seed fewer
-    // than k centers). orderBy+limit plans as TakeOrderedAndProject —
-    // O(n) scan, O(k) result, no global sort. cid = rank-1, which equals
-    // the id itself on dense 0-based ids (what the SQL oracle pins).
-    val seedIds = pointsLong.select(col(idCol)).distinct()
-      .orderBy(col(idCol)).limit(k)
-      .withColumn("cid",
-        (row_number().over(Window.orderBy(col(idCol))) - 1).cast("int"))
-    var centers = pointsLong.join(broadcast(seedIds), idCol)
-      .select(col("cid"), col("dim"), col("v").as("c"))
-    (1 to iters).foreach { _ =>
-      val assign = assignToCenters(pointsLong, centers, idCol, "cid")
-        .select(col(idCol), col("cid"))
-      centers = pointsLong.join(assign, idCol)
-        .groupBy(col("cid"), col("dim"))
-        .agg(avg(col("v")).as("c"))
+    val spark = pointsLong.sparkSession
+    val centers = PointPack.fit(PointPack.pack(pointsLong, Seq(idCol))) { p =>
+      // seed = the k lowest ids by RANK, not by value (`id < k` only works
+      // for dense 0-based ids); cid = rank-1, which equals the id itself
+      // on dense 0-based ids (what the SQL oracle pins). orderBy+limit
+      // plans as TakeOrderedAndProject: O(n) scan, O(k) result.
+      val seeds = p.orderBy(col(idCol)).limit(k).collect().toSeq
+        .zipWithIndex.map { case (r, cid) =>
+          Center(cid, PointPack.dims(r, 1), PointPack.vs(r, 2))
+        }
+      (1 to iters).foldLeft(seeds)((cs, _) => lloydRound(p, cs))
     }
-    centers
+    val rows = for (c <- centers; i <- c.dims.indices)
+      yield Row(c.cid, c.dims(i), c.cs(i))
+    // zero rounds return the seeds' own coordinates, typed as the input
+    val cType = if (iters == 0) pointsLong.schema("v").dataType else DoubleType
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+        StructField("cid", IntegerType, nullable = false),
+        StructField("dim", LongType),
+        StructField("c", DoubleType))))
+      .select(col("cid"),
+        col("dim").cast(pointsLong.schema("dim").dataType).as("dim"),
+        col("c").cast(cType).as("c"))
+  }
+
+  /** A k-means center: coordinates `cs` at `dims`. */
+  private final case class Center(cid: Int, dims: Array[Long],
+                                  cs: Array[Double])
+
+  /** One Lloyd round over the pack (id, dims, vs). */
+  private def lloydRound(packed: DataFrame,
+                         centers: Seq[Center]): Seq[Center] = {
+    // dim → the centers carrying it, cid ascending
+    val byDim = mutable.LongMap.empty[(Array[Int], Array[Double])]
+    centers.flatMap(c => c.dims.indices.map(i => (c.dims(i), c.cid, c.cs(i))))
+      .groupBy(_._1).foreach { case (d, xs) =>
+        val s = xs.sortBy(_._2)
+        byDim(d) = (s.map(_._2).toArray, s.map(_._3).toArray)
+      }
+    val nCid = (centers.map(_.cid) :+ -1).max + 1
+    val bc = packed.sparkSession.sparkContext.broadcast(byDim)
+    val sums = try packed.rdd.treeAggregate(
+        mutable.HashMap.empty[(Int, Long), Array[Double]])(
+      (acc, r) => {
+        val ds = PointPack.dims(r, 1); val vs = PointPack.vs(r, 2)
+        val index = bc.value
+        val dist = new Array[Double](nCid)
+        val shared = new Array[Boolean](nCid)
+        var i = 0
+        while (i < ds.length) {
+          index.get(ds(i)).foreach { case (cids, cs) =>
+            var j = 0
+            while (j < cids.length) {
+              // StrictMath.pow, as Spark's `pow`
+              dist(cids(j)) += StrictMath.pow(vs(i) - cs(j), 2)
+              shared(cids(j)) = true; j += 1
+            }
+          }
+          i += 1
+        }
+        // Double.compare orders NaN last, as SQL's min does
+        var best = -1; var c = 0
+        while (c < nCid) {
+          if (shared(c) &&
+              (best < 0 || java.lang.Double.compare(dist(c), dist(best)) < 0))
+            best = c
+          c += 1
+        }
+        if (best >= 0) {
+          i = 0
+          while (i < ds.length) {
+            val s = acc.getOrElseUpdate((best, ds(i)), new Array[Double](2))
+            s(0) += vs(i); s(1) += 1; i += 1
+          }
+        }
+        acc
+      },
+      PointPack.mergeSums)
+      finally bc.destroy()
+    sums.toSeq.groupBy(_._1._1).toSeq.sortBy(_._1).map { case (cid, xs) =>
+      val s = xs.sortBy(_._1._2)
+      Center(cid, s.map(_._1._2).toArray, s.map(x => x._2(0) / x._2(1)).toArray)
+    }
   }
 
   def fitKMeans(df: DataFrame, arrCol: String, k: Int, seed: Long = 42L): DataFrame = {

@@ -3,8 +3,11 @@ package graft.mlops
 import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.ml.regression.LinearRegression
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Linear models (SURVEY §2.4).
   *
@@ -106,46 +109,83 @@ object LinearOps {
     * LOGISTIC fit (`splearn/linear_model/logistic.py:~L10-60`:
     * per-block `fit` then `__add__` = parameter average). Each block
     * runs the same deterministic zero-init full-batch GD as
-    * [[logisticGdIterations]] — all blocks SIMULTANEOUSLY, the block id
-    * carried through the weight frame, so the whole per-block family is
-    * still two aggregations per step over one long-form relation (never
-    * a driver loop over blocks) — then coefficients average unweighted
-    * across blocks, exactly the reference's one-shot merge algebra
-    * (including its bias on heterogeneous blocks — the global
+    * [[logisticGdIterations]], all blocks at once, then coefficients
+    * average unweighted across blocks: the reference's one-shot merge
+    * algebra, including its bias on heterogeneous blocks (the global
     * [[fitLogistic]] stays the strictly-stronger path, as with
     * [[blockAveragedOlsFit]]).
     *
-    * Returns (dim, w_avg, n_blocks). Fully SQL-oracle-able: fixed
-    * iterations, no RNG, no intercept.
+    * The input is read once: [[PointPack]] packs it one row per
+    * (block, id) with the label joined in, persisted for the fit. A round
+    * is one pass over the pack: each point's margin is computed in-row
+    * against the broadcast (block, dim) → w map, and per-task
+    * (block, dim) → (Σ err·v, n) partials merge on the driver, where
+    * w' = w − lr·Σ/n. Driver state is the blocks×dims weights. A
+    * (block, dim) that no labelled point carries keeps w = 0 only while
+    * `iters` is 0; a round drops it, as the gradient's inner join did.
+    *
+    * Returns (dim, w_avg, n_blocks), `dim` typed as the input's. Fully
+    * SQL-oracle-able: fixed iterations, no RNG, no intercept.
     */
   def blockAveragedLogisticGd(pointsLong: DataFrame, labels: DataFrame,
                               idCol: String, blockCol: String,
                               labelCol: String, iters: Int,
                               lr: Double): DataFrame = {
-    var w = pointsLong.select(col(blockCol), col("dim")).distinct()
-      .withColumn("w", lit(0.0))
-    (1 to iters).foreach { _ =>
-      val margins = pointsLong
-        .join(broadcast(w), Seq(blockCol, "dim"))
-        .groupBy(col(blockCol), col(idCol))
-        .agg(sum(col("v") * col("w")).as("m"))
-      val errs = margins.join(labels, idCol)
-        .select(col(blockCol), col(idCol),
-          (lit(1.0) / (lit(1.0) + exp(-col("m"))) - col(labelCol)).as("err"))
-      val grad = pointsLong.join(errs, Seq(blockCol, idCol))
-        .groupBy(col(blockCol), col("dim"))
-        .agg(avg(col("err") * col("v")).as("g"))
-      w = w.join(grad, Seq(blockCol, "dim"))
-        .select(col(blockCol), col("dim"),
-          (col("w") - lit(lr) * col("g")).as("w"))
-      // same per-step materialization as logisticGdIterations (analyzer
-      // blowup AND 2^i broadcast re-execution) — the frame is
-      // blocks×dims rows, metadata-scale
-      w = w.localCheckpoint()
+    val spark = pointsLong.sparkSession
+    val packed = PointPack.pack(pointsLong, Seq(blockCol, idCol))
+      .join(labels.select(col(idCol), col(labelCol).cast("double").as("_y")),
+        Seq(idCol), "left")
+      .select(col(blockCol), col("_y"), col("dims"), col("vs"))
+    val w = PointPack.fit(packed) { p =>
+      if (iters == 0)
+        p.select(col(blockCol), explode(col("dims"))).distinct().collect()
+          .map(r => (r.get(0), r.getLong(1)) -> 0.0).toMap
+      else (1 to iters).foldLeft(Map.empty[(Any, Long), Double]) {
+        (w, _) => gdRound(p, w, lr)
+      }
     }
-    w.groupBy(col("dim"))
+    val rows = w.iterator.map { case ((_, d), x) => Row(d, x) }.toSeq
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+        StructField("dim", LongType), StructField("w", DoubleType))))
+      .select(col("dim").cast(pointsLong.schema("dim").dataType).as("dim"),
+        col("w"))
+      .groupBy(col("dim"))
       .agg((round(avg(col("w")), 6) + lit(0.0)).as("w_avg"),
         count(lit(1)).as("n_blocks"))
+  }
+
+  /** One block-averaged GD round over the pack (block, y, dims, vs):
+    * err = σ(m) − y per labelled point (StrictMath.exp, as Spark's `exp`),
+    * merged to (block, dim) → (Σ err·v, n), then w' = w − lr·Σ/n.
+    */
+  private def gdRound(packed: DataFrame, w: Map[(Any, Long), Double],
+                      lr: Double): Map[(Any, Long), Double] = {
+    val bw = packed.sparkSession.sparkContext.broadcast(w)
+    val grad = try packed.rdd.treeAggregate(
+        mutable.HashMap.empty[(Any, Long), Array[Double]])(
+      (acc, r) => {
+        if (!r.isNullAt(1)) {
+          val b = r.get(0); val y = r.getDouble(1)
+          val ds = PointPack.dims(r, 2); val vs = PointPack.vs(r, 3)
+          val wb = bw.value
+          var m = 0.0; var i = 0
+          while (i < ds.length) {
+            m += vs(i) * wb.getOrElse((b, ds(i)), 0.0); i += 1
+          }
+          val err = 1.0 / (1.0 + StrictMath.exp(-m)) - y
+          i = 0
+          while (i < ds.length) {
+            val s = acc.getOrElseUpdate((b, ds(i)), new Array[Double](2))
+            s(0) += err * vs(i); s(1) += 1; i += 1
+          }
+        }
+        acc
+      },
+      PointPack.mergeSums)
+      finally bw.destroy()
+    grad.iterator.map { case (k, s) =>
+      k -> (w.getOrElse(k, 0.0) - lr * (s(0) / s(1)))
+    }.toMap
   }
 
   /** spark.ml logistic regression over an Array[Float] embedding column. */

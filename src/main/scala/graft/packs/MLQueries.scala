@@ -321,9 +321,9 @@ object MLQueries extends QueryPack {
 
     // L1 classification: the reference's block-averaged logistic —
     // per-block deterministic 2-step GD (md5-assigned 2 blocks, all
-    // blocks fit in one plan) then unweighted coefficient average, the
-    // splearn __add__ merge algebra. The oracle unrolls both GD steps
-    // per block and averages.
+    // blocks fit in one pass per step) then unweighted coefficient
+    // average, the splearn __add__ merge algebra. The oracle unrolls both
+    // GD steps per block and averages.
     "l1_block_averaged_logistic" -> ((s, dir) => {
       val emb = Tables(s, dir).embeddings
         .withColumn("blk", pmod(graft.functions.GraftFunctions

@@ -76,9 +76,13 @@ class PlanSpec extends AnyFunSuite {
     val comp = plan("dedup_pipeline_clusters")
     assert(!comp.contains("CartesianProduct") &&
       !comp.contains("BroadcastNestedLoopJoin"), comp.take(600))
-    // iterative fits join O(dims) model state via broadcast
+    // Lloyd's rounds run at fit time over a packed input, with the
+    // O(k×dims) centers broadcast to each round's one pass: the returned
+    // plan is the driver-built centers, with no join and no input scan
     val lloyd = plan("c2_kmeans_lloyd")
-    assert(lloyd.contains("BroadcastHashJoin"), lloyd.take(600))
+    assert(lloyd.contains("LocalTableScan") && !lloyd.contains("Join") &&
+      !lloyd.contains("CartesianProduct") && !lloyd.contains("FileScan"),
+      lloyd.take(600))
     // GD weight frames materialize per step (the r16 2^i-reference fix),
     // so l4's RETURNED plan is a checkpoint scan — the broadcast
     // property lives in the STEP plan; pin it there, plus the final
