@@ -99,7 +99,7 @@ def latest_baseline():
     favor of the most recent clean one.
     """
     # Baselines: the driver's BENCH_r{N}.json artifacts PLUS committed
-    # BENCH_LOCAL_r{N}.json twins (a copy of Bench's BENCH_LAST.json,
+    # BENCH_LOCAL_r{N}.json twins (a copy of Bench's BENCH_LAST_c32.json,
     # checked in at round close). The driver artifact wraps Bench's
     # stdout tail, and a tail window narrower than the (50+-query) JSON
     # line truncates it mid-stream (BENCH_r19): without the local twin,

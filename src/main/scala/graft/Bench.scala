@@ -461,7 +461,7 @@ object Bench {
     val retryUntrusted = results.collect { case (k, _, _, _, _, true) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     val total = results.collect { case (_, v, true, _, _, _) => v }.sum
-    // Hygiene/diagnostic fields ride only in BENCH_LAST.json (below):
+    // Hygiene/diagnostic fields ride only in BENCH_LAST_c<cpus>.json (below):
     // the driver wraps a bounded TAIL of stdout into BENCH_r{N}.json,
     // and by r20/r21 the full line (56 queries + hygiene) had outgrown
     // that window — the line's FRONT was cut mid-stream and the driver
@@ -476,12 +476,14 @@ object Bench {
     val fullLine =
       s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","queries":$qs,"failed":$failed,"sf":"$sfDir"$hygiene}"""
     // Self-contained artifact twin: the FULL line (hygiene included) is
-    // written to BENCH_LAST.json in cwd so every number survives
-    // regardless of how wide the driver's capture window is.
-    try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LAST.json"),
+    // written to BENCH_LAST_c<cpus>.json in cwd so every number survives
+    // regardless of how wide the driver's capture window is. One file
+    // per core count: a c8 run does not overwrite the c32 twin.
+    val twin = s"BENCH_LAST_c$cpus.json"
+    try java.nio.file.Files.write(java.nio.file.Paths.get(twin),
       (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[bench] could not write BENCH_LAST.json: $e") }
+      System.err.println(s"[bench] could not write $twin: $e") }
     // stop() BEFORE the println so the contract line is the program's
     // last stdout, where a bounded tail capture finds it; `finally`
     // prints it even when stop() throws.

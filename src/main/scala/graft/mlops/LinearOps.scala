@@ -116,13 +116,8 @@ object LinearOps {
     * [[blockAveragedOlsFit]]).
     *
     * The input is read once: [[PointPack]] packs it one row per
-    * (block, id) with the label joined in, persisted for the fit. A round
-    * is one pass over the pack: each point's margin is computed in-row
-    * against the broadcast (block, dim) → w map, and per-task
-    * (block, dim) → (Σ err·v, n) partials merge on the driver, where
-    * w' = w − lr·Σ/n. Driver state is the blocks×dims weights. A
-    * (block, dim) that no labelled point carries keeps w = 0 only while
-    * `iters` is 0; a round drops it, as the gradient's inner join did.
+    * (block, id) with the label joined in, and [[gdFit]] runs the rounds
+    * keyed by block. Driver state is the blocks×dims weights.
     *
     * Returns (dim, w_avg, n_blocks), `dim` typed as the input's. Fully
     * SQL-oracle-able: fixed iterations, no RNG, no intercept.
@@ -131,32 +126,107 @@ object LinearOps {
                               idCol: String, blockCol: String,
                               labelCol: String, iters: Int,
                               lr: Double): DataFrame = {
-    val spark = pointsLong.sparkSession
-    val packed = PointPack.pack(pointsLong, Seq(blockCol, idCol))
-      .join(labels.select(col(idCol), col(labelCol).cast("double").as("_y")),
-        Seq(idCol), "left")
-      .select(col(blockCol), col("_y"), col("dims"), col("vs"))
-    val w = PointPack.fit(packed) { p =>
-      if (iters == 0)
-        p.select(col(blockCol), explode(col("dims"))).distinct().collect()
-          .map(r => (r.get(0), r.getLong(1)) -> 0.0).toMap
-      else (1 to iters).foldLeft(Map.empty[(Any, Long), Double]) {
-        (w, _) => gdRound(p, w, lr)
-      }
-    }
-    val rows = w.iterator.map { case ((_, d), x) => Row(d, x) }.toSeq
-    spark.createDataFrame(rows.asJava, StructType(Seq(
-        StructField("dim", LongType), StructField("w", DoubleType))))
-      .select(col("dim").cast(pointsLong.schema("dim").dataType).as("dim"),
-        col("w"))
+    val packed = labelledPack(pointsLong, labels, Seq(blockCol, idCol),
+        idCol, col(labelCol).cast("double"))
+      .select(col(blockCol).as("_k"), col("_y"), col("dims"), col("vs"))
+    val w = PointPack.fit(packed)(gdFit(_, iters, lr))
+    weightFrame(pointsLong, w,
+        StructField("_k", pointsLong.schema(blockCol).dataType))
       .groupBy(col("dim"))
       .agg((round(avg(col("w")), 6) + lit(0.0)).as("w_avg"),
         count(lit(1)).as("n_blocks"))
   }
 
-  /** One block-averaged GD round over the pack (block, y, dims, vs):
-    * err = σ(m) − y per labelled point (StrictMath.exp, as Spark's `exp`),
-    * merged to (block, dim) → (Σ err·v, n), then w' = w − lr·Σ/n.
+  /** Deterministic batch gradient descent for logistic regression:
+    * weights start at zero, `iters` full-batch steps of rate `lr`, no
+    * intercept, no RNG — so the entire fit is SQL-expressible and
+    * oracle-checkable step for step (the iterative twin of the ml
+    * L-BFGS `fitLogistic`, whose line search isn't mirrorable).
+    *
+    * The input is read once: [[PointPack]] packs it one row per id with
+    * the label joined in, and [[gdFit]] runs the rounds under one
+    * constant key. Driver state is the O(dims) weights.
+    *
+    * Returns (dim, w) as a driver-built frame, `dim` typed as the
+    * input's.
+    */
+  def logisticGdIterations(pointsLong: DataFrame, labels: DataFrame,
+                           idCol: String, labelCol: String,
+                           iters: Int, lr: Double): DataFrame = {
+    val packed = labelledPack(pointsLong, labels, Seq(idCol), idCol,
+        col(labelCol).cast("double"))
+      .select(lit(0).as("_k"), col("_y"), col("dims"), col("vs"))
+    val w = PointPack.fit(packed)(gdFit(_, iters, lr))
+    weightFrame(pointsLong, w, StructField("_k", IntegerType))
+      .select(col("dim"), col("w"))
+  }
+
+  /** ONE-VS-REST multiclass for the deterministic GD family — the
+    * reference's `SGDClassifier.fit(classes=…)` semantics
+    * (`splearn/linear_model/stochastic_gradient.py:~L10-70`: sklearn
+    * SGD is multiclass via OvR). Every class's binary problem trains
+    * in the same rounds, keyed by class the way
+    * [[blockAveragedLogisticGd]] keys by block — never a driver loop
+    * over classes. Weights zero-init, `iters` full-batch steps, rate
+    * `lr`, no intercept, no RNG: the whole fit unrolls into a SQL oracle
+    * with `cls` threaded through every CTE.
+    *
+    * The classes are the labels' distinct values, collected once. The
+    * pack holds one row per id with its label; each round fans a point
+    * out in-row to every class with y = (label = cls), so the persisted
+    * pack does not grow with the class count.
+    *
+    * Returns (cls, dim, w) as a driver-built frame, `cls` typed as the
+    * label and `dim` as the input's. Driver state is the classes×dims
+    * weights.
+    */
+  def logisticGdOvr(pointsLong: DataFrame, labels: DataFrame,
+                    idCol: String, labelCol: String,
+                    iters: Int, lr: Double): DataFrame = {
+    val clsType = labels.schema(labelCol).dataType
+    val classes = array(labels.select(col(labelCol)).distinct().collect()
+      .map(r => lit(r.get(0))).toSeq: _*).cast(ArrayType(clsType))
+    val packed = labelledPack(pointsLong, labels, Seq(idCol), idCol,
+        col(labelCol))
+      .select(col("_y"), col("dims"), col("vs"))
+    val w = PointPack.fit(packed) { p =>
+      gdFit(p.withColumn("_k", explode(classes))
+        .select(col("_k"), (col("_y") === col("_k")).cast("double").as("_y"),
+          col("dims"), col("vs")), iters, lr)
+    }
+    weightFrame(pointsLong, w, StructField("cls", clsType))
+  }
+
+  /** `pointsLong` packed one row per `keys` group ([[PointPack.pack]]),
+    * with `y` of the row's `idCol` left-joined in as `_y`: null for an
+    * unlabelled point.
+    */
+  private def labelledPack(pointsLong: DataFrame, labels: DataFrame,
+                           keys: Seq[String], idCol: String,
+                           y: Column): DataFrame =
+    PointPack.pack(pointsLong, keys)
+      .join(labels.select(col(idCol), y.as("_y")), Seq(idCol), "left")
+
+  /** The logistic-GD fit over a pack of (_k, _y, dims, vs) rows: `iters`
+    * [[gdRound]]s from zero weights, one model per key. With `iters` = 0
+    * every (key, dim) a point carries gets w = 0, unlabelled points'
+    * too; a round keeps only the (key, dim)s some labelled point
+    * carries.
+    */
+  private def gdFit(packed: DataFrame, iters: Int,
+                    lr: Double): Map[(Any, Long), Double] =
+    if (iters == 0)
+      packed.select(col("_k"), explode(col("dims"))).distinct().collect()
+        .map(r => (r.get(0), r.getLong(1)) -> 0.0).toMap
+    else (1 to iters).foldLeft(Map.empty[(Any, Long), Double]) {
+      (w, _) => gdRound(packed, w, lr)
+    }
+
+  /** One GD round over the pack (key, y, dims, vs), all keys at once:
+    * each point's margin is computed in-row against the broadcast
+    * (key, dim) → w map, err = σ(m) − y per labelled point
+    * (StrictMath.exp, as Spark's `exp`), per-task (key, dim) →
+    * (Σ err·v, n) partials merge on the driver, then w' = w − lr·Σ/n.
     */
   private def gdRound(packed: DataFrame, w: Map[(Any, Long), Double],
                       lr: Double): Map[(Any, Long), Double] = {
@@ -188,7 +258,19 @@ object LinearOps {
     }.toMap
   }
 
-  /** spark.ml logistic regression over an Array[Float] embedding column. */
+  /** The fit's (key, dim) → w as a driver-built (key, dim, w) frame,
+    * `dim` typed as `pointsLong`'s.
+    */
+  private def weightFrame(pointsLong: DataFrame, w: Map[(Any, Long), Double],
+                          key: StructField): DataFrame =
+    pointsLong.sparkSession.createDataFrame(
+        w.iterator.map { case ((k, d), x) => Row(k, d, x) }.toSeq.asJava,
+        StructType(Seq(key, StructField("dim", LongType),
+          StructField("w", DoubleType))))
+      .select(col(key.name),
+        col("dim").cast(pointsLong.schema("dim").dataType).as("dim"),
+        col("w"))
+
   /** Bivariate OLS with intercept, closed form: one aggregation computes
     * the 8 sufficient statistics (n, Σx1, Σx2, Σy, Σx1², Σx1x2, Σx2²,
     * Σx1y, Σx2y), then Cramer's rule solves the 3×3 normal equations
@@ -225,7 +307,7 @@ object LinearOps {
           .as("b2"))
   }
 
-  // --- Trivariate OLS: generated 4×4 Cramer over the normal equations ---
+  // --- General-d OLS: generated (d+1)×(d+1) Cramer over the normal equations ---
   //
   // The determinant expansions are GENERATED (recursive Laplace along the
   // first row) as SQL text over the moment column names, and the SAME
@@ -244,38 +326,6 @@ object LinearOps {
       val term = s"${m(0)(j)} * (${detSql(minor)})"
       if (j % 2 == 0) s"+ $term" else s"- $term"
     }.mkString(" ").stripPrefix("+ ")
-
-  /** Normal-equations matrix for y ~ 1 + x1 + x2 + x3 in moment names. */
-  private[graft] val ols3Matrix: Vector[Vector[String]] = Vector(
-    Vector("n", "s1", "s2", "s3"),
-    Vector("s1", "s11", "s12", "s13"),
-    Vector("s2", "s12", "s22", "s23"),
-    Vector("s3", "s13", "s23", "s33"))
-
-  private[graft] val ols3Rhs: Vector[String] =
-    Vector("sy", "s1y", "s2y", "s3y")
-
-  /** Cramer numerator for coefficient j (rhs replacing column j). */
-  private[graft] def ols3BetaSql(j: Int): String =
-    detSql(ols3Matrix.zipWithIndex.map { case (row, i) =>
-      row.updated(j, ols3Rhs(i))
-    })
-
-  private[graft] val ols3DetSql: String = detSql(ols3Matrix)
-
-  /** The 14 sufficient statistics of y ~ 1 + x1 + x2 + x3 as one
-    * aggregation — SELECT list shared with the oracle via the name
-    * contract (n, s1..s3, sy, s11..s33, s1y..s3y).
-    */
-  private[graft] def ols3MomentAggs(x1: Column, x2: Column, x3: Column,
-                                    y: Column): Seq[Column] = Seq(
-    count(lit(1)).cast("double").as("n"),
-    sum(x1).as("s1"), sum(x2).as("s2"), sum(x3).as("s3"), sum(y).as("sy"),
-    sum(x1 * x1).as("s11"), sum(x1 * x2).as("s12"), sum(x1 * x3).as("s13"),
-    sum(x2 * x2).as("s22"), sum(x2 * x3).as("s23"), sum(x3 * x3).as("s33"),
-    sum(x1 * y).as("s1y"), sum(x2 * y).as("s2y"), sum(x3 * y).as("s3y"))
-
-  // --- General-d closed-form OLS (the inductive extension of olsFit3) ---
 
   /** Moment-column name for normal-equations entry (i, j), 0 = the
     * intercept column: n, s<i>, s<ij> (i<=j).
@@ -318,146 +368,24 @@ object LinearOps {
     * the SAME string Spark and the oracle parse, so FP evaluation order
     * is pinned by construction at every d. Laplace expansion is
     * O((d+1)!) terms — fine through d≈5; beyond that use `fitLinear`
-    * (solver="normal", Cholesky) whose cost is O(d³).
+    * (solver="normal", Cholesky) whose cost is O(d³). One generator for
+    * every d, as the reference's linear models take any number of
+    * features through one class (`splearn/linear_model/base.py:~L100`).
     */
   def olsFitN(df: DataFrame, xCols: Seq[String], yCol: String,
               roundTo: Int = 4): DataFrame = {
     val d = xCols.size
     require(d >= 1 && d <= 5, s"d=$d out of closed-form range 1..5")
     val betas = (0 to d).map { j =>
+      // + 0.0 canonicalizes -0.0 (repo-wide round rule); nullif guards
+      // the singular (collinear-features) case identically across
+      // engines — Spark non-ANSI x/0 is NULL, DuckDB is inf/nan.
       expr(s"round((${olsBetaSql(d, j)}) / " +
         s"nullif((${detSql(olsMatrix(d))}), 0), $roundTo) + 0.0").as(s"b$j")
     }
     val m = olsMomentAggs(
       xCols.map(c => col(c).cast("double")), col(yCol).cast("double"))
     df.agg(m.head, m.tail: _*).select(betas: _*)
-  }
-
-  /** Trivariate OLS with intercept, closed form: one aggregation for the
-    * 14 sufficient statistics, then generated Cramer's rule on the 4×4
-    * normal equations in-row — the ≥3-feature extension of [[olsFit2]]
-    * (the reference's model averaging handled arbitrary dims;
-    * `splearn/linear_model/base.py:~L100`). Still one linear pass and
-    * O(1) result — no matrix library, no driver state.
-    */
-  def olsFit3(df: DataFrame, x1Col: String, x2Col: String, x3Col: String,
-              yCol: String): DataFrame = {
-    val betas = (0 until 4).map { j =>
-      // + 0.0 canonicalizes -0.0 (repo-wide round rule); nullif guards
-      // the singular (collinear-features) case identically across
-      // engines — Spark non-ANSI x/0 is NULL, DuckDB is inf/nan.
-      expr(s"round((${ols3BetaSql(j)}) / nullif(($ols3DetSql), 0), 4) + 0.0")
-        .as(s"b$j")
-    }
-    val m = ols3MomentAggs(
-      col(x1Col).cast("double"), col(x2Col).cast("double"),
-      col(x3Col).cast("double"), col(yCol).cast("double"))
-    df.agg(m.head, m.tail: _*).select(betas: _*)
-  }
-
-  /** Deterministic batch gradient descent for logistic regression:
-    * weights start at zero, `iters` full-batch steps of rate `lr`, no
-    * intercept, no RNG — so the entire fit is SQL-expressible and
-    * oracle-checkable step for step (the iterative twin of the ml
-    * L-BFGS `fitLogistic`, whose line search isn't mirrorable). Each
-    * step is two broadcast joins + two aggregations over the long-form
-    * points: margins per row, then the gradient avg((σ(m)−y)·x) per
-    * dim. Weights are O(dims) — broadcast-sized driver-free state.
-    */
-  /** One un-materialized GD step: weights in, weights out. Exposed
-    * package-private so PlanSpec can pin the step's SHAPE (model state
-    * rides a broadcast hash join, never a shuffle of the weight side) —
-    * the materializing loop below erases the joins from the returned
-    * frame's plan, so the step is where the property is visible.
-    */
-  private[graft] def gdStep(pointsLong: DataFrame, labels: DataFrame,
-                            idCol: String, labelCol: String, lr: Double,
-                            w: DataFrame): DataFrame = {
-    val margins = pointsLong
-      .join(broadcast(w), "dim")
-      .groupBy(col(idCol))
-      .agg(sum(col("v") * col("w")).as("m"))
-    val errs = margins.join(labels, idCol)
-      .select(col(idCol),
-        (lit(1.0) / (lit(1.0) + exp(-col("m"))) - col(labelCol)).as("err"))
-    val grad = pointsLong.join(errs, idCol)
-      .groupBy(col("dim"))
-      .agg(avg(col("err") * col("v")).as("g"))
-    w.join(grad, "dim")
-      .select(col("dim"), (col("w") - lit(lr) * col("g")).as("w"))
-  }
-
-  def logisticGdIterations(pointsLong: DataFrame, labels: DataFrame,
-                           idCol: String, labelCol: String,
-                           iters: Int, lr: Double): DataFrame = {
-    var w = pointsLong.select(col("dim")).distinct()
-      .withColumn("w", lit(0.0))
-    (1 to iters).foreach { _ =>
-      w = gdStep(pointsLong, labels, idCol, labelCol, lr, w)
-      // Materialize the O(dims) weight frame EVERY step. Two distinct
-      // failure modes without it: (a) analysis cost — past ~20 steps
-      // DeduplicateRelations over the exponentially-referenced tree
-      // dwarfs execution (measured driver OOM in the analyzer at 80
-      // iterations); (b) EXECUTION blowup even at 2 steps — w_i appears
-      // twice in w_{i+1}'s tree (the update join + the next margins'
-      // broadcast), so un-materialized weights re-run every prior
-      // step's margins/errs/grad chain 2^i times (measured ~7.5s of
-      // repeated tiny shuffle jobs on a 20k-row long form inside
-      // curation_scored; ~1s with per-step materialization). The
-      // checkpointed frame is `dims` rows — metadata-scale, the r9
-      // slim-frame carve-out — and values are identical step for step,
-      // so oracle mirroring is unaffected.
-      w = w.localCheckpoint()
-    }
-    w
-  }
-
-  /** ONE-VS-REST multiclass for the deterministic GD family — the
-    * reference's `SGDClassifier.fit(classes=…)` semantics
-    * (`splearn/linear_model/stochastic_gradient.py:~L10-70`: sklearn
-    * SGD is multiclass via OvR). Every class's binary problem trains
-    * SIMULTANEOUSLY in one plan: the class id rides through the weight
-    * frame exactly like [[blockAveragedLogisticGd]]'s block id, so each
-    * step is still two aggregations over one long-form relation — never
-    * a driver loop over classes. Weights zero-init, `iters` full-batch
-    * steps, rate `lr`, no intercept, no RNG: the whole fit unrolls into
-    * a SQL oracle with `cls` threaded through every CTE.
-    *
-    * Returns (cls, dim, w). Weight state is O(classes × dims) —
-    * broadcast-sized; the per-step materialization rule of
-    * [[logisticGdIterations]] applies unchanged (the frame is
-    * referenced by both the update join and the next broadcast).
-    */
-  def logisticGdOvr(pointsLong: DataFrame, labels: DataFrame,
-                    idCol: String, labelCol: String,
-                    iters: Int, lr: Double): DataFrame = {
-    val classes = labels.select(col(labelCol).as("cls")).distinct()
-    // per-class binary targets: y=1 iff the row's label IS the class
-    val binLabels = labels.crossJoin(broadcast(classes))
-      .select(col(idCol), col("cls"),
-        (col(labelCol) === col("cls")).cast("double").as("_y"))
-    var w = pointsLong.select(col("dim")).distinct()
-      .crossJoin(broadcast(classes))
-      .withColumn("w", lit(0.0))
-    (1 to iters).foreach { _ =>
-      val margins = pointsLong
-        .join(broadcast(w), "dim") // fans each point out to every class
-        .groupBy(col("cls"), col(idCol))
-        .agg(sum(col("v") * col("w")).as("m"))
-      val errs = margins.join(binLabels, Seq(idCol, "cls"))
-        .select(col("cls"), col(idCol),
-          (lit(1.0) / (lit(1.0) + exp(-col("m"))) - col("_y")).as("err"))
-      val grad = pointsLong.join(errs, idCol)
-        .groupBy(col("cls"), col("dim"))
-        .agg(avg(col("err") * col("v")).as("g"))
-      w = w.join(grad, Seq("cls", "dim"))
-        .select(col("cls"), col("dim"),
-          (col("w") - lit(lr) * col("g")).as("w"))
-      // classes×dims rows — metadata-scale; same 2^i/analyzer rationale
-      // as logisticGdIterations
-      w = w.localCheckpoint()
-    }
-    w
   }
 
   /** OvR predict: per-row margins against every class's weight vector
@@ -529,6 +457,7 @@ object LinearOps {
           + lit(0.0)).as("intercept"))
   }
 
+  /** spark.ml logistic regression over an Array[Float] embedding column. */
   def fitLogistic(df: DataFrame, featuresArr: String, labelCol: String,
                   maxIter: Int = 20): DataFrame = {
     val prepared = df.withColumn("features",

@@ -158,8 +158,9 @@ object MLQueries extends QueryPack {
     // below interpolates the SAME generated SQL text, so both engines
     // evaluate one arithmetic tree (see LinearOps.detSql).
     "l6_ols_trivariate" -> ((s, dir) => {
-      LinearOps.olsFit3(Tables(s, dir).lineitem,
-        "l_quantity", "l_discount", "l_tax", "l_extendedprice")
+      LinearOps.olsFitN(Tables(s, dir).lineitem,
+        Seq("l_quantity", "l_discount", "l_tax"), "l_extendedprice",
+        roundTo = 4)
     }),
 
     // L3d: GENERAL-d closed form — quadrivariate OLS via the generated
@@ -1946,8 +1947,9 @@ object MLQueries extends QueryPack {
 
     "l6_ols_trivariate" -> {
       val betas = (0 until 4).map { j =>
-        s"round((${LinearOps.ols3BetaSql(j)}) / " +
-          s"nullif((${LinearOps.ols3DetSql}), 0), 4) + 0.0 AS b$j"
+        s"round((${LinearOps.olsBetaSql(3, j)}) / " +
+          s"nullif((${LinearOps.detSql(LinearOps.olsMatrix(3))}), 0), 4) " +
+          s"+ 0.0 AS b$j"
       }.mkString(",\n    ")
       s"""WITH m AS (
          |  SELECT CAST(count(*) AS DOUBLE) AS n,
@@ -2406,8 +2408,9 @@ object MLQueries extends QueryPack {
     // absorbs the Cholesky-vs-Cramer float path difference).
     "ml_linreg_fit" -> {
       val betas = (0 until 4).map { j =>
-        s"round((${LinearOps.ols3BetaSql(j)}) / " +
-          s"nullif((${LinearOps.ols3DetSql}), 0), 3) + 0.0 AS b$j"
+        s"round((${LinearOps.olsBetaSql(3, j)}) / " +
+          s"nullif((${LinearOps.detSql(LinearOps.olsMatrix(3))}), 0), 3) " +
+          s"+ 0.0 AS b$j"
       }.mkString(",\n    ")
       s"""WITH m AS (
          |  SELECT CAST(count(*) AS DOUBLE) AS n,

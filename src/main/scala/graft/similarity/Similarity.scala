@@ -1315,23 +1315,29 @@ object Similarity {
     * brute-force on clusterable data (Dong et al. report 90%+ recall
     * within ~5 rounds) — the quality ceiling knob for SemDeDup built
     * on the cell-gated graph. Fixed rounds keep the determinism
-    * contract; per-round `localCheckpoint` truncates the iterated
-    * lineage (the Components loop discipline).
+    * contract; each round is pinned ([[graft.core.Caches.pin]]), which
+    * truncates the iterated lineage, and frees the round before once it
+    * has been read (the Components loop discipline).
     */
   def knnRefineIterated(emb: DataFrame, idCol: String, arrCol: String,
                         graph: DataFrame, k: Int, rounds: Int,
                         maxDegree: Int = 1 << 12): DataFrame = {
     require(rounds >= 1, s"rounds=$rounds must be positive")
     var g = graph
+    var prev: Option[graft.core.Pinned] = None
     var r = 0
     while (r < rounds) {
       // iterated frame: lineage truncation is the point here (the plan
-      // would grow per round), so localCheckpoint stays — the Components
-      // loop discipline — but at DISK_ONLY so the edge list is not
-      // duplicated in storage memory across rounds. Durability waiver
-      // as in Components: a reliable checkpoint dir is the cluster fix.
-      g = knnRefine(emb, idCol, arrCol, g, k, maxDegree)
-        .localCheckpoint(eager = true, storageLevel = StorageLevel.DISK_ONLY)
+      // would grow per round), so each round is a checkpoint — the
+      // Components loop discipline — at DISK_ONLY so the edge list is
+      // not duplicated in storage memory. Durability waiver as in
+      // Components: a reliable checkpoint dir is the cluster fix.
+      val next = graft.core.Caches.pin(
+        knnRefine(emb, idCol, arrCol, g, k, maxDegree), StorageLevel.DISK_ONLY)
+      // the pin is eager, so the round before has been read
+      prev.foreach(_.free(blocking = false))
+      prev = Some(next)
+      g = next.df
       r += 1
     }
     g
@@ -1374,18 +1380,20 @@ object Similarity {
     // distinct: the loop compares EDGE SETS round over round, and the
     // caller's graph may carry duplicate rows (knnRefine itself
     // dedupes internally, so the refined output is unaffected)
-    // iterated loop frames: localCheckpoint (lineage truncation — the
+    // iterated loop frames: pinned checkpoints (lineage truncation — the
     // Components discipline) at DISK_ONLY; see knnRefineIterated's note
-    var g = graph.select(col("src_id"), col("neighbor_id")).distinct()
-      .localCheckpoint(eager = true, storageLevel = StorageLevel.DISK_ONLY)
+    var g = graft.core.Caches.pin(
+      graph.select(col("src_id"), col("neighbor_id")).distinct(),
+      StorageLevel.DISK_ONLY)
     var full: DataFrame = graph
     val changed = Seq.newBuilder[Long]
     var r = 0
     var converged = false
     while (r < maxRounds && !converged) {
-      full = knnRefine(emb, idCol, arrCol, g, k, maxDegree)
-        .localCheckpoint(eager = true, storageLevel = StorageLevel.DISK_ONLY)
-      val next = full.select(col("src_id"), col("neighbor_id"))
+      val refined = graft.core.Caches.pin(
+        knnRefine(emb, idCol, arrCol, g.df, k, maxDegree), StorageLevel.DISK_ONLY)
+      full = refined.df
+      val next = refined.map(_.select(col("src_id"), col("neighbor_id")))
       // symmetric difference AND the new-edge total in ONE driver
       // action: tag each side, group by edge (both sides are
       // duplicate-free, so a group size of 1 means exactly-one-side),
@@ -1393,9 +1401,9 @@ object Similarity {
       // full pass over the checkpointed edge list per round — the
       // previous shape (anti-join count + a second count() for the
       // tol denominator) paid two.
-      val tagged = next.select(col("src_id"), col("neighbor_id"),
+      val tagged = next.df.select(col("src_id"), col("neighbor_id"),
           lit(1L).as("_in_next"))
-        .unionAll(g.select(col("src_id"), col("neighbor_id"),
+        .unionAll(g.df.select(col("src_id"), col("neighbor_id"),
           lit(0L).as("_in_next")))
       val scalars = tagged.groupBy(col("src_id"), col("neighbor_id"))
         .agg(sum(col("_in_next")).as("_n"), count(lit(1)).as("_c"))
@@ -1410,6 +1418,9 @@ object Similarity {
       converged =
         if (tol == 0.0) delta == 0L
         else delta <= math.ceil(tol * total).toLong
+      // the new round and its delta action have read the previous edge
+      // set; `next` reads the returned round's blocks
+      g.free(blocking = false)
       g = next
       r += 1
     }

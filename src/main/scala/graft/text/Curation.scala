@@ -317,8 +317,9 @@ object Curation {
           (max(col("w2")) - lit(lr) * avg(col("_err") * col("f2"))).as("w2"),
           (max(col("w3")) - lit(lr) * avg(col("_err") * col("f3"))).as("w3"),
           (max(col("w4")) - lit(lr) * avg(col("_err") * col("f4"))).as("w4"))
-        // O(1)-row weight state, materialized per step — the same 2^i
-        // re-execution rationale as logisticGdIterations
+        // O(1)-row weight state, materialized per step: a lazy wRow
+        // nests every earlier step's aggregation over feats, so step i
+        // would re-run i corpus passes and the plan would grow per step
         .localCheckpoint()
     }
     // the distinct-transition score table (the deployable LM artifact):

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The packed, one-pass-per-round estimators (block-averaged logistic GD
+/** The packed, one-pass-per-round estimators (the three logistic-GD fits
   * and Lloyd k-means) against the relational loops they replace, and the
   * cost properties the packing exists for: the input is read once per
   * fit, and a fit leaves no blocks behind.
@@ -20,11 +20,13 @@ class PackedFitSpec extends AnyFunSuite {
 
   /** Per round: margins by broadcast join, errors by a label join, the
     * gradient by a join and an aggregation, and an inner join onto the
-    * weights. Test fits run few rounds, so the plan is not truncated.
+    * weights; one model per block. Returns (block, dim, w). Test fits run
+    * few rounds, so the plan is not truncated.
     */
-  private def referenceGd(pointsLong: DataFrame, labels: DataFrame,
-                          idCol: String, blockCol: String, labelCol: String,
-                          iters: Int, lr: Double): DataFrame = {
+  private def referenceGdWeights(pointsLong: DataFrame, labels: DataFrame,
+                                 idCol: String, blockCol: String,
+                                 labelCol: String, iters: Int,
+                                 lr: Double): DataFrame = {
     var w = pointsLong.select(col(blockCol), col("dim")).distinct()
       .withColumn("w", lit(0.0))
     (1 to iters).foreach { _ =>
@@ -42,9 +44,49 @@ class PackedFitSpec extends AnyFunSuite {
         .select(col(blockCol), col("dim"),
           (col("w") - lit(lr) * col("g")).as("w"))
     }
-    w.groupBy(col("dim"))
+    w
+  }
+
+  /** [[referenceGdWeights]] averaged across blocks. */
+  private def referenceGd(pointsLong: DataFrame, labels: DataFrame,
+                          idCol: String, blockCol: String, labelCol: String,
+                          iters: Int, lr: Double): DataFrame =
+    referenceGdWeights(pointsLong, labels, idCol, blockCol, labelCol, iters,
+        lr)
+      .groupBy(col("dim"))
       .agg((round(avg(col("w")), 6) + lit(0.0)).as("w_avg"),
         count(lit(1)).as("n_blocks"))
+
+  /** One-vs-rest: every class's binary problem (y = label is the class)
+    * in the same rounds, the class id threaded through the weights like
+    * a block id. Returns (cls, dim, w).
+    */
+  private def referenceOvr(pointsLong: DataFrame, labels: DataFrame,
+                           idCol: String, labelCol: String, iters: Int,
+                           lr: Double): DataFrame = {
+    val classes = labels.select(col(labelCol).as("cls")).distinct()
+    val binLabels = labels.crossJoin(broadcast(classes))
+      .select(col(idCol), col("cls"),
+        (col(labelCol) === col("cls")).cast("double").as("_y"))
+    var w = pointsLong.select(col("dim")).distinct()
+      .crossJoin(broadcast(classes))
+      .select(col("cls"), col("dim"), lit(0.0).as("w"))
+    (1 to iters).foreach { _ =>
+      val margins = pointsLong
+        .join(broadcast(w), "dim")
+        .groupBy(col("cls"), col(idCol))
+        .agg(sum(col("v") * col("w")).as("m"))
+      val errs = margins.join(binLabels, Seq(idCol, "cls"))
+        .select(col("cls"), col(idCol),
+          (lit(1.0) / (lit(1.0) + exp(-col("m"))) - col("_y")).as("err"))
+      val grad = pointsLong.join(errs, idCol)
+        .groupBy(col("cls"), col("dim"))
+        .agg(avg(col("err") * col("v")).as("g"))
+      w = w.join(grad, Seq("cls", "dim"))
+        .select(col("cls"), col("dim"),
+          (col("w") - lit(lr) * col("g")).as("w"))
+    }
+    w
   }
 
   /** Per round: assignment by broadcast join and argmin aggregation, then
@@ -105,11 +147,21 @@ class PackedFitSpec extends AnyFunSuite {
       .map(id => Row(id, (id * 7 % 5 % 2).toDouble)), 2),
     StructType(Seq(StructField("id", LongType), StructField("y", DoubleType))))
 
+  /** Three classes over the labelled ids; id 31 stays unlabelled. */
+  private def labels3: DataFrame = spark.createDataFrame(
+    spark.sparkContext.parallelize(rows.map(_._1).distinct.filter(_ != 31L)
+      .map(id => Row(id, (id * 7 % 5 % 3).toInt)), 2),
+    StructType(Seq(StructField("id", LongType),
+      StructField("y3", IntegerType))))
+
   private def columns(df: DataFrame): Seq[(String, DataType)] =
     df.schema.map(f => (f.name, f.dataType))
 
   private def sorted(df: DataFrame): Seq[Row] =
     df.collect().toSeq.sortBy(_.toString)
+
+  private def roundedW(df: DataFrame): DataFrame =
+    df.withColumn("w", round(col("w"), 6) + lit(0.0))
 
   private def roundedCenters(df: DataFrame): DataFrame =
     df.select(col("cid"), col("dim"), (round(col("c"), 4) + lit(0.0)).as("c"))
@@ -133,6 +185,35 @@ class PackedFitSpec extends AnyFunSuite {
           pts.select("block", "dim").distinct().count())
         assert(dims.contains(8))
       } else assert(!dims.contains(8))
+    }
+  }
+
+  test("logistic GD and its one-vs-rest twin equal the relational loops") {
+    for (dimType <- Seq(IntegerType, LongType); iters <- Seq(0, 1, 3)) {
+      val pts = points(dimType)
+      val tag = s"$dimType iters=$iters"
+      val got = LinearOps.logisticGdIterations(pts.drop("block"), labels,
+        "id", "y", iters, lr = 0.5)
+      val want = referenceGdWeights(pts.withColumn("block", lit(0)), labels,
+        "id", "block", "y", iters, lr = 0.5).drop("block")
+      assert(columns(got) === columns(want), tag)
+      assert(sorted(roundedW(got)) === sorted(roundedW(want)), tag)
+
+      val ovr = LinearOps.logisticGdOvr(pts.drop("block"), labels3, "id",
+        "y3", iters, lr = 0.5)
+      val ovrWant = referenceOvr(pts.drop("block"), labels3, "id", "y3",
+        iters, lr = 0.5)
+      assert(columns(ovr) === columns(ovrWant), tag)
+      assert(sorted(roundedW(ovr)) === sorted(roundedW(ovrWant)), tag)
+      assert(ovr.select("cls").distinct().count() === 3L, tag)
+      // zero rounds: a zero weight for every (class, dim), the unlabelled
+      // point's dim 8 too; a round drops the dim only it carries
+      val dims = ovr.collect().map(_.get(1).toString.toInt).toSet
+      if (iters == 0) {
+        assert(got.collect().forall(_.getDouble(1) == 0.0), tag)
+        assert(ovr.count() === 3L * pts.select("dim").distinct().count(), tag)
+        assert(dims.contains(8), tag)
+      } else assert(!dims.contains(8), tag)
     }
   }
 
@@ -162,7 +243,7 @@ class PackedFitSpec extends AnyFunSuite {
 
   test("a fit reads its input once and leaves no blocks behind") {
     val sc = spark.sparkContext
-    for (fit <- Seq("gd", "lloyd")) {
+    for (fit <- Seq("gd", "gd-iterations", "gd-ovr", "lloyd")) {
       val reads = sc.longAccumulator(s"reads-$fit")
       val counted = udf { (v: Double) => reads.add(1); v }
       val pts = points().withColumn("v", counted(col("v")))
@@ -171,6 +252,10 @@ class PackedFitSpec extends AnyFunSuite {
       val out = fit match {
         case "gd" => LinearOps.blockAveragedLogisticGd(pts, labels, "id",
           "block", "y", iters = 3, lr = 0.5)
+        case "gd-iterations" => LinearOps.logisticGdIterations(pts, labels,
+          "id", "y", iters = 3, lr = 0.5)
+        case "gd-ovr" => LinearOps.logisticGdOvr(pts, labels3, "id", "y3",
+          iters = 3, lr = 0.5)
         case _ => ClusterOps.lloydIterations(pts, "id", k = 4, iters = 3)
       }
       assert(out.collect().nonEmpty, fit)

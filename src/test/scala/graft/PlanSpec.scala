@@ -83,23 +83,13 @@ class PlanSpec extends AnyFunSuite {
     assert(lloyd.contains("LocalTableScan") && !lloyd.contains("Join") &&
       !lloyd.contains("CartesianProduct") && !lloyd.contains("FileScan"),
       lloyd.take(600))
-    // GD weight frames materialize per step (the r16 2^i-reference fix),
-    // so l4's RETURNED plan is a checkpoint scan — the broadcast
-    // property lives in the STEP plan; pin it there, plus the final
-    // shape (no join, no cartesian survives into the returned frame).
+    // GD runs the same way: rounds at fit time over a packed input with
+    // the O(dims) weights broadcast, so l4's returned plan is the
+    // driver-built weights, with no join and no input scan
     val gd = plan("l4_logreg_gd")
-    assert(!gd.contains("CartesianProduct") && gd.contains("ExistingRDD"),
+    assert(gd.contains("LocalTableScan") && !gd.contains("Join") &&
+      !gd.contains("CartesianProduct") && !gd.contains("FileScan"),
       gd.take(600))
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val pts = Seq((1L, 1, 1.0), (1L, 2, 0.5), (2L, 1, 0.25))
-      .toDF("id", "dim", "v")
-    val lbl = Seq((1L, 1.0), (2L, 0.0)).toDF("id", "y")
-    val w0 = pts.select(col("dim")).distinct().withColumn("w", lit(0.0))
-    val step = graft.mlops.LinearOps.gdStep(pts, lbl, "id", "y", 0.1, w0)
-      .queryExecution.executedPlan.toString
-    assert(step.contains("BroadcastHashJoin") &&
-      !step.contains("CartesianProduct"), step.take(800))
     // gap fill: keyed window + generator, no cartesian
     val rs = plan("resample_gapfill_events")
     assert(rs.contains("Window") && !rs.contains("CartesianProduct"),

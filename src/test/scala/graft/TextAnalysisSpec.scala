@@ -500,6 +500,27 @@ class TextAnalysisSpec extends AnyFunSuite {
     val lcp = graft.dedup.SuffixRank.lcpArray(toks, "pos", "tok")
     assert(persistedIds -- before2 === blockIds(lcp))
     assert(lcp.count() === 8L)
+
+    // the kNN refine loops: knnRefine's own shared frames are
+    // session-tracked, so compare after releasing them
+    val rnd = new scala.util.Random(7)
+    val emb = (0L until 40L).map { i =>
+      (i, Seq.fill(6)(rnd.nextDouble() + (i % 4).toDouble * 0.5))
+    }.toDF("vec_id", "embedding")
+    val ring = (0L until 40L)
+      .flatMap(i => Seq((i, (i + 1) % 40), (i, (i + 7) % 40)))
+      .toDF("src_id", "neighbor_id")
+    Caches.release(spark)
+    val before3 = persistedIds
+    val iterated = graft.similarity.Similarity.knnRefineIterated(emb,
+      "vec_id", "embedding", ring, k = 3, rounds = 3)
+    val converged = graft.similarity.Similarity.knnRefineConverged(emb,
+      "vec_id", "embedding", ring, k = 3, maxRounds = 4)
+    Caches.release(spark)
+    assert(persistedIds -- before3 ===
+      blockIds(iterated) ++ blockIds(converged.graph))
+    assert(iterated.count() === 120L)
+    assert(converged.roundsRun >= 2)
   }
 
   test("pplBuckets: thirds ordered by mean LM score, head = highest, " +
