@@ -24,6 +24,8 @@ if [ "${rows:-0}" -le 0 ]; then
 fi
 
 sbt -batch test
+# Code-size counts cited in CHANGES.md (code lines, raw checkpoint calls).
+bash scripts/code_lines.sh
 
 # Task-retry determinism (salted aggregation, salted join, the
 # Components.dedupCorpus pipeline): exits non-zero unless all three probes

@@ -5,8 +5,7 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.mllib.clustering.{KMeans => OldKMeans, KMeansModel => OldKMeansModel}
 import org.apache.spark.mllib.linalg.{Vectors => OldVectors}
 import org.apache.spark.mllib.linalg.distributed.RowMatrix
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.mutable
@@ -17,9 +16,11 @@ import scala.jdk.CollectionConverters._
   * The reference delegated k-means to mllib or ran local sklearn per block
   * (`splearn/cluster/k_means_.py:~L10-70`) and computed truncated SVD from
   * a tree-reduced Gramian (`splearn/decomposition/truncated_svd.py:~L10`).
-  * Same decomposition structure here: the Gramian is a long-form
-  * aggregation (SQL-checkable), the eigen/SVD step runs on `RowMatrix`
-  * (ARPACK / local Breeze — O(d²) driver state, never O(n)).
+  * Same decomposition structure here: one corpus pass reduces the d×d
+  * Gramian to the driver, and the deterministic eigen solvers (power
+  * iteration with deflation, orthogonal iteration) run there as plain
+  * arithmetic on it: O(d²) driver state, never O(n). [[fitSvd]] keeps
+  * mllib's `RowMatrix` (ARPACK / local Breeze).
   */
 object ClusterOps {
 
@@ -48,14 +49,6 @@ object ClusterOps {
         col("_m.dist2").as("dist2"))
   }
 
-  /** Multi-probe assignment: each point's `n` nearest centers (by the
-    * same (dist2, center-id) ordering as [[assignToCenters]]). The
-    * per-point candidate set is collected as an in-row array — bounded by
-    * k, the number of centers, never by data size — sorted, and sliced,
-    * so the whole top-n is one aggregation with map-side combine; no
-    * window, no second shuffle. Output: one row per (point, probed cell),
-    * `probe_rank` 1-based.
-    */
   /** In-row multi-probe assignment: each point's `n` nearest cells (L2,
     * ties to the lower cell id) via the native `graft_nearest_cells`
     * top-N argmin over the packed broadcast centroid table — the top-N
@@ -75,15 +68,7 @@ object ClusterOps {
                           n: Int): DataFrame = {
     require(n >= 1, s"nProbe=$n must be >= 1")
     graft.plans.GraftExpressions.register(emb.sparkSession)
-    val packed = centersLong
-      .groupBy(col(centerCol))
-      .agg(expr(
-        "transform(sort_array(collect_list(struct(dim, c))), x -> x.c)")
-        .as("cv"))
-      .agg(expr(
-        s"sort_array(collect_list(struct(CAST($centerCol AS BIGINT)" +
-          " AS cell, cv)))").as("_cells"))
-    emb.crossJoin(broadcast(packed))
+    emb.crossJoin(broadcast(packedCells(centersLong, centerCol)))
       .select(col(idCol), posexplode(expr(
         s"graft_nearest_cells(CAST($arrCol AS ARRAY<DOUBLE>), _cells, $n)"))
         .as(Seq("_i", "_cell")))
@@ -91,9 +76,21 @@ object ClusterOps {
         (col("_i") + 1).as("probe_rank"))
   }
 
-  /** spark.ml k-means‖ over an array column (the reference's
-    * `init='k-means||'` path, now fully in-JVM).
+  /** The nearest-cell kernels' broadcast table: one row whose `_cells`
+    * holds every center as `(cell: bigint, cv)`, `cv` its coordinates in
+    * dim order, cells ascending.
     */
+  private[graft] def packedCells(centersLong: DataFrame,
+                                 centerCol: String): DataFrame =
+    centersLong
+      .groupBy(col(centerCol))
+      .agg(expr(
+        "transform(sort_array(collect_list(struct(dim, c))), x -> x.c)")
+        .as("cv"))
+      .agg(expr(
+        s"sort_array(collect_list(struct(CAST($centerCol AS BIGINT)" +
+          " AS cell, cv)))").as("_cells"))
+
   /** Deterministic Lloyd's algorithm, `iters` fixed rounds: centers seeded
     * from the k lowest-id points (no RNG), each round re-assigns every
     * point to its nearest center and recomputes centers as coordinate
@@ -116,16 +113,13 @@ object ClusterOps {
   def lloydIterations(pointsLong: DataFrame, idCol: String, k: Int,
                       iters: Int): DataFrame = {
     val spark = pointsLong.sparkSession
-    val centers = PointPack.fit(PointPack.pack(pointsLong, Seq(idCol))) { p =>
-      // seed = the k lowest ids by RANK, not by value (`id < k` only works
-      // for dense 0-based ids); cid = rank-1, which equals the id itself
-      // on dense 0-based ids (what the SQL oracle pins). orderBy+limit
-      // plans as TakeOrderedAndProject: O(n) scan, O(k) result.
-      val seeds = p.orderBy(col(idCol)).limit(k).collect().toSeq
-        .zipWithIndex.map { case (r, cid) =>
-          Center(cid, PointPack.dims(r, 1), PointPack.vs(r, 2))
-        }
-      (1 to iters).foldLeft(seeds)((cs, _) => lloydRound(p, cs))
+    // seed = the k lowest ids by RANK, not by value (`id < k` only works
+    // for dense 0-based ids); cid = rank-1, which equals the id itself
+    // on dense 0-based ids (what the SQL oracle pins). orderBy+limit
+    // plans as TakeOrderedAndProject: O(n) scan, O(k) result.
+    val centers = lloydFit(pointsLong, Seq(idCol), iters) { p =>
+      p.orderBy(col(idCol)).limit(k).collect().toSeq
+        .zipWithIndex.map { case (r, cid) => Center.of(cid, r) }
     }
     val rows = for (c <- centers; i <- c.dims.indices)
       yield Row(c.cid, c.dims(i), c.cs(i))
@@ -141,10 +135,30 @@ object ClusterOps {
   }
 
   /** A k-means center: coordinates `cs` at `dims`. */
-  private final case class Center(cid: Int, dims: Array[Long],
-                                  cs: Array[Double])
+  private[graft] final case class Center(cid: Int, dims: Array[Long],
+                                         cs: Array[Double])
 
-  /** One Lloyd round over the pack (id, dims, vs). */
+  private[graft] object Center {
+    /** The point of a collected pack row as center `cid`. */
+    def of(cid: Int, r: Row): Center = Center(cid,
+      r.getAs[Seq[Long]]("dims").toArray, r.getAs[Seq[Double]]("vs").toArray)
+  }
+
+  /** `iters` Lloyd rounds over `pointsLong` (keys…, dim, v), packed one
+    * point per `keys` group ([[PointPack]]), from the centers `seeds`
+    * picks off the persisted pack. Returns the final centers. The one
+    * Lloyd fit behind [[lloydIterations]],
+    * [[graft.similarity.Similarity.pqCodebooks]] and
+    * [[graft.similarity.Similarity.retrainIvfIndex]].
+    */
+  private[graft] def lloydFit(pointsLong: DataFrame, keys: Seq[String],
+                              iters: Int)(
+      seeds: DataFrame => Seq[Center]): Seq[Center] =
+    PointPack.fit(PointPack.pack(pointsLong, keys)) { p =>
+      (1 to iters).foldLeft(seeds(p))((cs, _) => lloydRound(p, cs))
+    }
+
+  /** One Lloyd round over the pack (keys…, dims, vs). */
   private def lloydRound(packed: DataFrame,
                          centers: Seq[Center]): Seq[Center] = {
     // dim → the centers carrying it, cid ascending
@@ -155,11 +169,13 @@ object ClusterOps {
         byDim(d) = (s.map(_._2).toArray, s.map(_._3).toArray)
       }
     val nCid = (centers.map(_.cid) :+ -1).max + 1
+    val di = packed.schema.fieldIndex("dims")
+    val vi = packed.schema.fieldIndex("vs")
     val bc = packed.sparkSession.sparkContext.broadcast(byDim)
     val sums = try packed.rdd.treeAggregate(
         mutable.HashMap.empty[(Int, Long), Array[Double]])(
       (acc, r) => {
-        val ds = PointPack.dims(r, 1); val vs = PointPack.vs(r, 2)
+        val ds = PointPack.dims(r, di); val vs = PointPack.vs(r, vi)
         val index = bc.value
         val dist = new Array[Double](nCid)
         val shared = new Array[Boolean](nCid)
@@ -200,6 +216,9 @@ object ClusterOps {
     }
   }
 
+  /** spark.ml k-means‖ over an array column (the reference's
+    * `init='k-means||'` path, now fully in-JVM).
+    */
   def fitKMeans(df: DataFrame, arrCol: String, k: Int, seed: Long = 42L): DataFrame = {
     val prepared = df.withColumn("features",
       array_to_vector(col(arrCol).cast("array<double>")))
@@ -262,19 +281,23 @@ object ClusterOps {
 
   /** Gramian entries XᵀX[i,j], upper triangle — the reference's
     * `treeReduce(Σ XᵀX)` faithfully: per-partition triangle
-    * accumulation + treeReduce ([[gramianLongForm]]), not the long-form
+    * accumulation + treeAggregate ([[gramianMatrix]]), not the long-form
     * self-join this used to be (which shuffled n·d rows by id and was
     * measured 30× slower at stress scale). `idCol` is accepted for
     * surface uniformity with the sibling operators; the sufficient
     * statistic needs only the vectors.
     */
-  def gramian(df: DataFrame, idCol: String, arrCol: String, maxDim: Int): DataFrame =
-    gramianLongForm(
+  def gramian(df: DataFrame, idCol: String, arrCol: String, maxDim: Int): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val g = gramianMatrix(
       df.select(slice(col(arrCol).cast("array<double>"), 1, maxDim).as("_t")),
       "_t")
-      .where(col("di") <= col("dj"))
+    (for (i <- g.indices; j <- i until g.length) yield (i + 1, j + 1, g(i)(j)))
+      .toDF("di", "dj", "g")
       .select(col("di").as("dim_i"), col("dj").as("dim_j"),
         round(col("g"), 4).as("gram"))
+  }
 
   /** C4 (reference `svd_em`, `splearn/decomposition/truncated_svd.py:~L40`
     * — iterative SVD via EM updates) re-expressed Spark-first as a
@@ -286,11 +309,11 @@ object ClusterOps {
     * ARPACK/Breeze path of [[fitSvd]] can never be.
     *
     * Shape: the corpus-proportional work is ONE Gramian pass
-    * ([[gramianLongForm]] — per-partition triangle accumulation, no
-    * shuffle of the points, ≤partitions×d² bytes merged); the iteration
-    * then runs on the d-row vector against the checkpointed d²-row
-    * Gramian — free at any corpus size. Returns (dim, v, sigma): the
-    * top right singular vector and σ₁ = sqrt(‖G·v‖).
+    * ([[gramianMatrix]] — per-partition triangle accumulation, no
+    * shuffle of the points, ≤partitions×d² bytes merged); the rounds then
+    * run on the driver as d×d matrix-vector products — free at any
+    * corpus size. Returns (dim, v, sigma): the top right singular vector
+    * and σ₁ = sqrt(‖G·v‖).
     */
   def powerIterationTop(df: DataFrame, idCol: String, arrCol: String,
                         iters: Int = 8): DataFrame =
@@ -299,85 +322,46 @@ object ClusterOps {
   /** Top-k TRUNCATED SVD, fully deterministic: [[powerIterationTop]]'s
     * fixed-round loop per component, with Hotelling deflation between
     * components — G ← G − λ·v·vᵀ zeroes the found eigenpair, so the next
-    * loop converges to the next one. Deflation is plain arithmetic on
-    * the d²-row Gramian frame with the UNROUNDED vector, so the whole
-    * k-component fit stays SQL-oracle-able (the c4_svd_power2 oracle
-    * unrolls both loops and the deflation). Returns
+    * loop converges to the next one. Deflation uses the UNROUNDED vector
+    * and λ = ‖G·v‖, so the whole k-component fit stays SQL-oracle-able
+    * (the c4_svd_power2 oracle unrolls both loops and the deflation).
+    * Zero-norm guard: past the corpus rank, deflation leaves G ≈ 0 and
+    * G·v/‖G·v‖ would be 0/0; the component degrades to the zero vector
+    * with sigma 0 instead, and the oracle applies the same rule. Returns
     * (comp 1..k, dim, v, sigma), each component sign-canonicalized.
     */
   def powerIterationComponents(df: DataFrame, idCol: String, arrCol: String,
                                k: Int, iters: Int = 8): DataFrame = {
     require(k >= 1, s"k=$k must be positive")
     require(iters >= 1, s"iters=$iters must be positive")
-    // d²-row frame (feature-dim squared, corpus-independent) — slim by
-    // the r9 criterion; localCheckpoint across this file is fine
-    var g = gramianLongForm(df, arrCol).localCheckpoint()
-    // One fixed-round loop over the current Gramian: returns the
-    // UNROUNDED unit vector and the 1-row λ = ‖G·v‖ frame.
-    def powerLoop(gc: DataFrame): (DataFrame, DataFrame) = {
-      def mul(vcur: DataFrame): DataFrame = gc
-        .join(vcur.select(col("dim").as("dj"), col("v").as("pv")), "dj")
-        .groupBy(col("di")).agg(sum(col("g") * col("pv")).as("w"))
-      var v = gc.select(col("di").as("dim")).distinct()
-        .withColumn("v", when(col("dim") === 1, lit(1.0)).otherwise(lit(0.0)))
-      for (_ <- 1 to iters) {
-        val w = mul(v)
-        val n = w.agg(sqrt(sum(col("w") * col("w"))).as("n"))
-        // d-row frame; checkpoint keeps the plan O(1) across iterations.
-        // Zero-norm guard: past the corpus rank, deflation leaves G ≈ 0
-        // and w/n would be 0/0 = NaN (or FP-noise nondeterminism); the
-        // component degrades to the zero vector with sigma 0 instead —
-        // deterministic, and the oracle applies the same rule.
-        v = w.crossJoin(n)
-          .select(col("di").as("dim"),
-            when(col("n") > 0, col("w") / col("n")).otherwise(lit(0.0))
-              .as("v"))
-          .localCheckpoint()
-      }
-      (v, mul(v).agg(sqrt(sum(col("w") * col("w"))).as("l")))
+    val g = gramianMatrix(df, arrCol)
+    val comps = (1 to k).map { c =>
+      val v = subspaceIteration(g, 1, iters).head
+      val lam = norm(mul(g, v))
+      if (c < k) for (i <- g.indices; j <- g.indices)
+        g(i)(j) -= lam * v(i) * v(j)
+      (v, lam)
     }
-    val outs = (1 to k).map { c =>
-      val (v, lam) = powerLoop(g)
-      if (c < k) {
-        g = g
-          .join(v.select(col("dim").as("di"), col("v").as("_va")), "di")
-          .join(v.select(col("dim").as("dj"), col("v").as("_vb")), "dj")
-          .crossJoin(lam)
-          .select(col("di"), col("dj"),
-            (col("g") - col("l") * col("_va") * col("_vb")).as("g"))
-          .localCheckpoint()
-      }
-      val sgn = v.orderBy(abs(col("v")).desc, col("dim")).limit(1)
-        .select(when(col("v") < 0, -1.0).otherwise(1.0).as("s"))
-      v.crossJoin(sgn).crossJoin(lam)
-        .select(lit(c).as("comp"), col("dim"),
-          (round(col("v") * col("s"), 6) + lit(0.0)).as("v"),
-          (round(sqrt(col("l")), 4) + lit(0.0)).as("sigma"))
-    }
-    outs.reduce(_ unionByName _)
+    componentsFrame(df.sparkSession, comps)
   }
 
-  /** Top-k eigenvectors by ORTHOGONAL (subspace) iteration — the
-    * QR-in-SQL alternative to [[powerIterationComponents]]'s sequential
-    * deflation: all k vectors advance together each round (V ← orth(G·V))
-    * and the orthogonalization is MODIFIED Gram-Schmidt in long form —
-    * u_c subtracts its projection onto each previous q_j SEQUENTIALLY,
-    * re-projecting the RUNNING residual (the numerically stable form:
-    * CGS's error grows with κ², MGS's with κ); projection coefficients
-    * and norms are d-row aggregates, so every round is plain joins +
-    * groupBys over the (dim, comp) frame and the whole fit stays
-    * SQL-oracle-able. (At k = 2 there is only one projection, so MGS ≡
-    * CGS and the k=2 oracle is unchanged; c8_orth_iter3 pins the k=3
-    * MGS unroll.) Deterministic contract matches the
-    * deflation path exactly: fixed start V₀ = [e₁…e_k], fixed `iters`
-    * rounds, zero-norm guard (a rank-deficient Gramian degrades trailing
-    * components to the zero vector, never NaN), per-component sign
-    * canonicalization, sigma_c = √‖G·q_c‖ — so the two algorithms'
-    * outputs are directly comparable (OrthIterSpec pins agreement).
+  /** Top-k eigenvectors by ORTHOGONAL (subspace) iteration — the block
+    * alternative to [[powerIterationComponents]]'s sequential deflation:
+    * all k vectors advance together each round (V ← orth(G·V)) and the
+    * orthogonalization is MODIFIED Gram-Schmidt — u_c subtracts its
+    * projection onto each previous q_j SEQUENTIALLY, re-projecting the
+    * RUNNING residual (the numerically stable form: CGS's error grows
+    * with κ², MGS's with κ). (At k = 2 there is only one projection, so
+    * MGS ≡ CGS; c8_orth_iter3 pins the k=3 MGS unroll.) Deterministic
+    * contract matches the deflation path exactly: fixed start
+    * V₀ = [e₁…e_k], fixed `iters` rounds, zero-norm guard (a
+    * rank-deficient Gramian degrades trailing components to the zero
+    * vector, never NaN), per-component sign canonicalization,
+    * sigma_c = √‖G·q_c‖ — so the two algorithms' outputs are directly
+    * comparable (MLOpsSpec pins agreement).
     *
-    * Scale shape: the corpus is touched once (the imperative Gramian);
-    * every subsequent frame is O(d·k) or O(d²) rows with O(1) lineage
-    * (per-round localCheckpoint). Subspace iteration converges on
+    * Scale shape: the corpus is touched once (the Gramian pass); every
+    * round is O(d²·k) driver arithmetic. Subspace iteration converges on
     * CLUSTERED spectra where one-at-a-time deflation stalls — the reason
     * production SVD solvers (and mllib's ARPACK mode) iterate blocks.
     */
@@ -385,124 +369,108 @@ object ClusterOps {
                           k: Int, iters: Int = 8): DataFrame = {
     require(k >= 1, s"k=$k must be positive")
     require(iters >= 1, s"iters=$iters must be positive")
-    val spark = df.sparkSession
-    // localCheckpoint truncates LINEAGE but deliberately carries the
-    // parent plan's size ESTIMATE through the cut (so join strategy
-    // decisions survive checkpointing). The Gram-Schmidt round below
-    // joins two same-round frames, so that carried estimate is
-    // multiplied by itself every round — after tens of rounds the
-    // BigInt sizeInBytes reaches millions of bits and Catalyst's stats
-    // visitor, not execution, becomes the bottleneck. pinFresh
-    // re-wraps the checkpointed partitions in a fresh LogicalRDD with
-    // default stats: O(d·k)-row frames, conversion cost negligible,
-    // estimate growth reset to a constant per round. (The power-
-    // iteration loop above doesn't need this: its only join is against
-    // the FIXED Gramian, so its estimate grows additively.)
-    def pinFresh(d: DataFrame): DataFrame = {
-      val cp = d.localCheckpoint()
-      spark.createDataFrame(cp.rdd, cp.schema)
-    }
-    val g = gramianLongForm(df, arrCol).localCheckpoint()
-    // W = G·V for the whole k-column block: one join + one aggregation.
-    def mul(v: DataFrame): DataFrame = g
-      .join(v.select(col("dim").as("dj"), col("comp"), col("v").as("pv")), "dj")
-      .groupBy(col("di").as("dim"), col("comp"))
-      .agg(sum(col("g") * col("pv")).as("w"))
-    val comps = spark.range(1, k + 1).selectExpr("CAST(id AS INT) AS comp")
-    var v = g.select(col("di").as("dim")).distinct()
-      .crossJoin(comps)
-      .withColumn("v",
-        when(col("dim") === col("comp"), lit(1.0)).otherwise(lit(0.0)))
-    for (_ <- 1 to iters) {
-      val w = pinFresh(mul(v))
-      // Modified Gram-Schmidt, smallest comp first: u_c starts as w_c
-      // and subtracts its projection onto each previous q_j IN ORDER,
-      // each coefficient taken against the RUNNING residual
-      // (r_cj = q_j·u, u ← u − r_cj·q_j) — the stable form for k ≥ 3;
-      // identical arithmetic to CGS at k ≤ 2. Each coefficient is a
-      // 1-row aggregate crossJoined back (broadcast); frames ≤ d rows.
-      val qList = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      for (c <- 1 to k) {
-        var uc = w.where(col("comp") === c).select(col("dim"), col("w"))
-        for (j <- 0 until c - 1) {
-          val qj = qList(j).select(col("dim"), col("v"))
-          val r = qj.join(uc, "dim")
-            .agg(sum(col("v") * col("w")).as("r"))
-          uc = uc.join(qj, "dim").crossJoin(r)
-            .select(col("dim"),
-              (col("w") - col("r") * col("v")).as("w"))
-        }
-        val n = uc.agg(sqrt(sum(col("w") * col("w"))).as("n"))
-        val qc = uc.crossJoin(n)
-          .select(col("dim"), lit(c).as("comp"),
-            when(col("n") > 0, col("w") / col("n")).otherwise(lit(0.0))
-              .as("v"))
-        qList += qc
-      }
-      v = pinFresh(qList.reduce(_ unionByName _))
-    }
-    val lam = mul(v).groupBy(col("comp"))
-      .agg(sqrt(sum(col("w") * col("w"))).as("l"))
-    val wSgn = Window.partitionBy(col("comp"))
-      .orderBy(abs(col("v")).desc, col("dim"))
-    val sgn = v.withColumn("_rn", row_number().over(wSgn))
-      .where(col("_rn") === 1)
-      .select(col("comp"), when(col("v") < 0, -1.0).otherwise(1.0).as("s"))
-    v.join(sgn, "comp").join(lam, "comp")
-      .select(col("comp"), col("dim"),
-        (round(col("v") * col("s"), 6) + lit(0.0)).as("v"),
-        (round(sqrt(col("l")), 4) + lit(0.0)).as("sigma"))
+    val g = gramianMatrix(df, arrCol)
+    componentsFrame(df.sparkSession,
+      subspaceIteration(g, k, iters).map(q => (q, norm(mul(g, q)))))
   }
 
-  /** Full d×d Gramian Σxxᵀ in long form (di, dj, g), 1-based dims —
-    * per-partition imperative accumulation into a d·(d+1)/2 upper-
-    * triangle buffer, treeReduce-merged, mirrored on the driver (O(d²)
-    * driver state, same as [[fitSvd]]). This is the one place the
-    * declarative forms lose badly: a join or higher-order-function
-    * formulation was measured 30× slower at 200k×64 (Spark interprets
-    * array lambdas per element; the tight while-loop runs at memory
-    * bandwidth). mllib's `RowMatrix.computeGramianMatrix` uses the same
-    * shape.
+  /** `iters` rounds of V ← MGS(G·V) from V₀ = [e₁…e_k]: each u_c = G·v_c
+    * subtracts r·q_j for j < c in order, r = q_j·u taken against the
+    * running residual, then normalizes (zero when its norm is not
+    * positive). At k = 1 this is the power iteration.
     */
-  private def gramianLongForm(df: DataFrame, arrCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    // null arrays contribute nothing (matching the declarative long-form
-    // path, where posexplode drops them); an empty input yields an empty
-    // Gramian frame rather than a treeReduce crash
-    val partials = df.select(col(arrCol).cast("array<double>"))
+  private def subspaceIteration(g: Array[Array[Double]], k: Int,
+                                iters: Int): Seq[Array[Double]] = {
+    val d = g.length
+    var v: Seq[Array[Double]] =
+      (1 to k).map(c => Array.tabulate(d)(i => if (i + 1 == c) 1.0 else 0.0))
+    for (_ <- 1 to iters) {
+      val q = mutable.ArrayBuffer.empty[Array[Double]]
+      for (u <- v.map(mul(g, _))) {
+        for (qj <- q) {
+          val r = qj.indices.map(i => qj(i) * u(i)).sum
+          for (i <- u.indices) u(i) -= r * qj(i)
+        }
+        val n = norm(u)
+        q += u.map(x => if (n > 0) x / n else 0.0)
+      }
+      v = q.toSeq
+    }
+    v
+  }
+
+  private def mul(g: Array[Array[Double]], v: Array[Double]): Array[Double] =
+    g.map(row => row.indices.map(j => row(j) * v(j)).sum)
+
+  private def norm(w: Array[Double]): Double = math.sqrt(w.map(x => x * x).sum)
+
+  /** (comp, dim, v, sigma) from each component's unrounded vector and
+    * λ = ‖G·v‖: the vector sign-canonicalized (its largest |v| made
+    * positive, lowest dim on ties) at 6 dp, sigma = √λ at 4 dp.
+    */
+  private def componentsFrame(spark: SparkSession,
+                              comps: Seq[(Array[Double], Double)]): DataFrame = {
+    val rows = comps.zipWithIndex.flatMap { case ((v, lam), c) =>
+      val top = v.indices.foldLeft(0)((a, b) =>
+        if (java.lang.Double.compare(math.abs(v(b)), math.abs(v(a))) > 0) b
+        else a)
+      val s = if (v.nonEmpty && v(top) < 0) -1.0 else 1.0
+      v.indices.map(i => Row(c + 1, i + 1, v(i) * s, math.sqrt(lam)))
+    }
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+        StructField("comp", IntegerType, nullable = false),
+        StructField("dim", IntegerType, nullable = false),
+        StructField("_v", DoubleType), StructField("_s", DoubleType))))
+      .select(col("comp"), col("dim"),
+        (round(col("_v"), 6) + lit(0.0)).as("v"),
+        (round(col("_s"), 4) + lit(0.0)).as("sigma"))
+  }
+
+  /** The d×d Gramian Σxxᵀ over the non-null vectors of `arrCol`, on the
+    * driver (O(d²) state, same as [[fitSvd]]); 0×0 on an empty input. One
+    * pass: per-partition imperative accumulation into a d·(d+1)/2
+    * upper-triangle buffer, merged by treeAggregate. This is the one
+    * place the declarative forms lose badly: a join or higher-order-
+    * function formulation was measured 30× slower at 200k×64 (Spark
+    * interprets array lambdas per element; the tight while-loop runs at
+    * memory bandwidth). mllib's `RowMatrix.computeGramianMatrix` uses the
+    * same shape.
+    */
+  private def gramianMatrix(df: DataFrame,
+                            arrCol: String): Array[Array[Double]] = {
+    val acc = df.select(col(arrCol).cast("array<double>"))
       .where(col(arrCol).isNotNull).rdd
-      .mapPartitions { it =>
-        var acc: Array[Double] = null
-        var d = 0
-        it.foreach { r =>
+      .treeAggregate(Option.empty[(Int, Array[Double])])(
+        (acc, r) => {
           val a = r.getSeq[Double](0).toArray
-          if (acc == null) { d = a.length; acc = new Array[Double](d * (d + 1) / 2) }
+          val part = acc.orElse(
+            Some((a.length, new Array[Double](a.length * (a.length + 1) / 2))))
+          val (d, tri) = part.get
           require(a.length == d,
             s"ragged vectors: ${a.length} vs $d — Gramian undefined")
           var i = 0; var k = 0
           while (i < d) {
             val ai = a(i); var j = i
-            while (j < d) { acc(k) += ai * a(j); j += 1; k += 1 }
+            while (j < d) { tri(k) += ai * a(j); j += 1; k += 1 }
             i += 1
           }
-        }
-        if (acc == null) Iterator.empty else Iterator.single((d, acc))
-      }
-    if (partials.isEmpty())
-      return Seq.empty[(Int, Int, Double)].toDF("di", "dj", "g")
-    val (d, tri) = partials.treeReduce { case ((d1, a1), (d2, a2)) =>
-      require(d1 == d2, s"ragged vectors across partitions: $d1 vs $d2")
-      var i = 0
-      while (i < a1.length) { a1(i) += a2(i); i += 1 }
-      (d1, a1)
+          part
+        },
+        {
+          case (Some((d1, a1)), Some((d2, a2))) =>
+            require(d1 == d2, s"ragged vectors across partitions: $d1 vs $d2")
+            var i = 0
+            while (i < a1.length) { a1(i) += a2(i); i += 1 }
+            Some((d1, a1))
+          case (a, b) => a.orElse(b)
+        })
+    val (d, tri) = acc.getOrElse((0, Array.empty[Double]))
+    val g = Array.ofDim[Double](d, d)
+    var k = 0
+    for (i <- 0 until d; j <- i until d) {
+      g(i)(j) = tri(k); g(j)(i) = tri(k); k += 1
     }
-    val rows = for {
-      i <- 0 until d; j <- i until d
-      v = tri(i * d - i * (i - 1) / 2 + (j - i))
-      r <- if (i == j) Seq((i + 1, j + 1, v)) else Seq((i + 1, j + 1, v), (j + 1, i + 1, v))
-    } yield r
-    rows.toDF("di", "dj", "g")
+    g
   }
 
   /** Projection of every row onto the [[powerIterationTop]] component:

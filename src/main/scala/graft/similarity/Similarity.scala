@@ -1,10 +1,13 @@
 package graft.similarity
 
 import graft.functions.GraftFunctions._
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.mlops.ClusterOps
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 
 /** Approximate-nearest-neighbor search over embedding columns (north-star
   * extension).
@@ -221,44 +224,39 @@ object Similarity {
     * the L2 dequantization error so callers can bound recall impact.
     */
   /** Product-quantization codebooks: split the d dims into contiguous
-    * dsub-wide subspaces and train ONE multi-subspace Lloyd fit. Dims
-    * are globally numbered and disjoint across subspaces, so joining
-    * points to centers on `dim` confines every distance term to its own
-    * subspace — all m = d/dsub codebooks train in the same broadcast
-    * join + aggregate pass per round, not m sequential jobs.
-    * Deterministic seeding mirrors [[graft.mlops.ClusterOps.lloydIterations]]:
-    * the ksub lowest ids by rank seed code 0..ksub-1 in every subspace.
-    * Returns (sub, cid, dim, c) long form — m·ksub·dsub rows, eagerly
-    * checkpointed (consumers join it twice; the Lloyd chain must not
-    * re-execute per consumer) and broadcastable.
+    * dsub-wide subspaces and train ONE multi-subspace Lloyd fit
+    * ([[graft.mlops.ClusterOps.lloydFit]]): the points are packed one per
+    * (id, sub), and subspace sub's codes are the global centers
+    * sub·ksub + code. Dims are globally numbered and disjoint across
+    * subspaces, so a point's only candidates are its own subspace's
+    * codes, and all m = d/dsub codebooks train in the same one pass per
+    * round, not m sequential jobs. Deterministic seeding mirrors
+    * [[graft.mlops.ClusterOps.lloydIterations]]: the ksub lowest ids by
+    * rank seed code 0..ksub-1 in every subspace; ties go to the lowest
+    * code, and a code whose cluster empties drops out. Returns
+    * (sub, cid, dim, c) long form — m·ksub·dsub rows, a driver-built
+    * local frame, so its consumers read it without re-running the fit.
+    * At 100 TB train on a bounded deterministic sample (pass
+    * Sampling.deterministicSample's output as `emb`): codebook quality
+    * needs thousands of vectors per code, not the corpus.
     */
   def pqCodebooks(emb: DataFrame, idCol: String, arrCol: String,
                   dsub: Int, ksub: Int, iters: Int): DataFrame = {
     require(dsub >= 1 && ksub >= 1 && iters >= 1,
       s"dsub=$dsub ksub=$ksub iters=$iters must all be positive")
-    // Each Lloyd round reads the long form twice (assign + recompute);
-    // pin it once instead of re-exploding the input 2·iters times. At
-    // 100 TB train on a bounded deterministic sample (pass
-    // Sampling.deterministicSample's output as `emb`) — codebook
-    // quality needs thousands of vectors per code, not the corpus —
-    // so the pinned frame stays executor-memory-sized. localCheckpoint
-    // is acceptable by the r9 criterion BECAUSE of that sample-size
-    // contract (a lost executor re-runs a sample-scale training job,
-    // not a corpus pass).
-    val pts = pqLongForm(emb, idCol, arrCol, dsub).localCheckpoint()
-    val seedIds = pts.select(col(idCol)).distinct()
-      .orderBy(col(idCol)).limit(ksub)
-      .withColumn("cid",
-        (row_number().over(Window.orderBy(col(idCol))) - 1).cast("int"))
-    var centers = pts.join(broadcast(seedIds), idCol)
-      .select(col("sub"), col("cid"), col("dim"), col("v").as("c"))
-    for (_ <- 1 to iters) {
-      val assign = pqAssign(pts, centers, idCol)
-      centers = pts.join(assign, Seq(idCol, "sub"))
-        .groupBy(col("sub"), col("cid"), col("dim"))
-        .agg(avg(col("v")).as("c"))
+    val spark = emb.sparkSession
+    val centers = ClusterOps.lloydFit(pqLongForm(emb, idCol, arrCol, dsub),
+        Seq(idCol, "sub"), iters) { p =>
+      val rank = p.select(col(idCol)).distinct().orderBy(col(idCol))
+        .limit(ksub).collect().map(_.get(0)).zipWithIndex.toMap
+      p.where(col(idCol).isInCollection(rank.keys)).collect().toSeq.map(r =>
+        ClusterOps.Center.of(r.getAs[Int]("sub") * ksub + rank(r.get(0)), r))
     }
-    centers.localCheckpoint()
+    val rows = for (c <- centers; i <- c.dims.indices)
+      yield Row(c.cid / ksub, c.cid % ksub, c.dims(i).toInt, c.cs(i))
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("sub", IntegerType), StructField("cid", IntegerType),
+      StructField("dim", IntegerType), StructField("c", DoubleType))))
   }
 
   /** PQ codes: each vector compressed to its nearest codebook entry per
@@ -269,11 +267,10 @@ object Similarity {
     * Runs IN-ROW: the codebooks pack into one broadcast row and each
     * vector argmins per subspace with the native graft_nearest_cell
     * expression over its dsub-slice — a map-side scan at any corpus
-    * size. The long-form join alternative (still used INSIDE Lloyd
-    * training, where inputs are sample-sized and the assignment must
-    * re-join the points anyway) emits |corpus|·ksub rows through a
-    * corpus×m-keyed aggregate — the same shuffle-amplification that
-    * OOMed the coarse quantizer at stress scale. Output (id, sub, cid).
+    * size. The long-form join alternative emits |corpus|·ksub rows
+    * through a corpus×m-keyed aggregate — the same shuffle-amplification
+    * that OOMed the coarse quantizer at stress scale. Output
+    * (id, sub, cid).
     */
   def pqEncode(emb: DataFrame, idCol: String, arrCol: String,
                centers: DataFrame, dsub: Int): DataFrame = {
@@ -282,7 +279,7 @@ object Similarity {
     // rows (collect_list → empty _subs → explode drops every vector) —
     // a mis-wired input must fail here, not masquerade as an empty
     // corpus downstream. centers is codebook-sized (m·ksub·dsub rows,
-    // usually localCheckpointed), so the probe is a metadata-cost job.
+    // usually a local frame), so the probe is a metadata-cost job.
     require(!centers.isEmpty,
       "pqEncode: empty PQ codebook (centers has no rows)")
     val packed = centers
@@ -370,18 +367,8 @@ object Similarity {
     // plans/NearestCell.scala's Scaladoc (join: OOM; lambda distance:
     // ~300s; native scalar distance under a per-cell transform: ~141s;
     // this: see SCALE.md) — tie rule identical to min(struct(d2, cell)).
-    graft.plans.GraftExpressions.register(emb.sparkSession)
-    val cellsPacked = coarseLong
-      .groupBy(col(centerCol))
-      .agg(expr("transform(sort_array(collect_list(struct(dim, c))), x -> x.c)")
-        .as("cv"))
-      .agg(expr(
-        s"sort_array(collect_list(struct(CAST($centerCol AS BIGINT) AS cell," +
-          " cv)))").as("_cells"))
-    val cells = emb.crossJoin(broadcast(cellsPacked))
-      .select(col(idCol).as("neighbor_id"),
-        expr(s"graft_nearest_cell(CAST($arrCol AS ARRAY<DOUBLE>), _cells)")
-          .as(centerCol))
+    val cells = assignCells(emb, idCol, arrCol, coarseLong, centerCol, 1)
+      .select(col(idCol).as("neighbor_id"), col(centerCol))
     val codes = pqEncode(emb, idCol, arrCol, pqCenters, dsub)
       .select(col(idCol).as("neighbor_id"), col("sub"), col("cid"))
     // query side: nProbe nearest cells + ADC distance tables, one
@@ -465,20 +452,6 @@ object Similarity {
     graft.mlops.NaiveBayesOps.toLongForm(emb, Seq(idCol), arrCol)
       .withColumn("sub", ((col("dim") - 1) / dsub).cast("int"))
 
-  /** Nearest-code assignment per (row, subspace): broadcast join on dim
-    * (dims disjoint per subspace ⇒ every distance term lands in its own
-    * sub), min-struct argmin — both aggregations map-side combinable,
-    * same verdict as a row_number window without its sort exchange.
-    */
-  private def pqAssign(pts: DataFrame, centers: DataFrame,
-                       idCol: String): DataFrame =
-    pts.join(broadcast(centers.select(col("cid"), col("dim"), col("c"))), "dim")
-      .groupBy(col(idCol), col("sub"), col("cid"))
-      .agg(sum(pow(col("v") - col("c"), 2)).as("d2"))
-      .groupBy(col(idCol), col("sub"))
-      .agg(min(struct(col("d2"), col("cid"))).as("_m"))
-      .select(col(idCol), col("sub"), col("_m.cid").as("cid"))
-
   /** Centroid-cell assignment shared by the cell-gated family
     * ([[knnGraphCells]], [[cellLoadHistogram]]): (id, cell) with each
     * point in its `nProbe` nearest cells. BOTH probe settings assign
@@ -492,54 +465,34 @@ object Similarity {
   def assignCells(emb: DataFrame, idCol: String, arrCol: String,
                   centersLong: DataFrame, centerCol: String,
                   nProbe: Int = 1): DataFrame = {
-    import graft.mlops.ClusterOps
-    graft.plans.GraftExpressions.register(emb.sparkSession)
-    if (nProbe == 1) {
-      val packed = centersLong
-        .groupBy(col(centerCol))
-        .agg(expr(
-          "transform(sort_array(collect_list(struct(dim, c))), x -> x.c)")
-          .as("cv"))
-        .agg(expr(
-          s"sort_array(collect_list(struct(CAST($centerCol AS BIGINT)" +
-            " AS cell, cv)))").as("_cells"))
-      emb.crossJoin(broadcast(packed))
-        .select(col(idCol),
-          expr(s"graft_nearest_cell(CAST($arrCol AS ARRAY<DOUBLE>), _cells)")
-            .as(centerCol))
-    } else
+    if (nProbe == 1)
+      nearestCell(emb, Seq(idCol), arrCol, centersLong, centerCol)
+    else
       ClusterOps.assignToCentersTopN(emb, idCol, arrCol,
         centersLong, centerCol, nProbe)
         .select(col(idCol), col(centerCol))
+  }
+
+  /** `keep` plus each row's nearest center as `centerCol`: the native
+    * `graft_nearest_cell` argmin over [[graft.mlops.ClusterOps
+    * .packedCells]] broadcast, in one map pass (no join, no shuffle).
+    * Ties break by lowest cell id, matching the SQL oracles'
+    * ORDER BY dist2, cell.
+    */
+  private def nearestCell(emb: DataFrame, keep: Seq[String], arrCol: String,
+                          centersLong: DataFrame,
+                          centerCol: String): DataFrame = {
+    graft.plans.GraftExpressions.register(emb.sparkSession)
+    emb.crossJoin(broadcast(ClusterOps.packedCells(centersLong, centerCol)))
+      .select(keep.map(col) :+
+        expr(s"graft_nearest_cell(CAST($arrCol AS ARRAY<DOUBLE>), _cells)")
+          .as(centerCol): _*)
   }
 
   // ---- durable IVF index asset (the positional-index ladder, for
   // vectors): build ONCE into a cell-partitioned parquet asset carrying
   // its own centroids, then every ANN query partition-prunes to its
   // probed cells — the corpus embedding table is never rescanned. ----
-
-  /** In-row nearest-cell assignment keeping the vector column — the
-    * asset build's one map pass (broadcast packed centroids + the
-    * native `graft_nearest_cell` argmin; no join, no shuffle before
-    * the partitioned write). Ties break by lowest cell id, matching
-    * [[ivfTopK]]'s assignment and the SQL oracles' ORDER BY dist2, cell.
-    */
-  private def cellAssignInRow(emb: DataFrame, idCol: String,
-                              arrCol: String,
-                              centersNorm: DataFrame): DataFrame = {
-    graft.plans.GraftExpressions.register(emb.sparkSession)
-    val packed = centersNorm
-      .groupBy(col("cell"))
-      .agg(expr(
-        "transform(sort_array(collect_list(struct(dim, c))), x -> x.c)")
-        .as("cv"))
-      .agg(expr("sort_array(collect_list(struct(CAST(cell AS BIGINT)" +
-        " AS cell, cv)))").as("_cells"))
-    emb.crossJoin(broadcast(packed))
-      .select(col(idCol), col(arrCol),
-        expr(s"graft_nearest_cell(CAST($arrCol AS ARRAY<DOUBLE>), _cells)")
-          .as("cell"))
-  }
 
   private def centroidSidecarPath(path: String) = s"$path/_graft_centroids"
 
@@ -575,7 +528,8 @@ object Similarity {
     // parallelism = cell count, which grows with the corpus (centroid
     // counts scale as ~sqrt(n)); oversized cells split via
     // compactIvfIndex(maxRecordsPerFile). See writePositionalIndex.
-    cellAssignInRow(emb, idCol, arrCol, centersNorm)
+    // the asset build's one map pass, vectors kept for the write
+    nearestCell(emb, Seq(idCol, arrCol), arrCol, centersNorm, "cell")
       .repartition(col("cell"))
       .write.partitionBy("cell").mode("overwrite").parquet(path)
     // plain-text sidecar (one "cell,dim,c" line per row, Double.toString
@@ -626,7 +580,7 @@ object Similarity {
   def mergeIvfIndex(emb: DataFrame, idCol: String, arrCol: String,
                     path: String): Unit = {
     val centers = ivfIndexCentroids(emb.sparkSession, path)
-    cellAssignInRow(emb, idCol, arrCol, centers)
+    nearestCell(emb, Seq(idCol, arrCol), arrCol, centers, "cell")
       .repartition(col("cell")) // one file per cell per append
       .write.partitionBy("cell").mode("append").parquet(path)
   }
@@ -715,43 +669,42 @@ object Similarity {
     * the whole asset with the retrained centroids into a sibling tmp
     * dir and atomically swap it in ([[graft.sources.AssetMaintenance
     * .installAsset]] — readers see the old asset or the new one, never
-    * a mix). Cost contract (why the drift report gates this): `iters`+1
-    * full passes over asset+increment plus one clustered rewrite —
-    * versus [[mergeIvfIndex]]'s one pass over the increment alone; you
-    * pay it when the report says recall is already decaying. Cells
-    * that end a round empty drop out (the [[graft.mlops.ClusterOps
-    * .lloydIterations]] convention — their vectors re-home to the
-    * surviving cells' partitions).
+    * a mix). The rounds are [[graft.mlops.ClusterOps.lloydFit]]'s, with
+    * center ids the cells in ascending order, so distance ties go to the
+    * lowest cell. Cost contract (why the drift report gates this): one
+    * pass over asset+increment packs the points, each round is one pass
+    * over the persisted pack, and the rebuild reads asset+increment again
+    * for one clustered rewrite — versus [[mergeIvfIndex]]'s one pass over
+    * the increment alone; you pay it when the report says recall is
+    * already decaying. Cells that end a round empty drop out (the
+    * [[graft.mlops.ClusterOps.lloydIterations]] convention — their
+    * vectors re-home to the surviving cells' partitions).
     */
   def retrainIvfIndex(spark: org.apache.spark.sql.SparkSession,
                       path: String, increment: DataFrame, idCol: String,
                       arrCol: String, iters: Int = 1): Unit = {
-    import graft.mlops.{ClusterOps, NaiveBayesOps}
     require(iters >= 1, s"iters=$iters must be >= 1")
     val all = spark.read.parquet(path).select(col(idCol), col(arrCol))
       .unionByName(increment.select(col(idCol), col(arrCol)))
-    val allLong = NaiveBayesOps.toLongForm(all, Seq(idCol), arrCol)
-    var centers = ivfIndexCentroids(spark, path)
-    (1 to iters).foreach { _ =>
-      val assign = ClusterOps.assignToCenters(
-        allLong, centers, idCol, "cell").select(col(idCol), col("cell"))
-      centers = allLong.join(assign, idCol)
-        .groupBy(col("cell"), col("dim"))
-        .agg(avg(col("v")).as("c"))
+    // warm start: center id = the cell's ascending rank
+    val cells = ivfIndexCentroids(spark, path).collect().toSeq
+      .groupBy(_.getLong(0)).toSeq.sortBy(_._1)
+    val trained = ClusterOps.lloydFit(
+        graft.mlops.NaiveBayesOps.toLongForm(all, Seq(idCol), arrCol),
+        Seq(idCol), iters) { _ =>
+      cells.zipWithIndex.map { case ((_, rs), cid) =>
+        ClusterOps.Center(cid, rs.map(_.getInt(1).toLong).toArray,
+          rs.map(_.getDouble(2)).toArray)
+      }
     }
-    // centers feeds BOTH writeIvfIndex consumers (the sidecar collect
-    // and the assignment broadcast) and its lineage is `iters` corpus
-    // passes — materialize once, unpersist after the rebuild (the
-    // eager-action carve-out: this operator runs actions before
-    // returning, so it cleans up itself; nothing lands in Caches).
-    val trained = centers
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    trained.count()
-    try {
-      val tmp = path + ".retrain.tmp"
-      writeIvfIndex(all, idCol, arrCol, trained, "cell", tmp)
-      graft.sources.AssetMaintenance.installAsset(spark, tmp, path)
-    } finally trained.unpersist(): Unit
+    val rows = for (c <- trained; i <- c.dims.indices)
+      yield Row(cells(c.cid)._1, c.dims(i).toInt, c.cs(i))
+    val centers = spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("cell", LongType), StructField("dim", IntegerType),
+      StructField("c", DoubleType))))
+    val tmp = path + ".retrain.tmp"
+    writeIvfIndex(all, idCol, arrCol, centers, "cell", tmp)
+    graft.sources.AssetMaintenance.installAsset(spark, tmp, path)
   }
 
   /** IVF ANN against a [[writeIvfIndex]] asset: probe cells are ranked
@@ -1460,13 +1413,15 @@ object Similarity {
     * column and an unrolled SQL oracle replays it round for round.
     *
     * Scale shape: the running min-distance frame is ONE column updated
-    * map-side per round against the newly selected vector (a 1-row
-    * broadcast crossJoin — never the full selected set: the classic
-    * O(nk) trick of folding mind = least(mind, d(x, new))). Each round
-    * costs one native-l2sq map pass + one min-struct argmax aggregate
-    * (map-side combinable, no sort); `localCheckpoint` truncates the
-    * per-round lineage. Total work O(n·k·d) — linear in the corpus,
-    * never quadratic; the only driver state is the round counter.
+    * map-side per round against the newly selected vector (a literal —
+    * never the full selected set: the classic O(nk) trick of folding
+    * mind = least(mind, d(x, new))). Each round costs one min-struct
+    * argmax aggregate that returns the next selection to the driver
+    * (map-side combinable, no sort) and one native-l2sq map pass, pinned
+    * through [[graft.core.Caches.pin]] with the previous round freed.
+    * Total work O(n·k·d) — linear in the corpus, never quadratic; the
+    * driver holds the selection, at most k (id, radius) pairs and one
+    * vector.
     *
     * Returns (sel_rank, id, radius): selection order and the L2
     * distance (rounded, 6) from the selected point to its nearest
@@ -1488,41 +1443,26 @@ object Similarity {
     // silently truncate the selection
     val n = pts.count()
     require(k <= n, s"k=$k exceeds the corpus size $n")
-    val seed = pts.agg(min(col("id")).as("_sid"))
-    // sel / nextRow are ≤ k rows (metadata-scale): plain localCheckpoint
-    // is fine by the r9 criterion, and the truncation keeps the k-round
-    // union plan flat
-    var sel = pts.join(broadcast(seed), col("id") === col("_sid"))
-      .select(lit(1).as("sel_rank"), col("id"), col("_v"),
-        lit(0.0).as("_rad"))
-      .localCheckpoint()
+    val seed = pts.orderBy(col("id")).limit(1).head()
+    val sel = scala.collection.mutable.ArrayBuffer((seed.getLong(0), 0.0))
+    def dist(sv: Seq[Double]): Column =
+      graft.plans.GraftExpressions.l2sq(col("_v"), typedLit(sv))
+    def pinMind(from: DataFrame, mind: Column): graft.core.Pinned =
+      graft.core.Caches.pin(from.select(col("id"), col("_v"), mind.as("_mind")),
+        StorageLevel.DISK_ONLY)
     // cur is corpus-sized AND iterated: lineage truncation is required
-    // (the min-fold plan would nest k deep), so localCheckpoint stays —
-    // the Components loop discipline — at DISK_ONLY to keep k rounds of
+    // (the min-fold plan would nest k deep), so it is pinned — the
+    // Components loop discipline — at DISK_ONLY to keep k rounds of
     // blocks out of storage memory. Durability waiver as in Components.
-    var cur = graft.core.Caches.pin(pts
-      .crossJoin(broadcast(sel.select(col("_v").as("_sv"))))
-      .select(col("id"), col("_v"),
-        graft.plans.GraftExpressions.l2sq(col("_v"), col("_sv")).as("_mind")),
-      StorageLevel.DISK_ONLY)
-    for (r <- 2 to k) {
+    var cur = pinMind(pts, dist(seed.getSeq[Double](1)))
+    for (_ <- 2 to k) {
       // argmax mind, ties to lowest id, over not-yet-selected points
-      val next = cur.df
-        .join(sel.select(col("id")), Seq("id"), "left_anti")
-        .agg(min(struct((-col("_mind")).as("nm"), col("id").as("nid"))).as("_x"))
-        .select(col("_x.nid").as("_nid"), (-col("_x.nm")).as("_nd"))
-      val nextRow = cur.df.crossJoin(broadcast(next))
-        .where(col("id") === col("_nid"))
-        .select(lit(r).as("sel_rank"), col("id"), col("_v"),
-          col("_nd").as("_rad"))
-        .localCheckpoint()
-      sel = sel.unionByName(nextRow).localCheckpoint()
-      val folded = graft.core.Caches.pin(cur.df
-        .crossJoin(broadcast(nextRow.select(col("_v").as("_sv"))))
-        .select(col("id"), col("_v"),
-          least(col("_mind"),
-            graft.plans.GraftExpressions.l2sq(col("_v"), col("_sv")))
-            .as("_mind")), StorageLevel.DISK_ONLY)
+      val next = cur.df.where(!col("id").isInCollection(sel.map(_._1)))
+        .agg(min(struct((-col("_mind")).as("nm"), col("id"), col("_v"))))
+        .head().getStruct(0)
+      sel += ((next.getLong(1), -next.getDouble(0)))
+      val folded = pinMind(cur.df,
+        least(col("_mind"), dist(next.getSeq[Double](2))))
       // The round's checkpoint supersedes the previous one the moment it
       // is (eagerly) materialized — without this release the traversal
       // keeps k CORPUS-SIZED block sets alive at once (k=32 ⇒ 32× the
@@ -1530,13 +1470,14 @@ object Similarity {
       cur.free(blocking = false)
       cur = folded
     }
-    // sel is (eagerly) checkpointed ≤k rows — the result no longer reads
-    // pts or cur, so both release NOW instead of leaking for the session
-    // (the Curation materialize-then-unpersist discipline).
     cur.free(blocking = false)
     pts.unpersist(blocking = false)
-    sel.select(col("sel_rank"), col("id"),
-      (round(sqrt(col("_rad")), 6) + lit(0.0)).as("radius"))
+    val rows = sel.zipWithIndex.map { case ((id, rad), r) => Row(r + 1, id, rad) }
+    emb.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+        StructField("sel_rank", IntegerType, nullable = false),
+        StructField("id", LongType), StructField("_rad", DoubleType))))
+      .select(col("sel_rank"), col("id"),
+        (round(sqrt(col("_rad")), 6) + lit(0.0)).as("radius"))
   }
 
   def quantizeInt8(emb: DataFrame, idCol: String, arrCol: String): DataFrame =
