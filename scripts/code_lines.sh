@@ -1,10 +1,15 @@
 #!/usr/bin/env bash
-# Prints two counts over src/main's Scala sources, by the rule every
-# CHANGES.md entry uses: a code line is any line that is not blank and
-# does not start (after indentation) with `//`, `*` or `/*`.
+# Prints code-size and materialization-site counts over src/main's Scala
+# sources, by the rule every CHANGES.md entry uses: a code line is any
+# line that is not blank and does not start (after indentation) with
+# `//`, `*` or `/*`.
 #   code_lines       all src/main Scala code lines
-#   localCheckpoint  `.localCheckpoint(` calls on code lines outside
-#                    core/Caches.scala (the one owner of checkpoint blocks)
+# and, on code lines outside core/ (the one owner of checkpoint blocks
+# and of the round loop), the hand-placed materialization sites:
+#   localCheckpoint  raw `.localCheckpoint(` calls
+#   persist          `.persist(` calls
+#   pin              `Caches.pin(` and `Caches.pinShared(` calls
+#   track            `Caches.track(` calls
 # Usage: scripts/code_lines.sh [repo-root]
 set -euo pipefail
 cd "${1:-$(dirname "$0")/..}"
@@ -14,6 +19,10 @@ code() {
         grep -vE '^[[:space:]]*($|//|\*|/\*)' || true
 }
 
+count() { code ! -path '*/graft/core/*' | grep -oE "$1" | wc -l; }
+
 echo "code_lines $(code | wc -l)"
-echo "localCheckpoint $(code ! -path '*/core/Caches.scala' |
-    grep -o '\.localCheckpoint(' | wc -l)"
+echo "localCheckpoint $(count '\.localCheckpoint\(')"
+echo "persist $(count '\.persist\(')"
+echo "pin $(count 'Caches\.pin(Shared)?\(')"
+echo "track $(count 'Caches\.track\(')"

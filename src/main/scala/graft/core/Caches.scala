@@ -51,8 +51,8 @@ final class Pinned private[core] (val df: DataFrame, blocks: RDD[_]) {
   * action before returning, e.g. GD training or an eager index build)
   * follow the materialize-then-unpersist discipline at the call site
   * instead ([[graft.text.Curation]] scoredDisposition) and never land
-  * here; iterated checkpoints free their previous round through
-  * [[pin]] / [[Pinned.free]].
+  * here; iterated loops run on [[Rounds]], which pins each round
+  * through [[pin]] and frees the round before it.
   *
   * This object is the only code that knows where a checkpoint's blocks
   * live (the RDD behind the plan's `LogicalRDD` leaf) and how they are
@@ -94,12 +94,13 @@ object Caches {
     * this returns, and the handle frees exactly them.
     */
   def pin(df: DataFrame, level: StorageLevel): Pinned = {
-    // Label the checkpoint's job and RDDs with pin's caller, as a direct
-    // localCheckpoint call there would be, not with this line.
+    // Label the checkpoint's job and RDDs with the first caller outside
+    // core (pin's caller, or the operator running a Rounds loop), as a
+    // direct localCheckpoint call there would be, not with this line.
     val sc = df.sparkSession.sparkContext
     val saved = sc.getLocalProperty(CallSiteShort)
     new Throwable().getStackTrace
-      .find(!_.getClassName.startsWith("graft.core.Caches"))
+      .find(!_.getClassName.startsWith("graft.core."))
       .foreach(f => sc.setCallSite(
         s"localCheckpoint at ${f.getFileName}:${f.getLineNumber}"))
     val ck =
@@ -149,9 +150,4 @@ object Caches {
   def trackedCount(spark: SparkSession): Int = synchronized {
     frames.get(spark).map(_.size).getOrElse(0)
   }
-
-  /** Sessions currently holding tracked frames (diagnostics / specs) —
-    * bounded by LIVE sessions thanks to the stopped-session sweep.
-    */
-  def sessionCount: Int = synchronized { sweepStopped(); frames.size }
 }

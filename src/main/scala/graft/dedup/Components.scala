@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.core.Caches
+import graft.core.{Caches, Round, Rounds}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -20,10 +20,11 @@ import org.apache.spark.storage.StorageLevel
   * total, and the fixpoint (min reachable id) is scheme-independent.
   *
   * 100 TB notes: each round is one join + one groupBy (shuffle on node
-  * id); `localCheckpoint` truncates the lineage each round so plan size
-  * and stage retries stay O(1) instead of O(iterations) — the classic
-  * iterative-DataFrame failure mode. Convergence is detected by counting
-  * changed labels (an O(nodes) agg, not a collect). Dedup clusters are
+  * id); each round is pinned on [[graft.core.Rounds]], which truncates
+  * the lineage so plan size and stage retries stay O(1) instead of
+  * O(iterations) — the classic iterative-DataFrame failure mode.
+  * Convergence is detected by counting changed labels (an O(nodes) agg
+  * observed on the round's pin, not a collect). Dedup clusters are
   * short chains (diameter rarely exceeds single digits), so the loop is
   * bounded in practice; `maxIter` is the safety stop.
   */
@@ -183,19 +184,11 @@ object Components {
     // result from ONE groupBy over adj (both directions are present, so
     // every node is a src) — no join, and one fewer loop round. The loop
     // still runs to a zero-change fixpoint, so labels are unaffected.
-    // The round's checkpointed label frame: nothing references the
-    // previous one once the next round's checkpoint exists, but its
-    // blocks stay in storage memory until explicitly freed. At graph
-    // scale (20M+ edges → ~0.5 GB of label blocks PER ROUND) leaving
-    // ~11 rounds resident starves execution memory — the 20M-edge
-    // StressBench stage died with UNABLE_TO_ACQUIRE_MEMORY before this
-    // free.
-    var cur = Caches.pin(adj
+    val init = Caches.pin(adj
       .groupBy(col("src"))
       .agg(min(col("dst")).as("_nmin"))
       .select(col("src").as("id"),
         least(col("src"), col("_nmin")).as("comp")), labelLevel)
-    var comp = cur.df
     // One propagate-and-jump step, lazily composed: adopt the min label
     // among self and neighbors, then pointer-jump to the label's label
     // (path halving — depth of the label forest collapses geometrically).
@@ -217,37 +210,30 @@ object Components {
         .select(col("id"), col("comp"),
           least(col("half"), col("jump")).as("next"))
     }
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      // The convergence count rides the checkpoint materialization via
-      // observe(): ONE job per round instead of checkpoint + count.
-      // (Composing TWO lazy steps per barrier was measured SLOWER —
-      // 3.6s vs 2.9s on the pipeline capstone — the doubled join DAG
-      // per job costs more than the barrier it saves.)
-      val obs = org.apache.spark.sql.Observation()
-      val updated = Caches.pin(step(comp)
-        .observe(obs,
-          sum(when(col("next") < col("comp"), 1L).otherwise(0L))
-            .as("changed")), labelLevel)
-      val changed = obs.get("changed").asInstanceOf[Long]
-      comp = updated.df.select(col("id"), col("next").as("comp"))
-      // The new checkpoint is materialized (pin is eager), so the
-      // previous round's blocks are now unreachable — free them.
-      cur.free(blocking = true)
-      cur = updated
-      converged = changed == 0
-      i += 1
+    // Each round is pinned on Rounds, the round before freed: at graph
+    // scale (20M+ edges → ~0.5 GB of label blocks PER ROUND) leaving
+    // ~11 rounds resident starves execution memory — the 20M-edge
+    // StressBench stage died with UNABLE_TO_ACQUIRE_MEMORY before rounds
+    // were freed. The changed-label count rides the round's pin via
+    // observe(): ONE job per round instead of checkpoint + count.
+    // (Composing TWO lazy steps per barrier was measured SLOWER — 3.6s
+    // vs 2.9s on the pipeline capstone — the doubled join DAG per job
+    // costs more than the barrier it saves.)
+    val (comp, report) = Rounds.run(init, labelLevel, maxIter) { c =>
+      Some(Round.observed(step(c),
+        sum(when(col("next") < col("comp"), 1L).otherwise(0L)))(
+        _.select(col("id"), col("next").as("comp"))))
     }
-    if (!converged) throw new IllegalStateException(
+    if (!report.converged) throw new IllegalStateException(
       s"connectedComponents: no fixpoint after $maxIter rounds — " +
         "labels would be wrong (clusters split); raise maxIter")
-    onRounds(i) // diagnostic: rounds INCLUDING the zero-change confirm
-    // The adjacency served only the loop; the returned frame is a
-    // projection of the LAST round's checkpoint (kept resident).
+    // diagnostic: rounds INCLUDING the zero-change confirm
+    onRounds(report.rounds)
+    // The adjacency served only the loop; the returned frame is the LAST
+    // round's checkpoint (kept resident).
     adj.unpersist(blocking = true)
     adjPin.free(blocking = true)
-    comp
+    comp.df
   }
 
   /** Components over the union of `nodes` and the edge endpoints: every
@@ -348,53 +334,4 @@ object Components {
       Dedup.minhashSignatures(sh, idCol), idCol)
     dedupClusters(exact.union(near).distinct(), "id_a", "id_b")
   }
-  /** Corpus dedup over the UNION of every near-dup detector — exact md5 ∪
-    * banded MinHash ∪ Manku-blocked SimHash ∪ embedding cosine — with
-    * per-cluster provenance: `sources` lists which detectors contributed
-    * edges to each cluster (exact is certain; cosine is a judgment call —
-    * downstream filtering needs to know). `emb` rows join the doc graph
-    * by id equality (embIdCol values must share idCol's domain).
-    * Cosine edges are SemDeDup cell-gated by `centersLong`/`centerCol`
-    * (see [[Dedup.embeddingNearDupCells]]) — no entry point here builds an
-    * all-pairs plan.
-    */
-  def dedupCorpusProvenance(docs: DataFrame, idCol: String, textCol: String,
-                            emb: DataFrame, embIdCol: String, arrCol: String,
-                            centersLong: DataFrame, centerCol: String,
-                            cosineThreshold: Double = 0.9): DataFrame = {
-    val exact = Dedup.exactPairs(docs, idCol, textCol)
-      .select(col("id_a"), col("id_b"), lit("exact").as("src"))
-    // Fused signature pass — minhash + simhash from ONE corpus scan,
-    // persisted so neither consumer re-reads the corpus: the cache is one
-    // row per doc (id + 8 longs + 1 long), ~tens of GB per 10^10 docs —
-    // cheap next to a second 100 TB scan. (Without persist Catalyst
-    // prunes the aggregate per branch and scans twice.)
-    val fused = Dedup.fusedSignatures(
-      Dedup.shingles(docs, idCol, textCol), idCol, bits = 60).persist()
-    val near = Dedup.minhashCandidatesFromSignatures(fused, idCol)
-      .select(col("id_a"), col("id_b"), lit("minhash").as("src"))
-    val sim = Dedup.simhashPairsFromSignatures(fused, idCol)
-      .select(col("id_a"), col("id_b"), lit("simhash").as("src"))
-    val cos = Dedup.embeddingNearDupCells(emb, embIdCol, arrCol,
-        centersLong, centerCol, cosineThreshold)
-      .select(col("id_a"), col("id_b"), lit("cosine").as("src"))
-    val clusters = provenanceClusters(
-      exact.unionByName(near).unionByName(sim).unionByName(cos))
-    // provenanceClusters eagerly localCheckpoints the edge set, so the
-    // fused cache has served its purpose — release it rather than letting
-    // repeated calls accumulate cached signature tables for the session's
-    // lifetime
-    fused.unpersist()
-    clusters
-  }
-  /** SemDeDup end to end: cell-gated cosine pairs → components over
-    * the full universe → one survivor per semantic cluster.
-    */
-  def semanticPrune(emb: DataFrame, idCol: String, arrCol: String,
-                    centersLong: DataFrame, centerCol: String,
-                    threshold: Double, nProbe: Int = 2): DataFrame =
-    dedupClustersAll(
-      Dedup.embeddingNearDupCells(emb, idCol, arrCol,
-        centersLong, centerCol, threshold, nProbe = nProbe),
-      "id_a", "id_b", emb.select(col(idCol)), idCol)
 }

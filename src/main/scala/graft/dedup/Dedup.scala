@@ -1440,19 +1440,6 @@ object Dedup {
     val cand = minhashBandCandidates(sig, idCol)
     jaccardPairs(sh, idCol, threshold, candidates = Some(cand))
   }
-  /** Two-stage fuzzy dedup, edit-distance flavor: banded-minhash
-    * candidates verified by exact Levenshtein ratio <= maxRatio
-    * (candidate-bounded, never corpus-quadratic).
-    */
-  def editVerifiedNearDuplicates(docs: DataFrame, idCol: String,
-                                 textCol: String,
-                                 maxRatio: Double = 0.3): DataFrame = {
-    val sig = minhashSignatures(shingles(docs, idCol, textCol), idCol)
-    val cand = minhashBandCandidates(sig, idCol)
-    editVerifyPairs(cand, docs, idCol, textCol)
-      .where(col("edit_ratio") <= maxRatio)
-  }
-
   /** Exact-Levenshtein verdict columns for candidate pairs (id_a, id_b):
     * attaches both texts and emits `edit_dist` + `edit_ratio`. The
     * O(|a|·|b|) levenshtein is evaluated ONCE per pair — the ratio is
@@ -1534,8 +1521,4 @@ object Dedup {
   def bandIndex(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     bandSignatures(
       minhashSignatures(shingles(docs, idCol, textCol), idCol), idCol)
-  /** Subset-duplication pairs: |A∩B| / min(|A|,|B|) over shingles. */
-  def containmentNearDuplicates(docs: DataFrame, idCol: String,
-                                textCol: String, threshold: Double): DataFrame =
-    containmentPairs(shingles(docs, idCol, textCol), idCol, threshold)
 }

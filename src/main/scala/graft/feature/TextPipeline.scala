@@ -1,7 +1,7 @@
 package graft.feature
 
 import org.apache.spark.ml.{Pipeline, PipelineModel}
-import org.apache.spark.ml.feature.{CountVectorizer, HashingTF, IDF, Normalizer, RegexTokenizer}
+import org.apache.spark.ml.feature.{CountVectorizer, IDF, Normalizer, RegexTokenizer}
 import org.apache.spark.sql.DataFrame
 
 /** spark.ml text-vectorization pipelines — the engine's equivalent of the
@@ -14,8 +14,8 @@ import org.apache.spark.sql.DataFrame
   * vocabulary (`vocabSize`), which is the 100 TB-safe contract: driver
   * memory is O(vocabSize), never O(corpus).
   *
-  * Hash compatibility with sklearn's murmur3 is a non-goal (SURVEY §7);
-  * Spark's `HashingTF` murmur3 is documented as the engine's hash.
+  * The hashing vectorizer is the md5-bucket plan (`f3_hashing_tf`):
+  * hash compatibility with sklearn's murmur3 is a non-goal (SURVEY §7).
   */
 object TextPipeline {
 
@@ -35,22 +35,6 @@ object TextPipeline {
     new Pipeline().setStages(Array(tok, cv, idf, norm))
   }
 
-  /** Stateless hashing variant (reference `SparkHashingVectorizer`):
-    * no fitted vocabulary, fixed feature space, fit == identity — the
-    * property that made it the reference's streaming-friendly vectorizer.
-    */
-  def hashingTfidfPipeline(
-      inputCol: String = "text",
-      numFeatures: Int = 1 << 18): Pipeline = {
-    val tok = new RegexTokenizer()
-      .setInputCol(inputCol).setOutputCol("tokens")
-      .setPattern("\\s+")
-    val htf = new HashingTF()
-      .setInputCol("tokens").setOutputCol("tf").setNumFeatures(numFeatures)
-    val idf = new IDF().setInputCol("tf").setOutputCol("tfidf")
-    new Pipeline().setStages(Array(tok, htf, idf))
-  }
-
   def fitTfidf(docs: DataFrame, vocabSize: Int = 1 << 18): PipelineModel =
     tfidfPipeline(vocabSize = vocabSize).fit(docs)
 
@@ -60,9 +44,9 @@ object TextPipeline {
     * UNPARTITIONED window — a single-partition global sort over the
     * vocabulary. Fine for verification and vocabularies that fit one
     * executor (vocab size ≪ corpus size, typically ≤ millions of terms),
-    * but for the 100 TB path use [[tfidfPipeline]] /
-    * [[hashingTfidfPipeline]] (ml `CountVectorizer`/`HashingTF`), whose
-    * hash-based indices need no global sort.
+    * but for the 100 TB path use [[tfidfPipeline]] (ml
+    * `CountVectorizer`), whose vocabulary is a distributed top-k count,
+    * not a global sort.
     */
   def countVectorizeFit(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window

@@ -25,12 +25,6 @@ object GraftFunctions {
     */
   def tokens(text: Column): Column = split(text, " ")
 
-  /** First `nHex` hex chars of md5 — a string-valued hash bucket.
-    * DuckDB mirror: `substr(md5(x), 1, n)`.
-    */
-  def md5Prefix(c: Column, nHex: Int): Column =
-    substring(md5(c), 1, nHex)
-
   /** md5 prefix as an unsigned integer in [0, 16^nHex).
     * DuckDB mirror: `('0x' || substr(md5(x),1,n))::BIGINT`.
     * nHex <= 15 keeps the value inside a signed Long.
@@ -89,23 +83,4 @@ object GraftFunctions {
     transform(d, x => x / sqrt(aggregate(
       transform(d, v => v * v), lit(0.0), (acc, v) => acc + v)))
   }
-
-  /** Tight-loop dot product for PAIRWISE hot paths (candidate scoring,
-    * top-k search). Catalyst higher-order folds are not whole-stage
-    * codegen'd and re-evaluate per element through the expression
-    * interpreter — measured 25x slower than this compiled loop on the
-    * 2M-pair near-dup scan. A native Expression with doGenCode is the
-    * next step beyond this.
-    */
-  val dotUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (a: Seq[Double], b: Seq[Double]) =>
-      var s = 0.0
-      var i = 0
-      val n = a.length
-      while (i < n) { s += a(i) * b(i); i += 1 }
-      s
-    }
-
-  /** Cosine of two pre-unitized vectors (see [[unitize]]). */
-  def cosineUnit(ua: Column, ub: Column): Column = dotUdf(ua, ub)
 }

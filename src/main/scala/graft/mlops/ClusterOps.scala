@@ -1,7 +1,5 @@
 package graft.mlops
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.mllib.clustering.{KMeans => OldKMeans, KMeansModel => OldKMeansModel}
 import org.apache.spark.mllib.linalg.{Vectors => OldVectors}
 import org.apache.spark.mllib.linalg.distributed.RowMatrix
@@ -95,8 +93,8 @@ object ClusterOps {
     * from the k lowest-id points (no RNG), each round re-assigns every
     * point to its nearest center and recomputes centers as coordinate
     * means. Fixed iteration count + deterministic seeding makes the whole
-    * fit SQL-mirrorable — the oracled counterpart of the RNG-seeded
-    * `fitKMeans` (ml k-means‖).
+    * fit SQL-mirrorable — the oracled counterpart of RNG-seeded
+    * k-means‖.
     *
     * The input is read once: [[PointPack]] packs it one row per id,
     * persisted for the fit. A round is one pass over the pack: the argmin
@@ -214,17 +212,6 @@ object ClusterOps {
       val s = xs.sortBy(_._1._2)
       Center(cid, s.map(_._1._2).toArray, s.map(x => x._2(0) / x._2(1)).toArray)
     }
-  }
-
-  /** spark.ml k-means‖ over an array column (the reference's
-    * `init='k-means||'` path, now fully in-JVM).
-    */
-  def fitKMeans(df: DataFrame, arrCol: String, k: Int, seed: Long = 42L): DataFrame = {
-    val prepared = df.withColumn("features",
-      array_to_vector(col(arrCol).cast("array<double>")))
-    val model = new KMeans().setK(k).setSeed(seed).setFeaturesCol("features")
-      .fit(prepared)
-    model.transform(prepared)
   }
 
   /** mllib k-means with EXPLICIT initial centers and a fixed iteration

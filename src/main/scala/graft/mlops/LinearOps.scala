@@ -112,7 +112,7 @@ object LinearOps {
     * [[logisticGdIterations]], all blocks at once, then coefficients
     * average unweighted across blocks: the reference's one-shot merge
     * algebra, including its bias on heterogeneous blocks (the global
-    * [[fitLogistic]] stays the strictly-stronger path, as with
+    * [[fitLogisticPredictNative]] stays the strictly-stronger path, as with
     * [[blockAveragedOlsFit]]).
     *
     * The input is read once: [[PointPack]] packs it one row per
@@ -141,7 +141,8 @@ object LinearOps {
     * weights start at zero, `iters` full-batch steps of rate `lr`, no
     * intercept, no RNG — so the entire fit is SQL-expressible and
     * oracle-checkable step for step (the iterative twin of the ml
-    * L-BFGS `fitLogistic`, whose line search isn't mirrorable).
+    * L-BFGS `fitLogisticPredictNative`, whose line search isn't
+    * mirrorable).
     *
     * The input is read once: [[PointPack]] packs it one row per id with
     * the label joined in, and [[gdFit]] runs the rounds under one
@@ -455,17 +456,6 @@ object LinearOps {
         (round(slope, roundTo) + lit(0.0)).as("slope"),
         (round((col("swy") - slope * col("swx")) / col("sw"), roundTo)
           + lit(0.0)).as("intercept"))
-  }
-
-  /** spark.ml logistic regression over an Array[Float] embedding column. */
-  def fitLogistic(df: DataFrame, featuresArr: String, labelCol: String,
-                  maxIter: Int = 20): DataFrame = {
-    val prepared = df.withColumn("features",
-      array_to_vector(col(featuresArr).cast("array<double>")))
-    val model = new LogisticRegression()
-      .setMaxIter(maxIter).setLabelCol(labelCol).setFeaturesCol("features")
-      .fit(prepared)
-    model.transform(prepared)
   }
 
   /** L-BFGS fit + NATIVE-expression predict: the model's coefficients

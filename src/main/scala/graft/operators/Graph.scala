@@ -1,7 +1,9 @@
 package graft.operators
 
+import graft.core.{Caches, Round, Rounds}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Graph analytics beyond connected components (the curation-side
   * companion to [[graft.dedup.Components]]): deterministic fixed-round
@@ -17,17 +19,16 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: each round is one edges⋈ranks join + groupBy shuffled on
   * node id (the same key every round) plus one scalar aggregate for the
-  * dangling mass; `localCheckpoint` truncates lineage per round so plan
-  * size stays O(1) over iterations — the Components loop discipline.
-  * State is one rank row per node; the dangling sum is a 1-row frame,
-  * never driver-collected.
+  * dangling mass. The iterated operators here run on
+  * [[graft.core.Rounds]]: each round is pinned, which truncates lineage
+  * so plan size stays O(1) over iterations, and the round before is
+  * freed. State is one rank row per node; the dangling sum is a 1-row
+  * frame, never driver-collected.
   *
-  * Durability (r16 sweep): every checkpointed frame here is SLIM
-  * (two scalar columns per node/edge) and ITERATED — lineage
-  * truncation is the point, so these sites keep `localCheckpoint`
-  * under the r9 criterion's slim-frame carve-out; a cluster
-  * deployment wanting executor-loss recovery sets a reliable
-  * `checkpointDir` and swaps to `checkpoint()` per job.
+  * Durability: every pinned frame here is SLIM (two scalar columns per
+  * node/edge) and ITERATED — lineage truncation is the point, so these
+  * rounds keep local checkpoints under the r9 criterion's slim-frame
+  * carve-out; a lost executor loses a round's blocks.
   */
 object Graph {
 
@@ -43,19 +44,20 @@ object Graph {
                iters: Int = 6, damping: Double = 0.85): DataFrame = {
     require(iters >= 1, s"iters=$iters must be positive")
     require(damping > 0 && damping < 1, s"damping=$damping out of (0,1)")
-    val n = nodes.select(col(nodeCol).cast("long").as("id")).distinct()
-      .localCheckpoint()
+    val nPin = Caches.pin(
+      nodes.select(col(nodeCol).cast("long").as("id")).distinct(), Level)
+    val n = nPin.df
     val nTotal = n.count() // O(1) driver scalar, needed as a literal
     require(nTotal > 0, "pageRank over an empty node set")
-    val e = edges
+    val ePin = Caches.pin(edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
-      .distinct()
-      .localCheckpoint()
+      .distinct(), Level)
+    val e = ePin.df
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val eDeg = e.join(outDeg, "src").localCheckpoint()
-    var r = n.withColumn("rank", lit(1.0 / nTotal))
-    for (_ <- 1 to iters) {
+    val eDegPin = Caches.pin(e.join(outDeg, "src"), Level)
+    val eDeg = eDegPin.df
+    def next(r: DataFrame): DataFrame = {
       val contrib = eDeg
         .join(r.withColumnRenamed("id", "src"), "src")
         .groupBy(col("dst").as("id"))
@@ -63,16 +65,19 @@ object Graph {
       val dangling = r
         .join(outDeg.withColumnRenamed("src", "id"), Seq("id"), "left_anti")
         .agg(coalesce(sum(col("rank")), lit(0.0)).as("dm"))
-      r = n
-        .join(contrib, Seq("id"), "left")
+      n.join(contrib, Seq("id"), "left")
         .crossJoin(dangling) // 1-row frame
         .select(col("id"),
           (lit((1.0 - damping) / nTotal) + lit(damping) *
             (coalesce(col("in_sum"), lit(0.0)) + col("dm") / nTotal))
             .as("rank"))
-        .localCheckpoint()
     }
-    r
+    // the uniform start is lazy over n: the first round is round 0
+    val (ranks, _) = Rounds.run(
+      Caches.pin(next(n.withColumn("rank", lit(1.0 / nTotal))), Level),
+      Level, iters - 1)(r => Some(Round(next(r))))
+    Seq(nPin, ePin, eDegPin).foreach(_.free(blocking = true))
+    ranks.df
   }
 
   /** Exact triangle count (undirected): canonicalize to (lo, hi)
@@ -93,17 +98,18 @@ object Graph {
     */
   def triangleCount(edges: DataFrame, srcCol: String,
                     dstCol: String): DataFrame = {
-    val e = edges
+    // e and dir are read by the lazy result, so they are session-shared:
+    // Caches.release frees them
+    val e = Caches.pinShared(edges
       .select(least(col(srcCol), col(dstCol)).cast("long").as("lo"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("hi"))
       .where(col("lo") =!= col("hi"))
-      .distinct()
-      .localCheckpoint()
+      .distinct(), Level)
     val deg = e.select(col("lo").as("v"))
       .unionAll(e.select(col("hi").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("d"))
     // orient toward the (deg, id)-larger endpoint; carry the head's key
-    val dir = e
+    val dir = Caches.pinShared(e
       .join(deg.select(col("v").as("lo"), col("d").as("dl")), "lo")
       .join(deg.select(col("v").as("hi"), col("d").as("dh")), "hi")
       .select(
@@ -112,8 +118,7 @@ object Graph {
         when(struct(col("dl"), col("lo")) < struct(col("dh"), col("hi")),
           col("hi")).otherwise(col("lo")).as("dst"),
         when(struct(col("dl"), col("lo")) < struct(col("dh"), col("hi")),
-          col("dh")).otherwise(col("dl")).as("ddeg"))
-      .localCheckpoint()
+          col("dh")).otherwise(col("dl")).as("ddeg")), Level)
     // wedge (src; b, c) with b before c in (deg, id) order — the
     // closing edge, if present, is oriented b→c by the same order
     val wedges = dir.as("e1").join(dir.as("e2"),
@@ -144,7 +149,7 @@ object Graph {
     * Scale shape: one edges⋈labels join + two aggregates per round
     * (neighbor-label counts, then a min-struct argmax — both map-side
     * combinable, no sort exchange), shuffled on node id every round;
-    * `localCheckpoint` truncates per-round lineage. Isolated nodes
+    * each round is pinned on [[graft.core.Rounds]]. Isolated nodes
     * never appear (label sets are derived from the edge list); union
     * callers' universes in afterwards if singletons matter.
     *
@@ -153,7 +158,7 @@ object Graph {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds=$rounds must be positive")
-    val e = edges
+    val ePin = Caches.pin(edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .where(col("src") =!= col("dst"))
@@ -163,22 +168,22 @@ object Graph {
       .select(explode(array(
         struct(col("lo").as("src"), col("hi").as("dst")),
         struct(col("hi").as("src"), col("lo").as("dst")))).as("_e"))
-      .select(col("_e.src").as("src"), col("_e.dst").as("dst"))
-      .localCheckpoint()
-    var lab = e.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label"))
-      .localCheckpoint()
-    for (_ <- 1 to rounds) {
-      lab = e
+      .select(col("_e.src").as("src"), col("_e.dst").as("dst")), Level)
+    val e = ePin.df
+    val (lab, _) = Rounds.run(
+      Caches.pin(e.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("label")), Level),
+      Level, rounds) { lab =>
+      Some(Round(e
         .join(lab.select(col("id").as("dst"), col("label").as("_nl")), "dst")
         .groupBy(col("src"), col("_nl"))
         .agg(count(lit(1)).as("_c"))
         .groupBy(col("src").as("id"))
         .agg(min(struct((-col("_c")).as("nc"), col("_nl").as("nl"))).as("_m"))
-        .select(col("id"), col("_m.nl").as("label"))
-        .localCheckpoint()
+        .select(col("id"), col("_m.nl").as("label"))))
     }
-    lab
+    ePin.free(blocking = true)
+    lab.df
   }
 
   /** k-core of an undirected graph by iterative peeling (Seidman 1983;
@@ -200,11 +205,12 @@ object Graph {
     * convergence lands).
     *
     * Scale shape: each round is one degree aggregate plus two
-    * left-semi joins, all shuffled on node id — the same key every
-    * round; `localCheckpoint` truncates lineage per round (the
-    * Components loop discipline). Worst-case round count is the
-    * degeneracy peel depth, log-bounded on power-law graphs; the
-    * per-round survivor count (one scalar) is the only driver state.
+    * left joins that mark surviving endpoints, all shuffled on node
+    * id — the same key every round — and ONE job: the round is pinned
+    * on [[graft.core.Rounds]] with its peeled-edge count observed on
+    * that pin. Worst-case round count is the degeneracy peel depth,
+    * log-bounded on power-law graphs; the per-round peeled count (one
+    * scalar) is the only driver state.
     *
     * Returns (id, core_degree) for surviving nodes — their degree
     * WITHIN the core.
@@ -219,38 +225,41 @@ object Graph {
     * e.g. a pendant chain of ~2·maxRounds nodes at k=2 peels only two
     * ends per round), and the caller decides whether to re-run with a
     * deeper budget or accept the over-approximation. The flag costs
-    * nothing extra — it falls out of the loop's own edge counters.
+    * nothing extra — it is the loop's round report.
     */
   def kCoreWithStatus(edges: DataFrame, srcCol: String, dstCol: String,
                       k: Int, maxRounds: Int = 20): (DataFrame, Boolean) = {
     require(k >= 1, s"k=$k must be positive")
     require(maxRounds >= 1, s"maxRounds=$maxRounds must be positive")
-    var e = edges
+    val init = Caches.pin(edges
       .select(least(col(srcCol), col(dstCol)).cast("long").as("lo"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("hi"))
       .where(col("lo") =!= col("hi"))
-      .distinct()
-      .localCheckpoint()
-    var prevEdges = -1L
-    var curEdges = e.count()
-    var round = 0
-    while (round < maxRounds && curEdges != prevEdges && curEdges > 0) {
-      val deg = e.select(col("lo").as("v"))
+      .distinct(), Level)
+    val (e, report) = Rounds.run(init, Level, maxRounds) { e =>
+      val keep = e.select(col("lo").as("v"))
         .unionAll(e.select(col("hi").as("v")))
         .groupBy(col("v")).agg(count(lit(1)).as("d"))
-      val keep = deg.where(col("d") >= k).select(col("v")).localCheckpoint()
-      val next = e
-        .join(keep.withColumnRenamed("v", "lo"), Seq("lo"), "left_semi")
-        .join(keep.withColumnRenamed("v", "hi"), Seq("hi"), "left_semi")
-        .localCheckpoint()
-      prevEdges = curEdges
-      curEdges = next.count()
-      e = next
-      round += 1
+        .where(col("d") >= k).select(col("v"), lit(true).as("_k"))
+      val marked = e
+        .join(keep.select(col("v").as("lo"), col("_k").as("_klo")),
+          Seq("lo"), "left")
+        .join(keep.select(col("v").as("hi"), col("_k").as("_khi")),
+          Seq("hi"), "left")
+      val kept = col("_klo").isNotNull && col("_khi").isNotNull
+      // changed = edges peeled this round, 0 once none survive (an empty
+      // graph is its own fixpoint), observed on the round's pin job
+      Some(Round.observed(marked,
+        when(count(when(kept, 1)) === 0L, 0L)
+          .otherwise(count(when(!kept, 1))))(
+        _.where(kept).select(col("lo"), col("hi"))))
     }
-    val core = e.select(col("lo").as("id"))
-      .unionAll(e.select(col("hi").as("id")))
+    val core = e.df.select(col("lo").as("id"))
+      .unionAll(e.df.select(col("hi").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("core_degree"))
-    (core, curEdges == prevEdges || curEdges == 0)
+    (core, report.converged)
   }
+
+  /** Graph frames are slim (two scalar columns per node or edge). */
+  private val Level = StorageLevel.MEMORY_AND_DISK
 }

@@ -1,7 +1,7 @@
 package graft.packs
 
 import graft.QueryPack
-import graft.core.Tables
+import graft.core.{Caches, Tables}
 import graft.dedup.{Components, Dedup, SuffixRank}
 import graft.text.LineDedup
 import graft.mlops.NaiveBayesOps
@@ -173,7 +173,7 @@ object DedupQueries extends QueryPack {
     "dedup_minhash_candidates" -> ((s, dir) => {
       // shingle relation is corpus-sized → DISK_ONLY persist (r9
       // durability criterion), still materialized once for all readers
-      val sh = docShingles(s, dir).persist(StorageLevel.DISK_ONLY)
+      val sh = Caches.track(docShingles(s, dir).persist(StorageLevel.DISK_ONLY))
       val sig = Dedup.minhashSignatures(sh, "doc_id", numHashes = 8)
       val cand = Dedup.minhashBandCandidates(sig, "doc_id", rowsPerBand = 2)
       Dedup.jaccardPairs(sh, "doc_id", threshold = 0.0, candidates = Some(cand))
@@ -232,7 +232,7 @@ object DedupQueries extends QueryPack {
     "graph_pagerank" -> ((s, dir) => {
       // shingle relation is corpus-sized → DISK_ONLY persist (r9
       // durability criterion), still materialized once for all readers
-      val sh = docShingles(s, dir).persist(StorageLevel.DISK_ONLY)
+      val sh = Caches.track(docShingles(s, dir).persist(StorageLevel.DISK_ONLY))
       val cand = Dedup.minhashBandCandidates(
         Dedup.minhashSignatures(sh, "doc_id", numHashes = 8),
         "doc_id", rowsPerBand = 2)
@@ -253,7 +253,7 @@ object DedupQueries extends QueryPack {
     "graph_triangles" -> ((s, dir) => {
       // shingle relation is corpus-sized → DISK_ONLY persist (r9
       // durability criterion), still materialized once for all readers
-      val sh = docShingles(s, dir).persist(StorageLevel.DISK_ONLY)
+      val sh = Caches.track(docShingles(s, dir).persist(StorageLevel.DISK_ONLY))
       val cand = Dedup.minhashBandCandidates(
         Dedup.minhashSignatures(sh, "doc_id", numHashes = 8),
         "doc_id", rowsPerBand = 2)
@@ -318,7 +318,7 @@ object DedupQueries extends QueryPack {
     "graph_label_communities" -> ((s, dir) => {
       // shingle relation is corpus-sized → DISK_ONLY persist (r9
       // durability criterion), still materialized once for all readers
-      val sh = docShingles(s, dir).persist(StorageLevel.DISK_ONLY)
+      val sh = Caches.track(docShingles(s, dir).persist(StorageLevel.DISK_ONLY))
       val cand = Dedup.minhashBandCandidates(
         Dedup.minhashSignatures(sh, "doc_id", numHashes = 8),
         "doc_id", rowsPerBand = 2)
@@ -339,7 +339,7 @@ object DedupQueries extends QueryPack {
     "graph_kcore" -> ((s, dir) => {
       // shingle relation is corpus-sized → DISK_ONLY persist (r9
       // durability criterion), still materialized once for all readers
-      val sh = docShingles(s, dir).persist(StorageLevel.DISK_ONLY)
+      val sh = Caches.track(docShingles(s, dir).persist(StorageLevel.DISK_ONLY))
       val cand = Dedup.minhashBandCandidates(
         Dedup.minhashSignatures(sh, "doc_id", numHashes = 8),
         "doc_id", rowsPerBand = 2)
@@ -353,7 +353,7 @@ object DedupQueries extends QueryPack {
     "dedup_minhash_estimate" -> ((s, dir) => {
       // shingle relation is corpus-sized → DISK_ONLY persist (r9
       // durability criterion), still materialized once for all readers
-      val sh = docShingles(s, dir).persist(StorageLevel.DISK_ONLY)
+      val sh = Caches.track(docShingles(s, dir).persist(StorageLevel.DISK_ONLY))
       val sig = Dedup.minhashSignatures(sh, "doc_id", numHashes = 8)
       val cand = Dedup.minhashBandCandidates(sig, "doc_id", rowsPerBand = 2)
       val est = Dedup.minhashEstimate(sig, "doc_id", cand, numHashes = 8)
@@ -442,9 +442,9 @@ object DedupQueries extends QueryPack {
       // prunes the fused aggregate per consumer (minhash branch keeps the
       // 8 mins, simhash branch the 60 votes), so this degrades into two
       // pruned parallel passes — measured fastest at bench scale (1.4s vs
-      // 2.2s separate / 1.7s checkpointed). The deployment path that must
-      // not scan a 100 TB corpus twice is Components.dedupCorpusProvenance,
-      // which persists the fused output instead.
+      // 2.2s separate / 1.7s checkpointed). A deployment that must not
+      // scan a 100 TB corpus twice persists the fused output instead (one
+      // row per doc: id + 8 longs + 1 long).
       val fused = Dedup.fusedSignatures(docShingles(s, dir), "doc_id",
         numHashes = 8, bits = 60)
       val near = Dedup.minhashBandCandidates(

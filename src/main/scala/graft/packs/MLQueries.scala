@@ -548,8 +548,8 @@ object MLQueries extends QueryPack {
     // updates (setInitialModel + epsilon=0: no RNG anywhere), final
     // assignment by exact squared distance — the distributed mllib fit,
     // hash-checked against the oracle's update-for-update SQL replay
-    // (graduated from rows-only; the RNG-seeded k-means‖ path remains
-    // ClusterOps.fitKMeans). id_sum pins membership, not just sizes.
+    // (graduated from rows-only). id_sum pins membership, not just
+    // sizes.
     "ml_kmeans_sizes" -> ((s, dir) => {
       val emb = Tables(s, dir).embeddings
       val centers = NaiveBayesOps.toLongForm(emb, Seq("label"), "embedding")

@@ -81,8 +81,6 @@ object GraftExpressions {
   def l2sq(a: Column, b: Column): Column = call_function("graft_l2sq", a, b)
   def nearestCell(vec: Column, cells: Column): Column =
     call_function("graft_nearest_cell", vec, cells)
-  def nearestCells(vec: Column, cells: Column, n: Column): Column =
-    call_function("graft_nearest_cells", vec, cells, n)
   def md5SeedHashes(c: Column, n: Column): Column =
     call_function("graft_md5_seed_hashes", c, n)
   def md5PrefixLong(c: Column, n: Column): Column =

@@ -1025,10 +1025,11 @@ object Similarity {
     * queries×beam×(graph degree+1) per round. No corpus scan recurs;
     * the graph edge list (n·k rows) is the only corpus-scale relation
     * and it is touched once per round, keyed. Frontier state is
-    * batch-of-queries-sized (localCheckpoint per round: it is
-    * referenced twice per round — expansion join + union — the 2^i
-    * re-execution lesson; metadata-scale by the r9 slim-frame
-    * carve-out).
+    * batch-of-queries-sized and pinned per round on
+    * [[graft.core.Rounds]] (it is referenced twice per round —
+    * expansion join + union — the 2^i re-execution lesson;
+    * metadata-scale by the r9 slim-frame carve-out), the round before
+    * freed.
     */
   def graphSearchTopK(emb: DataFrame, queries: DataFrame, idCol: String,
                       arrCol: String, centersLong: DataFrame,
@@ -1062,24 +1063,24 @@ object Similarity {
       .withColumn("_rn", row_number().over(wBeam))
       .where(col("_rn") <= beam)
       .select(col("query_id"), col("neighbor_id"), col("_cos"))
-    var frontier = scoreAndBeam(
+    val level = StorageLevel.MEMORY_AND_DISK
+    val entry = graft.core.Caches.pin(scoreAndBeam(
       entryCell.join(cells, centerCol)
         .where(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id")))
-      .localCheckpoint()
+        .select(col("query_id"), col("neighbor_id"))), level)
     val edges = graph.select(col("src_id").as("_e_src"),
       col("neighbor_id").as("_e_dst"))
-    (1 to rounds).foreach { _ =>
-      val expanded = frontier
+    val (frontier, _) = graft.core.Rounds.run(entry, level, rounds) { cur =>
+      val expanded = cur
         .select(col("query_id"), col("neighbor_id").as("_e_src"))
         .join(edges, "_e_src")
         .select(col("query_id"), col("_e_dst").as("neighbor_id"))
         .where(col("query_id") =!= col("neighbor_id"))
-        .unionByName(frontier.select(col("query_id"), col("neighbor_id")))
+        .unionByName(cur.select(col("query_id"), col("neighbor_id")))
         .distinct()
-      frontier = scoreAndBeam(expanded).localCheckpoint()
+      Some(graft.core.Round(scoreAndBeam(expanded)))
     }
-    frontier
+    frontier.df
       .withColumn("rnk", row_number().over(wBeam))
       .where(col("rnk") <= k)
       .select(col("query_id"), col("neighbor_id"), col("rnk"),
@@ -1268,32 +1269,23 @@ object Similarity {
     * brute-force on clusterable data (Dong et al. report 90%+ recall
     * within ~5 rounds) — the quality ceiling knob for SemDeDup built
     * on the cell-gated graph. Fixed rounds keep the determinism
-    * contract; each round is pinned ([[graft.core.Caches.pin]]), which
-    * truncates the iterated lineage, and frees the round before once it
-    * has been read (the Components loop discipline).
+    * contract; the rounds run on [[graft.core.Rounds]], which pins each
+    * round (truncating the iterated lineage) and frees the round
+    * before once it has been read.
     */
   def knnRefineIterated(emb: DataFrame, idCol: String, arrCol: String,
                         graph: DataFrame, k: Int, rounds: Int,
                         maxDegree: Int = 1 << 12): DataFrame = {
     require(rounds >= 1, s"rounds=$rounds must be positive")
-    var g = graph
-    var prev: Option[graft.core.Pinned] = None
-    var r = 0
-    while (r < rounds) {
-      // iterated frame: lineage truncation is the point here (the plan
-      // would grow per round), so each round is a checkpoint — the
-      // Components loop discipline — at DISK_ONLY so the edge list is
-      // not duplicated in storage memory. Durability waiver as in
-      // Components: a reliable checkpoint dir is the cluster fix.
-      val next = graft.core.Caches.pin(
-        knnRefine(emb, idCol, arrCol, g, k, maxDegree), StorageLevel.DISK_ONLY)
-      // the pin is eager, so the round before has been read
-      prev.foreach(_.free(blocking = false))
-      prev = Some(next)
-      g = next.df
-      r += 1
-    }
-    g
+    // iterated frame: lineage truncation is the point here (the plan
+    // would grow per round), so each round is pinned at DISK_ONLY so the
+    // edge list is not duplicated in storage memory. Durability waiver
+    // as in Components: a lost executor loses a round's blocks.
+    def refine(g: DataFrame) = knnRefine(emb, idCol, arrCol, g, k, maxDegree)
+    // the caller's graph is read lazily: the first round is round 0
+    val level = StorageLevel.DISK_ONLY
+    graft.core.Rounds.run(graft.core.Caches.pin(refine(graph), level), level,
+      rounds - 1)(g => Some(graft.core.Round(refine(g))))._1.df
   }
 
   /** NN-descent with EARLY TERMINATION (the convergence knob of Dong
@@ -1333,51 +1325,37 @@ object Similarity {
     // distinct: the loop compares EDGE SETS round over round, and the
     // caller's graph may carry duplicate rows (knnRefine itself
     // dedupes internally, so the refined output is unaffected)
-    // iterated loop frames: pinned checkpoints (lineage truncation — the
-    // Components discipline) at DISK_ONLY; see knnRefineIterated's note
-    var g = graft.core.Caches.pin(
+    val init = graft.core.Caches.pin(
       graph.select(col("src_id"), col("neighbor_id")).distinct(),
       StorageLevel.DISK_ONLY)
-    var full: DataFrame = graph
-    val changed = Seq.newBuilder[Long]
-    var r = 0
-    var converged = false
-    while (r < maxRounds && !converged) {
-      val refined = graft.core.Caches.pin(
-        knnRefine(emb, idCol, arrCol, g.df, k, maxDegree), StorageLevel.DISK_ONLY)
-      full = refined.df
-      val next = refined.map(_.select(col("src_id"), col("neighbor_id")))
-      // symmetric difference AND the new-edge total in ONE driver
-      // action: tag each side, group by edge (both sides are
-      // duplicate-free, so a group size of 1 means exactly-one-side),
-      // then fold to two scalars. At 100 TB every extra action is a
-      // full pass over the checkpointed edge list per round — the
-      // previous shape (anti-join count + a second count() for the
-      // tol denominator) paid two.
-      val tagged = next.df.select(col("src_id"), col("neighbor_id"),
-          lit(1L).as("_in_next"))
-        .unionAll(g.df.select(col("src_id"), col("neighbor_id"),
-          lit(0L).as("_in_next")))
-      val scalars = tagged.groupBy(col("src_id"), col("neighbor_id"))
+    // symmetric difference AND the new-edge total in ONE driver action:
+    // tag each side, group by edge (both sides are duplicate-free, so a
+    // group size of 1 means exactly-one-side), then fold to two scalars.
+    // At 100 TB every extra action is a full pass over the pinned edge
+    // list per round — the previous shape (anti-join count + a second
+    // count() for the tol denominator) paid two.
+    def delta(prev: DataFrame, next: DataFrame): (Long, Boolean) = {
+      def edgesOf(g: DataFrame, in: Long) =
+        g.select(col("src_id"), col("neighbor_id"), lit(in).as("_in_next"))
+      val scalars = edgesOf(next, 1L).unionAll(edgesOf(prev, 0L))
+        .groupBy(col("src_id"), col("neighbor_id"))
         .agg(sum(col("_in_next")).as("_n"), count(lit(1)).as("_c"))
         .agg(
           coalesce(sum(when(col("_c") === 1L, 1L).otherwise(0L)), lit(0L))
             .as("_delta"),
           coalesce(sum(col("_n")), lit(0L)).as("_total"))
         .head()
-      val delta = scalars.getLong(0)
-      val total = scalars.getLong(1)
-      changed += delta
-      converged =
-        if (tol == 0.0) delta == 0L
-        else delta <= math.ceil(tol * total).toLong
-      // the new round and its delta action have read the previous edge
-      // set; `next` reads the returned round's blocks
-      g.free(blocking = false)
-      g = next
-      r += 1
+      val (d, total) = (scalars.getLong(0), scalars.getLong(1))
+      (d, if (tol == 0.0) d == 0L else d <= math.ceil(tol * total).toLong)
     }
-    RefineConverged(full, r, changed.result())
+    // iterated loop frames: pinned at DISK_ONLY; see knnRefineIterated's
+    // note. The test runs before the previous round is freed.
+    val (last, report) = graft.core.Rounds.run(init, StorageLevel.DISK_ONLY,
+      maxRounds) { g =>
+      Some(graft.core.Round(knnRefine(emb, idCol, arrCol, g, k, maxDegree),
+        Some(next => delta(g, next))))
+    }
+    RefineConverged(last.df, report.rounds, report.changedPerRound)
   }
 
   def knnCommunities(emb: DataFrame, idCol: String, arrCol: String,
@@ -1418,7 +1396,7 @@ object Similarity {
     * mind = least(mind, d(x, new))). Each round costs one min-struct
     * argmax aggregate that returns the next selection to the driver
     * (map-side combinable, no sort) and one native-l2sq map pass, pinned
-    * through [[graft.core.Caches.pin]] with the previous round freed.
+    * on [[graft.core.Rounds]] with the previous round freed.
     * Total work O(n·k·d) — linear in the corpus, never quadratic; the
     * driver holds the selection, at most k (id, radius) pairs and one
     * vector.
@@ -1447,30 +1425,25 @@ object Similarity {
     val sel = scala.collection.mutable.ArrayBuffer((seed.getLong(0), 0.0))
     def dist(sv: Seq[Double]): Column =
       graft.plans.GraftExpressions.l2sq(col("_v"), typedLit(sv))
-    def pinMind(from: DataFrame, mind: Column): graft.core.Pinned =
-      graft.core.Caches.pin(from.select(col("id"), col("_v"), mind.as("_mind")),
-        StorageLevel.DISK_ONLY)
-    // cur is corpus-sized AND iterated: lineage truncation is required
-    // (the min-fold plan would nest k deep), so it is pinned — the
-    // Components loop discipline — at DISK_ONLY to keep k rounds of
-    // blocks out of storage memory. Durability waiver as in Components.
-    var cur = pinMind(pts, dist(seed.getSeq[Double](1)))
-    for (_ <- 2 to k) {
+    // each round is corpus-sized AND iterated: lineage truncation is
+    // required (the min-fold plan would nest k deep), so it is pinned at
+    // DISK_ONLY on Rounds, the round before freed — without the free the
+    // traversal keeps k CORPUS-SIZED block sets alive at once (k=32 ⇒
+    // 32× the corpus on executor disks). Durability waiver as in
+    // Components.
+    val (last, _) = graft.core.Rounds.run(
+      graft.core.Caches.pin(pts.select(col("id"), col("_v"),
+        dist(seed.getSeq[Double](1)).as("_mind")), StorageLevel.DISK_ONLY),
+      StorageLevel.DISK_ONLY, k - 1) { cur =>
       // argmax mind, ties to lowest id, over not-yet-selected points
-      val next = cur.df.where(!col("id").isInCollection(sel.map(_._1)))
+      val next = cur.where(!col("id").isInCollection(sel.map(_._1)))
         .agg(min(struct((-col("_mind")).as("nm"), col("id"), col("_v"))))
         .head().getStruct(0)
       sel += ((next.getLong(1), -next.getDouble(0)))
-      val folded = pinMind(cur.df,
-        least(col("_mind"), dist(next.getSeq[Double](2))))
-      // The round's checkpoint supersedes the previous one the moment it
-      // is (eagerly) materialized — without this release the traversal
-      // keeps k CORPUS-SIZED block sets alive at once (k=32 ⇒ 32× the
-      // corpus on executor disks; the Components round discipline).
-      cur.free(blocking = false)
-      cur = folded
+      Some(graft.core.Round(cur.select(col("id"), col("_v"),
+        least(col("_mind"), dist(next.getSeq[Double](2))).as("_mind"))))
     }
-    cur.free(blocking = false)
+    last.free(blocking = false)
     pts.unpersist(blocking = false)
     val rows = sel.zipWithIndex.map { case ((id, rad), r) => Row(r + 1, id, rad) }
     emb.sparkSession.createDataFrame(rows.asJava, StructType(Seq(

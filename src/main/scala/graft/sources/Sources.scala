@@ -78,10 +78,6 @@ object Sources {
   def writeOrc(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).orc(path)
 
-  /** One string column `value` per line — the raw-corpus entry point. */
-  def readText(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path)
-
   /** Hive-style partitioned layout: one directory per partition value. */
   def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
     df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(path)

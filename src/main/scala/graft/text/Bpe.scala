@@ -1,7 +1,11 @@
 package graft.text
 
-import org.apache.spark.sql.DataFrame
+import graft.core.{Caches, Pinned, Round, Rounds}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 
 /** Distributed BPE merge learning (Sennrich et al. 2016, word-level
   * byte-pair encoding) — training the tokenizer IS a corpus-scale
@@ -10,8 +14,9 @@ import org.apache.spark.sql.functions._
   * every merge round after that runs on the VOCABULARY (pair counting
   * = explode + weighted groupBy over Σ|word| symbols; argmax = a
   * min-struct aggregate; the merge itself = an in-row greedy fold via
-  * `aggregate`, whole-stage codegen'd). Driver state is zero — the
-  * learned merge table never leaves the cluster — and every round's
+  * `aggregate`, whole-stage codegen'd). Driver state is the merge table
+  * (one best pair per round, O(merges) — model state, the
+  * ClusterOps-centers precedent) — and every round's
   * arithmetic is deterministic (ties broken lexicographically), so the
   * whole training run is SQL-oracle-able round for round.
   */
@@ -52,9 +57,10 @@ object Bpe {
   def learnMergesToVocab(docs: DataFrame, textCol: String,
                          targetVocab: Int): DataFrame = {
     val words = wordTable(docs, textCol)
-    val alphabetSize = words
+    val alphabetSize = words.df
       .select(explode(col("syms")).as("ch")).agg(countDistinct(col("ch")))
       .head().getLong(0)
+    if (targetVocab <= alphabetSize) words.free(blocking = true)
     require(targetVocab > alphabetSize,
       s"targetVocab=$targetVocab must exceed the base alphabet " +
         s"($alphabetSize symbols) — there is nothing to merge below it")
@@ -64,67 +70,60 @@ object Bpe {
   }
 
   /** Distinct-word frequency table with initial per-character symbol
-    * arrays — the one corpus-sized pass both trainers share. The RESULT
-    * is vocabulary-sized (post-aggregation, orders of magnitude below
-    * the corpus), so localCheckpoint here and on the per-round merge
-    * frames below is within the r9 durability criterion: a lost block
-    * re-runs a vocab-scale job, and the per-round truncation is what
-    * keeps the `merges`-deep fold plan flat.
+    * arrays — the one corpus-sized pass both trainers share, pinned.
+    * The RESULT is vocabulary-sized (post-aggregation, orders of
+    * magnitude below the corpus), so it and the per-round merge frames
+    * below are local checkpoints within the r9 durability criterion: a
+    * lost block re-runs a vocab-scale job, and the per-round truncation
+    * is what keeps the `merges`-deep fold plan flat.
     */
-  private def wordTable(docs: DataFrame, textCol: String): DataFrame =
-    docs
+  private def wordTable(docs: DataFrame, textCol: String): Pinned =
+    Caches.pin(docs
       .select(explode(split(col(textCol), " ")).as("w"))
       .where(length(col("w")) > 0)
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-      .select(col("cnt"), split(col("w"), "").as("syms"))
-      .localCheckpoint()
+      .select(col("cnt"), split(col("w"), "").as("syms")), Level)
 
-  private def mergeRounds(wordsIn: DataFrame, merges: Int): DataFrame = {
-    var words = wordsIn
-    // Rounds stop EARLY when the vocabulary runs out of adjacent pairs
-    // (every word a single symbol): the global argmin over an empty
-    // pairs frame is one all-null row, detected from the checkpointed
-    // 1-row best frame (an O(1) driver read, same class as the
-    // checkpoint's own action) — the merge table then simply has fewer
-    // than `merges` rows, never a null row.
-    val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var r = 1
-    var exhausted = false
-    while (r <= merges && !exhausted) {
-      val pairs = words.where(size(col("syms")) >= 2)
+  /** Runs the merge rounds on [[Rounds]] from `words` (round 0, freed
+    * once round 1 exists). Each round reads its best pair to the driver
+    * — the argmax by (count desc, pair asc) as one combinable aggregate
+    * — and folds it into every word with the pair as literals. Rounds
+    * stop EARLY when the vocabulary runs out of adjacent pairs (every
+    * word a single symbol): the global argmin over an empty pairs frame
+    * is one null row, so the merge table simply has fewer than `merges`
+    * rows, never a null row. The table is driver state, returned as a
+    * local frame.
+    */
+  private def mergeRounds(words: Pinned, merges: Int): DataFrame = {
+    val table = scala.collection.mutable.ArrayBuffer.empty[Row]
+    val (last, _) = Rounds.run(words, Level, merges) { cur =>
+      val best = cur.where(size(col("syms")) >= 2)
         .select(col("cnt"), explode(expr(
           "transform(sequence(1, size(syms) - 1), " +
             "i -> concat(element_at(syms, i), ' ', element_at(syms, i + 1)))"))
           .as("pair"))
         .groupBy(col("pair")).agg(sum(col("cnt")).as("pcnt"))
-      // argmax by (count desc, pair asc) as one combinable aggregate
-      val best = pairs
-        .agg(min(struct((-col("pcnt")).as("n"), col("pair").as("p"))).as("_m"))
-        .select(split(col("_m.p"), " ").getItem(0).as("px"),
-          split(col("_m.p"), " ").getItem(1).as("py"),
-          (-col("_m.n")).as("pcnt"))
-        .localCheckpoint()
-      if (best.head().isNullAt(0)) exhausted = true
+        .agg(min(struct((-col("pcnt")).as("n"), col("pair").as("p"))))
+        .head()
+      if (best.isNullAt(0)) None
       else {
-        words = words.crossJoin(best)
-          .select(col("cnt"), expr(
-            """aggregate(syms, cast(array() as array<string>),
-              |  (acc, s) -> CASE
-              |    WHEN size(acc) = 0 THEN array(s)
-              |    WHEN element_at(acc, -1) = px AND s = py
-              |      THEN concat(slice(acc, 1, size(acc) - 1),
-              |                  array(concat(px, py)))
-              |    ELSE concat(acc, array(s)) END)""".stripMargin).as("syms"))
-          .localCheckpoint()
-        rounds += best.select(lit(r).as("merge_round"),
-          concat(col("px"), lit(" "), col("py")).as("pair"), col("pcnt"))
-        r += 1
+        val m = best.getStruct(0)
+        val Array(px, py) = m.getString(1).split(" ", -1).take(2)
+        table += Row(table.size + 1, s"$px $py", -m.getLong(0))
+        Some(Round(foldMerges(cur, Seq((px, py)))))
       }
     }
-    require(rounds.nonEmpty,
+    last.free(blocking = true)
+    require(table.nonEmpty,
       "learnMerges: corpus has no adjacent symbol pairs at all")
-    rounds.reduce(_ unionByName _)
+    words.df.sparkSession.createDataFrame(table.asJava, StructType(Seq(
+      StructField("merge_round", IntegerType, nullable = false),
+      StructField("pair", StringType),
+      StructField("pcnt", LongType))))
   }
+
+  /** Vocabulary-scale frames: the word table and every merge round. */
+  private val Level = StorageLevel.MEMORY_AND_DISK
 
   /** Apply a LEARNED merge table to a corpus — the tokenizer's encode
     * side. `merges` (in learned priority order) is driver-held MODEL

@@ -1,7 +1,8 @@
 package graft.text
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** End-to-end crawl-curation funnel: URL gate → HTML main-content
   * extraction → quality gate → exact content dedup → survivor, emitted
@@ -293,35 +294,37 @@ object Curation {
     // Wide-form GD (r21): at 4 fixed features the long-form explode +
     // per-step join chain (weights⋈dim, margins groupBy id, errs⋈labels,
     // grad groupBy dim — ~4 shuffles per step) collapses into ONE
-    // map-side-combinable aggregation per step over the persisted scalar
-    // feature frame, weights riding a broadcast 1-row frame. The margin
-    // accumulates in the same dim order the long-form hash aggregate
-    // used (f1·w1 + f2·w2 + f3·w3 + f4·w4, left to right) and the
-    // gradient is the same avg(err·f_j), so the fit replays the
-    // identical GD the SQL oracle unrolls. The generic long-form
-    // operator ([[graft.mlops.LinearOps.logisticGdIterations]]) remains
-    // the public surface for arbitrary-dimensional fits.
-    var wRow = feats.sparkSession.range(1).select(
-      lit(0.0).as("w1"), lit(0.0).as("w2"),
-      lit(0.0).as("w3"), lit(0.0).as("w4"))
+    // map-side-combinable aggregation per step over the pinned scalar
+    // feature frame. The four weights are driver state (as in
+    // LinearOps' packed GD), so nothing is materialized per step: each
+    // step's job reads them as literals and returns the four gradients
+    // avg(err·f_j), and w_j − lr·avg_j is one double multiply and
+    // subtract on the driver. The margin accumulates in the same dim
+    // order the long-form hash aggregate used (f1·w1 + f2·w2 + f3·w3 +
+    // f4·w4, left to right) and the gradient is the same avg(err·f_j),
+    // so the fit replays the identical GD the SQL oracle unrolls. The
+    // generic long-form operator
+    // ([[graft.mlops.LinearOps.logisticGdIterations]]) remains the
+    // public surface for arbitrary-dimensional fits.
+    // an empty feature frame has no gradient: its weights are null
+    val fs = Seq("f1", "f2", "f3", "f4")
+    var w: Option[Seq[Double]] = Some(fs.map(_ => 0.0))
     (1 to iters).foreach { _ =>
-      val m = col("f1") * col("w1") + col("f2") * col("w2") +
-        col("f3") * col("w3") + col("f4") * col("w4")
-      val err = lit(1.0) / (lit(1.0) + exp(-m)) -
-        (col("url_ok") && col("quality_ok")).cast("double")
-      wRow = feats.crossJoin(broadcast(wRow))
-        .select(err.as("_err"), col("f1"), col("f2"), col("f3"),
-          col("f4"), col("w1"), col("w2"), col("w3"), col("w4"))
-        .agg(
-          (max(col("w1")) - lit(lr) * avg(col("_err") * col("f1"))).as("w1"),
-          (max(col("w2")) - lit(lr) * avg(col("_err") * col("f2"))).as("w2"),
-          (max(col("w3")) - lit(lr) * avg(col("_err") * col("f3"))).as("w3"),
-          (max(col("w4")) - lit(lr) * avg(col("_err") * col("f4"))).as("w4"))
-        // O(1)-row weight state, materialized per step: a lazy wRow
-        // nests every earlier step's aggregation over feats, so step i
-        // would re-run i corpus passes and the plan would grow per step
-        .localCheckpoint()
+      w = w.flatMap { ws =>
+        val m = fs.zip(ws).map { case (f, wj) => col(f) * lit(wj) }
+          .reduce(_ + _)
+        val err = lit(1.0) / (lit(1.0) + exp(-m)) -
+          (col("url_ok") && col("quality_ok")).cast("double")
+        val grads = fs.map(f => avg(col("_err") * col(f)))
+        val g = feats.select(err.as("_err") +: fs.map(col): _*)
+          .agg(grads.head, grads.tail: _*).head()
+        if (g.isNullAt(0)) None
+        else Some(ws.indices.map(j => ws(j) - lr * g.getDouble(j)))
+      }
     }
+    val wRow = feats.sparkSession.createDataFrame(
+      java.util.List.of(Row(w.getOrElse(fs.map(_ => null)): _*)),
+      StructType(fs.map(f => StructField(s"w${f.tail}", DoubleType))))
     // the distinct-transition score table (the deployable LM artifact):
     // the same micro-nat long the per-doc sums above weight by _ng;
     // lmMass keeps the transition's corpus mass as the top-M rank key

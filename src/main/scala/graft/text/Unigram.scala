@@ -1,9 +1,12 @@
 package graft.text
 
+import graft.core.Caches
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 
 /** SentencePiece-style UNIGRAM-LM tokenizer (Kudo 2018) — the other
   * tokenizer family a data pipeline meets next to [[Bpe]] — trained as
@@ -32,8 +35,9 @@ import org.apache.spark.sql.functions._
   * seeding, every EM round, and encoding run on the vocabulary (words
   * x <= |w|·maxPieceLen candidate rows). Encoding documents is one
   * vocabulary join (encode each distinct word once, then join docs —
-  * the [[Bpe.applyMerges]] pattern). Per-round vocab frames
-  * localCheckpoint (vocabulary-scale, the r9 slim-frame carve-out).
+  * the [[Bpe.applyMerges]] pattern). Per-round vocab frames are
+  * model state (<= alphabet + seedMultiTopK rows), collected to the
+  * driver each round; only the word table is pinned.
   */
 object Unigram {
 
@@ -78,7 +82,6 @@ object Unigram {
       .select(explode(split(col(textCol), " ")).as("w"))
       .where(length(col("w")) > 0)
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
 
   /** Per-word candidate arrays under `vocab` (piece, lp), then the
     * Viterbi fold. Output: (w, cnt, best struct).
@@ -166,14 +169,19 @@ object Unigram {
             vocabSize: Int = 4096): DataFrame = {
     require(maxPieceLen >= 2, s"maxPieceLen=$maxPieceLen must be >= 2")
     require(emRounds >= 1, s"emRounds=$emRounds must be >= 1")
-    val words = wordTable(docs, textCol)
+    // the word table is read by the seed and every EM round: pinned for
+    // the loop, freed after it
+    val words = Caches.pin(wordTable(docs, textCol),
+      StorageLevel.MEMORY_AND_DISK)
     // per-round vocab frames are <= |alphabet| + seedMultiTopK rows —
-    // model-scale; localCheckpoint per round (the Bpe discipline)
-    var vocab = seedVocab(words, maxPieceLen, seedMultiTopK)
-      .localCheckpoint()
+    // model state, collected to the driver each round as a local frame
+    def local(v: DataFrame): DataFrame =
+      v.sparkSession.createDataFrame(v.collect().toSeq.asJava, v.schema)
+    var vocab = local(seedVocab(words.df, maxPieceLen, seedMultiTopK))
     (1 to emRounds).foreach { _ =>
-      vocab = emRound(words, vocab, maxPieceLen).localCheckpoint()
+      vocab = local(emRound(words.df, vocab, maxPieceLen))
     }
+    words.free(blocking = true)
     val chars = vocab.where(length(col("piece")) === 1)
     // alphabet-scale driver read (the Bpe.learnMergesToVocab precedent)
     val nChars = chars.count()

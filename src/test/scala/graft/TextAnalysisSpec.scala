@@ -523,6 +523,50 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(converged.roundsRun >= 2)
   }
 
+  test("Rounds: iterated operators keep only the returned frame's blocks") {
+    import graft.operators.Graph
+    import graft.similarity.Similarity
+    val edges = Seq((0L, 1L), (1L, 2L), (0L, 2L), (2L, 3L), (3L, 4L),
+      (4L, 5L), (6L, 7L)).toDF("src", "dst")
+    val nodes = (0L to 8L).toDF("id")
+    def v(deg: Double) = Seq(math.cos(math.toRadians(deg)),
+      math.sin(math.toRadians(deg)))
+    val emb = Seq(0L -> v(44), 1L -> v(5), 2L -> v(20), 3L -> v(43),
+      4L -> v(47), 5L -> v(70), 6L -> v(85), 7L -> v(46))
+      .toDF("vec_id", "embedding")
+    val centers = Seq((0L, 1, 1.0), (0L, 2, 0.0), (1L, 1, 0.0), (1L, 2, 1.0))
+      .toDF("cell", "dim", "c")
+    val docs = Seq((0L, "abab abab ab banana"), (1L, "abab ab ab nab"))
+      .toDF("doc_id", "text")
+    val knn = Similarity.knnGraphCells(emb, "vec_id", "embedding", centers,
+      "cell", k = 2, nProbe = 2)
+    val ops: Seq[(String, () => DataFrame)] = Seq(
+      "pageRank" -> (() =>
+        Graph.pageRank(edges, "src", "dst", nodes, "id", iters = 4)),
+      "labelPropagation" -> (() =>
+        Graph.labelPropagation(edges, "src", "dst", rounds = 3)),
+      "kCoreWithStatus" -> (() =>
+        Graph.kCoreWithStatus(edges, "src", "dst", k = 2)._1),
+      "graphSearchTopK" -> (() => Similarity.graphSearchTopK(emb,
+        emb.where(col("vec_id").isin(0L, 7L)), "vec_id", "embedding",
+        centers, "cell", knn, k = 2, rounds = 3, beam = 4)),
+      // driver-built results: nothing of theirs stays persisted
+      "Bpe.learnMerges" -> (() =>
+        graft.text.Bpe.learnMerges(docs, "text", merges = 3)),
+      "Unigram.learn" -> (() => graft.text.Unigram.learn(docs, "text",
+        maxPieceLen = 2, seedMultiTopK = 4, emRounds = 2, vocabSize = 8)),
+      "kCenterCoreset" -> (() =>
+        Similarity.kCenterCoreset(emb, "vec_id", "embedding", k = 4)))
+    ops.foreach { case (name, op) =>
+      Caches.release(spark)
+      val before = persistedIds
+      val out = op()
+      Caches.release(spark)
+      assert(persistedIds -- before === blockIds(out), name)
+      assert(out.collect().nonEmpty, name)
+    }
+  }
+
   test("pplBuckets: thirds ordered by mean LM score, head = highest, " +
     "short docs dropped") {
     val docs = (1L to 9L).map { i =>
