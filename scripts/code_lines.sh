@@ -10,6 +10,9 @@
 #   persist          `.persist(` calls
 #   pin              `Caches.pin(` and `Caches.pinShared(` calls
 #   track            `Caches.track(` calls
+# and the DataFrame windows with no partition key (every row sorted in
+# one task):
+#   global_window    `Window.orderBy(` calls
 # Usage: scripts/code_lines.sh [repo-root]
 set -euo pipefail
 cd "${1:-$(dirname "$0")/..}"
@@ -26,3 +29,4 @@ echo "localCheckpoint $(count '\.localCheckpoint\(')"
 echo "persist $(count '\.persist\(')"
 echo "pin $(count 'Caches\.pin(Shared)?\(')"
 echo "track $(count 'Caches\.track\(')"
+echo "global_window $(count 'Window\.orderBy\(')"

@@ -1352,12 +1352,14 @@ object Dedup {
     * 40/144 pairs retained at sf0.1 with k=10 label-mean centroids. The
     * exact twin [[embeddingNearDup]] is the verification baseline.
     *
-    * Shape: one broadcast-join assignment pass, id-only pair generation
-    * per cell (16-byte structs — vectors are re-joined AFTER pair-gen so
-    * the in-row pair array stays small), then one fused-codegen cosine
-    * per candidate. `maxCell` drops degenerate cells (quadratic bombs),
-    * observable via the `embedding_cells_*` observe metric; at test
-    * scale factors it never trips, so the oracle stays exact.
+    * Shape: one assignment pass (the long-form broadcast join at
+    * nProbe = 1, the in-row [[graft.mlops.ClusterOps.assignCells]]
+    * above it), id-only pair generation per cell (16-byte structs —
+    * vectors are re-joined AFTER pair-gen so the in-row pair array stays
+    * small), then one fused-codegen cosine per candidate. `maxCell`
+    * drops degenerate cells (quadratic bombs), observable via the
+    * `embedding_cells_*` observe metric; at test scale factors it never
+    * trips, so the oracle stays exact.
     */
   def embeddingNearDupCells(emb: DataFrame, idCol: String, arrCol: String,
                             centersLong: DataFrame, centerCol: String,
@@ -1375,14 +1377,18 @@ object Dedup {
     // 40/144 single-probe — measured at sf0.1, k=10 label-mean
     // centroids; ~nProbe x cost, still Σ|cell|²-bounded, never
     // all-pairs).
+    // nProbe = 1 keeps the long-form equi-join: the in-row kernels
+    // attach their centroid table through a one-row broadcast cross
+    // join (a BroadcastNestedLoopJoin), and this detector's plan, alone
+    // and in the provenance capstone, is pinned to equi-joins only
+    // (PlanSpec "round-5 pipelines").
     val cells =
       if (nProbe == 1)
         graft.mlops.ClusterOps.assignToCenters(
           pointsLong, centersLong, idCol, centerCol)
       else
-        graft.mlops.ClusterOps.assignToCentersTopN(
+        graft.mlops.ClusterOps.assignCells(
           emb, idCol, arrCol, centersLong, centerCol, nProbe)
-          .select(col(idCol), col(centerCol))
     // Effective cap scales with nProbe: multi-probe grows every cell's
     // id list ~nProbe-fold, so a fixed cutoff would trip nProbe× earlier
     // than single-probe on the same data — and a tripped cell silently

@@ -34,6 +34,18 @@ object ClusterOps {
     * verdict a row_number window would produce, but as an aggregate it
     * gets map-side partial combine (n·k rows shrink before the shuffle)
     * and skips the Sort + Window exchange chain entirely.
+    *
+    * Dense vector columns go through [[assignCells]] /
+    * [[assignToCentersTopN]], in-row, because this form emits
+    * |points|·|centers|·d joined rows. The callers left are those whose
+    * input really is long form or who read `dist2` — `model_select`'s
+    * sparse TF-IDF points, the C1/C2 queries in `MLQueries`
+    * (`c1_kmeans_assign`, `ml_score*`),
+    * [[graft.similarity.Similarity.ivfDriftReport]]'s increment
+    * distances — and one dense site,
+    * [[graft.dedup.Dedup.embeddingNearDupCells]] at nProbe = 1: its
+    * plan is pinned to equi-joins, and the in-row kernels attach their
+    * table through a one-row broadcast nested-loop join.
     */
   def assignToCenters(pointsLong: DataFrame, centersLong: DataFrame,
                       idCol: String, centerCol: String): DataFrame = {
@@ -72,6 +84,42 @@ object ClusterOps {
         .as(Seq("_i", "_cell")))
       .select(col(idCol), col("_cell").as(centerCol),
         (col("_i") + 1).as("probe_rank"))
+  }
+
+  /** Each dense vector's `nProbe` nearest cells as (id, cell), in-row
+    * over the packed broadcast centroid table: nProbe = 1 through the
+    * native graft_nearest_cell argmin, nProbe > 1 through
+    * [[assignToCentersTopN]]. The assignment path for dense vectors
+    * (IVF search, the cell-gated kNN graph, multi-probe SemDeDup cells,
+    * the IVF asset). The long-form join it replaced emitted
+    * |corpus|·|cells|·d rows — ~65B at 500k×2048×64d, a 28-minute
+    * stage; the in-row form is seconds. Tie rule identical to
+    * min(struct(d2, cell)). `cell` is bigint. An empty centroid table
+    * or a centroid whose dim count differs from a vector's fails the
+    * task ("empty centroid table" / "dim mismatch").
+    */
+  def assignCells(emb: DataFrame, idCol: String, arrCol: String,
+                  centersLong: DataFrame, centerCol: String,
+                  nProbe: Int = 1): DataFrame =
+    if (nProbe == 1)
+      nearestCell(emb, Seq(idCol), arrCol, centersLong, centerCol)
+    else
+      assignToCentersTopN(emb, idCol, arrCol, centersLong, centerCol, nProbe)
+        .select(col(idCol), col(centerCol))
+
+  /** `keep` plus each row's nearest center as `centerCol`: the native
+    * `graft_nearest_cell` argmin over [[packedCells]] broadcast, in one
+    * map pass (no join, no shuffle). Ties break by lowest cell id,
+    * matching the SQL oracles' ORDER BY dist2, cell.
+    */
+  private[graft] def nearestCell(emb: DataFrame, keep: Seq[String],
+                                 arrCol: String, centersLong: DataFrame,
+                                 centerCol: String): DataFrame = {
+    graft.plans.GraftExpressions.register(emb.sparkSession)
+    emb.crossJoin(broadcast(packedCells(centersLong, centerCol)))
+      .select(keep.map(col) :+
+        expr(s"graft_nearest_cell(CAST($arrCol AS ARRAY<DOUBLE>), _cells)")
+          .as(centerCol): _*)
   }
 
   /** The nearest-cell kernels' broadcast table: one row whose `_cells`

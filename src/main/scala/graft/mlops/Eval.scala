@@ -3,6 +3,7 @@ package graft.mlops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Classification evaluation metrics — the measurement side a training
   * pipeline needs next to the fits (upstream sparkit-learn defers to
@@ -36,7 +37,8 @@ object Eval {
     */
   def classificationReport(df: DataFrame, labelCol: String,
                            predCol: String): DataFrame = {
-    val cm = confusion(df, labelCol, predCol).localCheckpoint()
+    val cm = graft.core.Caches.pinShared(confusion(df, labelCol, predCol),
+      StorageLevel.MEMORY_AND_DISK)
     val tp = cm.where(col("label") === col("pred"))
       .select(col("label").as("cls"), col("n").as("_tp"))
     val byLabel = cm.groupBy(col("label").as("cls"))
@@ -143,7 +145,8 @@ object Eval {
     * shared class) is defined as kappa = 1.
     */
   def cohensKappa(df: DataFrame, col1: String, col2: String): DataFrame = {
-    val cm = confusion(df, col1, col2).localCheckpoint()
+    val cm = graft.core.Caches.pinShared(confusion(df, col1, col2),
+      StorageLevel.MEMORY_AND_DISK)
     val n = cm.agg(sum(col("n")).as("_n"))
     val diag = cm.where(col("label") === col("pred"))
       .agg(coalesce(sum(col("n")), lit(0L)).as("_d"))

@@ -272,42 +272,6 @@ object LinearOps {
         col("dim").cast(pointsLong.schema("dim").dataType).as("dim"),
         col("w"))
 
-  /** Bivariate OLS with intercept, closed form: one aggregation computes
-    * the 8 sufficient statistics (n, Σx1, Σx2, Σy, Σx1², Σx1x2, Σx2²,
-    * Σx1y, Σx2y), then Cramer's rule solves the 3×3 normal equations
-    * in-row. One linear pass, O(1) driver-free state — the multivariate
-    * extension of [[olsFit]], still fully SQL-mirrorable (no matrix
-    * library, just the unrolled determinants).
-    */
-  def olsFit2(df: DataFrame, x1Col: String, x2Col: String,
-              yCol: String): DataFrame = {
-    val x1 = col(x1Col); val x2 = col(x2Col); val y = col(yCol)
-    df.agg(
-      count(lit(1)).cast("double").as("n"),
-      sum(x1).as("s1"), sum(x2).as("s2"), sum(y).as("sy"),
-      sum(x1 * x1).as("s11"), sum(x1 * x2).as("s12"), sum(x2 * x2).as("s22"),
-      sum(x1 * y).as("s1y"), sum(x2 * y).as("s2y"))
-      .select(
-        expr("""n * (s11 * s22 - s12 * s12)
-               | - s1 * (s1 * s22 - s12 * s2)
-               | + s2 * (s1 * s12 - s11 * s2)""".stripMargin).as("det"),
-        col("n"), col("s1"), col("s2"), col("sy"),
-        col("s11"), col("s12"), col("s22"), col("s1y"), col("s2y"))
-      .select(
-        round(expr("""(sy * (s11 * s22 - s12 * s12)
-                     | - s1 * (s1y * s22 - s12 * s2y)
-                     | + s2 * (s1y * s12 - s11 * s2y)) / det""".stripMargin), 6)
-          .as("b0"),
-        round(expr("""(n * (s1y * s22 - s12 * s2y)
-                     | - sy * (s1 * s22 - s12 * s2)
-                     | + s2 * (s1 * s2y - s1y * s2)) / det""".stripMargin), 6)
-          .as("b1"),
-        round(expr("""(n * (s11 * s2y - s1y * s12)
-                     | - s1 * (s1 * s2y - s1y * s2)
-                     | + sy * (s1 * s12 - s11 * s2)) / det""".stripMargin), 6)
-          .as("b2"))
-  }
-
   // --- General-d OLS: generated (d+1)×(d+1) Cramer over the normal equations ---
   //
   // The determinant expansions are GENERATED (recursive Laplace along the

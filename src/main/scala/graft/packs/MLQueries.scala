@@ -150,8 +150,8 @@ object MLQueries extends QueryPack {
     // L5: bivariate OLS closed form (Cramer over the 3×3 normal
     // equations) — price ~ quantity + discount.
     "l5_ols_bivariate" -> ((s, dir) => {
-      LinearOps.olsFit2(Tables(s, dir).lineitem,
-        "l_quantity", "l_discount", "l_extendedprice")
+      LinearOps.olsFitN(Tables(s, dir).lineitem,
+        Seq("l_quantity", "l_discount"), "l_extendedprice", roundTo = 6)
     }),
 
     // L6: trivariate OLS closed form — generated 4×4 Cramer; the oracle

@@ -2,6 +2,7 @@ package graft.similarity
 
 import graft.functions.GraftFunctions._
 import graft.mlops.ClusterOps
+import graft.operators.Relational.topKPerGroup
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -32,19 +33,42 @@ object Similarity {
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                      arrCol: String, k: Int): DataFrame = {
-    graft.plans.GraftExpressions.register(corpus.sparkSession)
     val q = queries.select(col(idCol).as("query_id"), col(arrCol).as("_q"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(arrCol).as("_c"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("_cos").desc, col("neighbor_id"))
-    q.crossJoin(c)
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("_cos", graft.plans.GraftExpressions.cosine(col("_q"), col("_c")))
-      .withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k)
+    cosineTopK(q.crossJoin(c).where(col("query_id") =!= col("neighbor_id")), k)
+  }
+
+  /** The exact-cosine ranker of every cosine search operator: `pairs`
+    * carries (query_id, neighbor_id, _q, _c), whatever join produced
+    * it; returns (query_id, neighbor_id, rnk, cos), the top `k` per
+    * query by full-precision cosine, ties to the lower neighbor id,
+    * `cos` published at 4 dp.
+    */
+  private def cosineTopK(pairs: DataFrame, k: Int): DataFrame = {
+    graft.plans.GraftExpressions.register(pairs.sparkSession)
+    topKPerGroup(pairs.withColumn("_cos",
+        graft.plans.GraftExpressions.cosine(col("_q"), col("_c"))),
+        Seq(col("query_id")), Seq(col("_cos").desc, col("neighbor_id")), k)
       .select(col("query_id"), col("neighbor_id"), col("rnk"),
         round(col("_cos"), 4).as("cos"))
   }
+
+  /** Each query's `nProbe` nearest cells as (query_id, centerCol,
+    * probe_rank), in-row ([[ClusterOps.assignToCentersTopN]]).
+    */
+  private def probeCells(queries: DataFrame, idCol: String, arrCol: String,
+                         centersLong: DataFrame, centerCol: String,
+                         nProbe: Int): DataFrame =
+    ClusterOps.assignToCentersTopN(queries, idCol, arrCol, centersLong,
+        centerCol, nProbe)
+      .select(col(idCol).as("query_id"), col(centerCol), col("probe_rank"))
+
+  /** Each corpus vector's nearest cell as (neighbor_id, centerCol). */
+  private def corpusCells(emb: DataFrame, idCol: String, arrCol: String,
+                          centersLong: DataFrame,
+                          centerCol: String): DataFrame =
+    ClusterOps.assignCells(emb, idCol, arrCol, centersLong, centerCol)
+      .select(col(idCol).as("neighbor_id"), col(centerCol))
 
   /** IVF (inverted-file) ANN: partition the corpus into cells by nearest
     * centroid; a query probes only its `nProbe` closest cells and ranks
@@ -59,39 +83,16 @@ object Similarity {
   def ivfTopK(emb: DataFrame, queries: DataFrame, idCol: String,
               arrCol: String, centersLong: DataFrame, centerCol: String,
               nProbe: Int, k: Int): DataFrame = {
-    import graft.mlops.{ClusterOps, NaiveBayesOps}
-    graft.plans.GraftExpressions.register(emb.sparkSession)
-    // build: corpus cell assignment (argmin over centroids)
-    val cells = ClusterOps.assignToCenters(
-      NaiveBayesOps.toLongForm(emb, Seq(idCol), arrCol),
-      centersLong, idCol, centerCol)
-      .select(col(idCol).as("neighbor_id"), col(centerCol))
-    // search: nProbe nearest cells per query
-    val qLong = NaiveBayesOps.toLongForm(queries, Seq(idCol), arrCol)
-    val qDists = qLong.join(broadcast(centersLong), "dim")
-      .groupBy(col(idCol), col(centerCol))
-      .agg(sum(pow(col("v") - col("c"), 2)).as("qdist"))
-    val wProbe = Window.partitionBy(col(idCol))
-      .orderBy(col("qdist").asc, col(centerCol))
-    val probes = qDists
-      .withColumn("_pr", row_number().over(wProbe))
-      .where(col("_pr") <= nProbe)
-      .select(col(idCol).as("query_id"), col(centerCol))
-    // candidates: vectors in probed cells; exact cosine re-rank
-    val cand = probes.join(cells, centerCol)
+    // build: corpus cell assignment; search: nProbe nearest cells per
+    // query; candidates: vectors in probed cells, exact cosine re-rank
+    val cells = corpusCells(emb, idCol, arrCol, centersLong, centerCol)
+    val cand = probeCells(queries, idCol, arrCol, centersLong, centerCol,
+        nProbe)
+      .join(cells, centerCol)
       .where(col("query_id") =!= col("neighbor_id"))
     val qU = queries.select(col(idCol).as("query_id"), col(arrCol).as("_q"))
     val cU = emb.select(col(idCol).as("neighbor_id"), col(arrCol).as("_c"))
-    val wK = Window.partitionBy(col("query_id"))
-      .orderBy(col("_cos").desc, col("neighbor_id"))
-    cand
-      .join(qU, "query_id")
-      .join(cU, "neighbor_id")
-      .withColumn("_cos", graft.plans.GraftExpressions.cosine(col("_q"), col("_c")))
-      .withColumn("rnk", row_number().over(wK))
-      .where(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"),
-        round(col("_cos"), 4).as("cos"))
+    cosineTopK(cand.join(qU, "query_id").join(cU, "neighbor_id"), k)
   }
 
   /** [[ivfTopK]] with an exhaustive-fallback guarantee (the production
@@ -110,51 +111,31 @@ object Similarity {
                       arrCol: String, centersLong: DataFrame,
                       centerCol: String, nProbe: Int, k: Int,
                       minCand: Int): DataFrame = {
-    import graft.mlops.{ClusterOps, NaiveBayesOps}
-    graft.plans.GraftExpressions.register(emb.sparkSession)
-    val cells = ClusterOps.assignToCenters(
-      NaiveBayesOps.toLongForm(emb, Seq(idCol), arrCol),
-      centersLong, idCol, centerCol)
-      .select(col(idCol).as("neighbor_id"), col(centerCol))
-    val qLong = NaiveBayesOps.toLongForm(queries, Seq(idCol), arrCol)
-    val qDists = qLong.join(broadcast(centersLong), "dim")
-      .groupBy(col(idCol), col(centerCol))
-      .agg(sum(pow(col("v") - col("c"), 2)).as("qdist"))
-    val wProbe = Window.partitionBy(col(idCol))
-      .orderBy(col("qdist").asc, col(centerCol))
-    val probes = qDists
-      .withColumn("_pr", row_number().over(wProbe))
-      .where(col("_pr") <= nProbe)
-      .select(col(idCol).as("query_id"), col(centerCol))
-    val cand = graft.core.Caches.track(probes.join(cells, centerCol)
+    val cells = corpusCells(emb, idCol, arrCol, centersLong, centerCol)
+    val cand = graft.core.Caches.track(probeCells(queries, idCol, arrCol,
+        centersLong, centerCol, nProbe)
+      .join(cells, centerCol)
       .where(col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"))
       // feeds the gate AND the gated branch; workload-sized (queries ×
       // probed candidates), so DISK_ONLY persist per the r9 durability
       // criterion — lineage stays, a lost block recomputes from the scan.
       // Session-tracked: the result is lazy, release at job boundaries.
       .persist(StorageLevel.DISK_ONLY))
-    // the gate: queries under minCand probed candidates fall back
-    val under = queries.select(col(idCol).as("query_id"))
-      .join(cand.groupBy(col("query_id")).agg(count(lit(1)).as("_nc")),
-        Seq("query_id"), "left")
-      .where(coalesce(col("_nc"), lit(0L)) < minCand)
-      .select(col("query_id"))
-      // tiny: one row per falling-back query — localCheckpoint is safe
-      // here by the r9 criterion (metadata-scale, trivially re-run)
-      .localCheckpoint()
+    // the gate: queries under minCand probed candidates fall back.
+    // Tiny (one row per falling-back query) and read by both branches
+    // of the lazy result: a shared pin, freed at the next release.
+    val under = graft.core.Caches.pinShared(
+      queries.select(col(idCol).as("query_id"))
+        .join(cand.groupBy(col("query_id")).agg(count(lit(1)).as("_nc")),
+          Seq("query_id"), "left")
+        .where(coalesce(col("_nc"), lit(0L)) < minCand)
+        .select(col("query_id")), StorageLevel.MEMORY_AND_DISK)
     val qU = queries.select(col(idCol).as("query_id"), col(arrCol).as("_q"))
     val cU = emb.select(col(idCol).as("neighbor_id"), col(arrCol).as("_c"))
-    val wK = Window.partitionBy(col("query_id"))
-      .orderBy(col("_cos").desc, col("neighbor_id"))
-    def rank(pairs: DataFrame, fellBack: Boolean): DataFrame = pairs
-      .join(qU, "query_id")
-      .join(cU, "neighbor_id")
-      .withColumn("_cos",
-        graft.plans.GraftExpressions.cosine(col("_q"), col("_c")))
-      .withColumn("rnk", row_number().over(wK))
-      .where(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"),
-        round(col("_cos"), 4).as("cos"), lit(fellBack).as("fell_back"))
+    def rank(pairs: DataFrame, fellBack: Boolean): DataFrame =
+      cosineTopK(pairs.join(qU, "query_id").join(cU, "neighbor_id"), k)
+        .withColumn("fell_back", lit(fellBack))
     val gated = rank(
       cand.join(under, Seq("query_id"), "left_anti")
         .select(col("query_id"), col("neighbor_id")), fellBack = false)
@@ -199,20 +180,12 @@ object Similarity {
     */
   def lshTopK(emb: DataFrame, queries: DataFrame, idCol: String,
               arrCol: String, k: Int, nBits: Int = 8): DataFrame = {
-    graft.plans.GraftExpressions.register(emb.sparkSession)
     val c = signBuckets(emb, idCol, arrCol, nBits)
       .select(col(idCol).as("neighbor_id"), col("bucket"), col("_v").as("_c"))
     val q = signBuckets(queries, idCol, arrCol, nBits)
       .select(col(idCol).as("query_id"), col("bucket"), col("_v").as("_q"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("_cos").desc, col("neighbor_id"))
-    q.join(c, "bucket")
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("_cos", graft.plans.GraftExpressions.cosine(col("_q"), col("_c")))
-      .withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"),
-        round(col("_cos"), 4).as("cos"))
+    cosineTopK(q.join(c, "bucket")
+      .where(col("query_id") =!= col("neighbor_id")), k)
   }
 
   /** Symmetric per-vector int8 quantization: scale = max|v| / 127,
@@ -322,21 +295,34 @@ object Similarity {
     // here keeps the operator self-contained.
     val codes = pqEncode(emb, idCol, arrCol, centers, dsub)
       .select(col(idCol).as("neighbor_id"), col("sub"), col("cid"))
-    val dt = pqLongForm(queries, idCol, arrCol, dsub)
+    adcTopK(codes.join(
+        broadcast(adcTable(queries, idCol, arrCol, centers, dsub)),
+        Seq("sub", "cid"))
+      .where(col("query_id") =!= col("neighbor_id")), k)
+  }
+
+  /** The query side of ADC: (query_id, sub, cid, pd), each query's
+    * squared distance to every code of every subspace — |queries|·m·ksub
+    * rows, broadcast by both ADC rankers.
+    */
+  private def adcTable(queries: DataFrame, idCol: String, arrCol: String,
+                       centers: DataFrame, dsub: Int): DataFrame =
+    pqLongForm(queries, idCol, arrCol, dsub)
       .join(broadcast(centers.select(col("cid"), col("dim"), col("c"))), "dim")
       .groupBy(col(idCol).as("query_id"), col("sub"), col("cid"))
       .agg(sum(pow(col("v") - col("c"), 2)).as("pd"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist2"), col("neighbor_id"))
-    codes.join(broadcast(dt), Seq("sub", "cid"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg((round(sum(col("pd")), 4) + lit(0.0)).as("adist2"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"),
-        col("adist2"))
-  }
+
+  /** The ADC ranker of [[pqTopK]] and [[ivfPqTopK]]: `scored` carries
+    * one (query_id, neighbor_id, pd) row per candidate subspace code,
+    * whatever join produced it; returns (query_id, neighbor_id, rnk,
+    * adist2), the top `k` per query by the PUBLISHED (4-dp rounded)
+    * distance Σ pd, ties to the lower neighbor id.
+    */
+  private def adcTopK(scored: DataFrame, k: Int): DataFrame =
+    topKPerGroup(scored.groupBy(col("query_id"), col("neighbor_id"))
+        .agg((round(sum(col("pd")), 4) + lit(0.0)).as("adist2")),
+        Seq(col("query_id")), Seq(col("adist2"), col("neighbor_id")), k)
+      .select(col("query_id"), col("neighbor_id"), col("rnk"), col("adist2"))
 
   /** IVF+PQ — the two indexes composed the way FAISS's IVFPQ composes
     * them: the coarse quantizer GATES (each query probes its nProbe
@@ -367,45 +353,17 @@ object Similarity {
     // plans/NearestCell.scala's Scaladoc (join: OOM; lambda distance:
     // ~300s; native scalar distance under a per-cell transform: ~141s;
     // this: see SCALE.md) — tie rule identical to min(struct(d2, cell)).
-    val cells = assignCells(emb, idCol, arrCol, coarseLong, centerCol, 1)
-      .select(col(idCol).as("neighbor_id"), col(centerCol))
+    val cells = corpusCells(emb, idCol, arrCol, coarseLong, centerCol)
     val codes = pqEncode(emb, idCol, arrCol, pqCenters, dsub)
       .select(col(idCol).as("neighbor_id"), col("sub"), col("cid"))
-    // query side: nProbe nearest cells + ADC distance tables, one
-    // explode. Re-read twice (cell probes + distance tables) and sized
-    // by the query workload — which in self-query/backfill runs IS the
-    // corpus — so DISK_ONLY persist per the r9 durability criterion.
-    val qLong = graft.core.Caches.track(
-      pqLongForm(queries, idCol, arrCol, dsub)
-        .persist(StorageLevel.DISK_ONLY))
-    val qDists = qLong
-      .join(broadcast(coarseLong.select(col(centerCol), col("dim"), col("c"))),
-        "dim")
-      .groupBy(col(idCol), col(centerCol))
-      .agg(sum(pow(col("v") - col("c"), 2)).as("qdist"))
-    val wProbe = Window.partitionBy(col(idCol))
-      .orderBy(col("qdist").asc, col(centerCol))
-    val probes = qDists
-      .withColumn("_pr", row_number().over(wProbe))
-      .where(col("_pr") <= nProbe)
-      .select(col(idCol).as("query_id"), col(centerCol))
-    val dt = qLong
-      .join(broadcast(pqCenters.select(col("cid"), col("dim"), col("c"))),
-        "dim")
-      .groupBy(col(idCol).as("query_id"), col("sub"), col("cid"))
-      .agg(sum(pow(col("v") - col("c"), 2)).as("pd"))
-    // gate first, then rank codes-only (same rounded-tie rule as pqTopK)
-    val wK = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist2"), col("neighbor_id"))
-    probes.join(cells, centerCol)
+    // query side: nProbe nearest cells (in-row, as the corpus side) and
+    // the ADC distance tables; gate first, then rank codes-only
+    adcTopK(probeCells(queries, idCol, arrCol, coarseLong, centerCol, nProbe)
+      .join(cells, centerCol)
       .where(col("query_id") =!= col("neighbor_id"))
       .join(codes, "neighbor_id")
-      .join(broadcast(dt), Seq("query_id", "sub", "cid"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg((round(sum(col("pd")), 4) + lit(0.0)).as("adist2"))
-      .withColumn("rnk", row_number().over(wK))
-      .where(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"), col("adist2"))
+      .join(broadcast(adcTable(queries, idCol, arrCol, pqCenters, dsub)),
+        Seq("query_id", "sub", "cid")), k)
   }
 
   /** Two-stage IVF+PQ ranker — the production search shape (FAISS's
@@ -432,17 +390,14 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"))
     val qU = queries.select(col(idCol).as("query_id"), col(arrCol).as("_q"))
     val cU = emb.select(col(idCol).as("neighbor_id"), col(arrCol).as("_c"))
-    val wK = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist2"), col("neighbor_id"))
-    adcTop
-      .join(qU, "query_id")
-      .join(cU, "neighbor_id")
-      .withColumn("dist2",
-        round(graft.plans.GraftExpressions.l2sq(
-          col("_q").cast("array<double>"), col("_c").cast("array<double>")),
-          4) + lit(0.0))
-      .withColumn("rnk", row_number().over(wK))
-      .where(col("rnk") <= k)
+    topKPerGroup(adcTop
+        .join(qU, "query_id")
+        .join(cU, "neighbor_id")
+        .withColumn("dist2",
+          round(graft.plans.GraftExpressions.l2sq(
+            col("_q").cast("array<double>"), col("_c").cast("array<double>")),
+            4) + lit(0.0)),
+        Seq(col("query_id")), Seq(col("dist2"), col("neighbor_id")), k)
       .select(col("query_id"), col("neighbor_id"), col("rnk"), col("dist2"))
   }
 
@@ -451,43 +406,6 @@ object Similarity {
                          dsub: Int): DataFrame =
     graft.mlops.NaiveBayesOps.toLongForm(emb, Seq(idCol), arrCol)
       .withColumn("sub", ((col("dim") - 1) / dsub).cast("int"))
-
-  /** Centroid-cell assignment shared by the cell-gated family
-    * ([[knnGraphCells]], [[cellLoadHistogram]]): (id, cell) with each
-    * point in its `nProbe` nearest cells. BOTH probe settings assign
-    * IN-ROW over the packed broadcast centroid table: nProbe=1 via the
-    * native graft_nearest_cell argmin, nProbe>1 via the
-    * graft_nearest_cells top-N (the long-form join it replaced emitted
-    * |corpus|·|cells|·d rows — ~65B at 500k×2048×64d, a 28-minute
-    * stage; the in-row form is seconds). Tie rule identical to
-    * min(struct(d2, cell)).
-    */
-  def assignCells(emb: DataFrame, idCol: String, arrCol: String,
-                  centersLong: DataFrame, centerCol: String,
-                  nProbe: Int = 1): DataFrame = {
-    if (nProbe == 1)
-      nearestCell(emb, Seq(idCol), arrCol, centersLong, centerCol)
-    else
-      ClusterOps.assignToCentersTopN(emb, idCol, arrCol,
-        centersLong, centerCol, nProbe)
-        .select(col(idCol), col(centerCol))
-  }
-
-  /** `keep` plus each row's nearest center as `centerCol`: the native
-    * `graft_nearest_cell` argmin over [[graft.mlops.ClusterOps
-    * .packedCells]] broadcast, in one map pass (no join, no shuffle).
-    * Ties break by lowest cell id, matching the SQL oracles'
-    * ORDER BY dist2, cell.
-    */
-  private def nearestCell(emb: DataFrame, keep: Seq[String], arrCol: String,
-                          centersLong: DataFrame,
-                          centerCol: String): DataFrame = {
-    graft.plans.GraftExpressions.register(emb.sparkSession)
-    emb.crossJoin(broadcast(ClusterOps.packedCells(centersLong, centerCol)))
-      .select(keep.map(col) :+
-        expr(s"graft_nearest_cell(CAST($arrCol AS ARRAY<DOUBLE>), _cells)")
-          .as(centerCol): _*)
-  }
 
   // ---- durable IVF index asset (the positional-index ladder, for
   // vectors): build ONCE into a cell-partitioned parquet asset carrying
@@ -505,17 +423,9 @@ object Similarity {
     * prune to the wrong partitions and silently return low-recall
     * results. Sidecar written AFTER the data commit — a failed build
     * never leaves metadata pointing at a partial table. `centersLong`
-    * is the usual (centerCol, dim, c) long form.
-    *
-    * Floating-point near-tie caveat: the build assigns cells with the
-    * in-row `graft_nearest_cell` kernel (dim-ordered summation — the
-    * scale path: one broadcast, no |corpus|·|cells|·d explode), while
-    * [[ivfTopK]]'s build side sums the long form through an unordered
-    * hash aggregate. The two orderings agree except when a vector is
-    * an exact fp near-tie between two cells, where associativity can
-    * flip the argmin — so "identical results to ivfTopK" holds up to
-    * that measure-zero tie set (none exist in the oracle fixtures;
-    * both paths are pinned to one DuckDB oracle at two SFs).
+    * is the usual (centerCol, dim, c) long form. The build assigns
+    * cells with [[ClusterOps.assignCells]]' in-row kernel, the one
+    * [[ivfTopK]] uses, so the asset's cells are exactly ivfTopK's.
     */
   def writeIvfIndex(emb: DataFrame, idCol: String, arrCol: String,
                     centersLong: DataFrame, centerCol: String,
@@ -529,7 +439,8 @@ object Similarity {
     // counts scale as ~sqrt(n)); oversized cells split via
     // compactIvfIndex(maxRecordsPerFile). See writePositionalIndex.
     // the asset build's one map pass, vectors kept for the write
-    nearestCell(emb, Seq(idCol, arrCol), arrCol, centersNorm, "cell")
+    ClusterOps.nearestCell(emb, Seq(idCol, arrCol), arrCol, centersNorm,
+        "cell")
       .repartition(col("cell"))
       .write.partitionBy("cell").mode("overwrite").parquet(path)
     // plain-text sidecar (one "cell,dim,c" line per row, Double.toString
@@ -580,7 +491,7 @@ object Similarity {
   def mergeIvfIndex(emb: DataFrame, idCol: String, arrCol: String,
                     path: String): Unit = {
     val centers = ivfIndexCentroids(emb.sparkSession, path)
-    nearestCell(emb, Seq(idCol, arrCol), arrCol, centers, "cell")
+    ClusterOps.nearestCell(emb, Seq(idCol, arrCol), arrCol, centers, "cell")
       .repartition(col("cell")) // one file per cell per append
       .write.partitionBy("cell").mode("append").parquet(path)
   }
@@ -714,35 +625,26 @@ object Similarity {
     * the corpus or the query count) and pushed as partition filters, so
     * the scan reads only the probed cells' partitions. Exact cosine
     * re-rank within candidates — identical results to [[ivfTopK]] with
-    * the same centroids/nProbe/k by construction (shared oracle), up to
-    * floating-point associativity of the two assignment kernels (see
-    * the [[writeIvfIndex]] near-tie caveat).
+    * the same centroids/nProbe/k by construction (shared oracle): the
+    * asset's cells and the probes come from the same in-row kernels.
     *
-    * The probes frame is persisted before the driver-side distinct-cell
-    * collect: it is consumed twice (the collect AND the candidate
-    * join), and for self-query/backfill workloads where `queries` is
-    * corpus-sized an unpersisted subtree would run the qDists aggregate
-    * and probe window twice — a second corpus-scale pass for nothing.
-    * Tracked in [[graft.core.Caches]] (the result is lazy, so the
-    * operator cannot unpersist before returning).
+    * The probes frame (in-row, [[ClusterOps.assignToCentersTopN]]) is
+    * persisted before the driver-side distinct-cell collect: it is
+    * consumed twice (the collect AND the candidate join), and for
+    * self-query/backfill workloads where `queries` is corpus-sized an
+    * unpersisted subtree would scan the queries and run the probe
+    * kernel twice — a second corpus-scale pass for nothing. Tracked in
+    * [[graft.core.Caches]] (the result is lazy, so the operator cannot
+    * unpersist before returning).
     */
   def queryIvfIndexed(spark: org.apache.spark.sql.SparkSession,
                       path: String, queries: DataFrame, idCol: String,
                       arrCol: String, nProbe: Int, k: Int): DataFrame = {
-    import graft.mlops.NaiveBayesOps
-    graft.plans.GraftExpressions.register(spark)
     val centers = ivfIndexCentroids(spark, path)
-    val qLong = NaiveBayesOps.toLongForm(queries, Seq(idCol), arrCol)
-    val qDists = qLong.join(broadcast(centers), "dim")
-      .groupBy(col(idCol), col("cell"))
-      .agg(sum(pow(col("v") - col("c"), 2)).as("qdist"))
-    val wProbe = Window.partitionBy(col(idCol))
-      .orderBy(col("qdist").asc, col("cell"))
-    val probes = graft.core.Caches.track(qDists
-      .withColumn("_pr", row_number().over(wProbe))
-      .where(col("_pr") <= nProbe)
-      .select(col(idCol).as("query_id"), col("cell"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val probes = graft.core.Caches.track(
+      probeCells(queries, idCol, arrCol, centers, "cell", nProbe)
+        .select(col("query_id"), col("cell"))
+        .persist(StorageLevel.MEMORY_AND_DISK))
     val probedCells = probes.select(col("cell").cast("long")).distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
     // isInCollection, not isin(varargs): at ~64k cells x high nProbe the
@@ -754,17 +656,9 @@ object Similarity {
       .select(col(idCol).as("neighbor_id"), col("cell"),
         col(arrCol).as("_c"))
     val qU = queries.select(col(idCol).as("query_id"), col(arrCol).as("_q"))
-    val wK = Window.partitionBy(col("query_id"))
-      .orderBy(col("_cos").desc, col("neighbor_id"))
-    probes.join(idx, "cell")
+    cosineTopK(probes.join(idx, "cell")
       .where(col("query_id") =!= col("neighbor_id"))
-      .join(qU, "query_id")
-      .withColumn("_cos",
-        graft.plans.GraftExpressions.cosine(col("_q"), col("_c")))
-      .withColumn("rnk", row_number().over(wK))
-      .where(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rnk"),
-        round(col("_cos"), 4).as("cos"))
+      .join(qU, "query_id"), k)
   }
 
   /** nProbe tuning table: exact recall@k of IVF search vs brute-force
@@ -789,27 +683,15 @@ object Similarity {
   def ivfRecallCurve(emb: DataFrame, queries: DataFrame, idCol: String,
                      arrCol: String, centersLong: DataFrame,
                      centerCol: String, maxProbe: Int, k: Int): DataFrame = {
-    import graft.mlops.{ClusterOps, NaiveBayesOps}
     require(maxProbe >= 1, s"maxProbe=$maxProbe must be >= 1")
     val truth = bruteForceTopK(emb, queries, idCol, arrCol, k)
       .select(col("query_id"), col("neighbor_id"))
-    val cells = ClusterOps.assignToCenters(
-      NaiveBayesOps.toLongForm(emb, Seq(idCol), arrCol),
-      centersLong, idCol, centerCol)
-      .select(col(idCol).as("neighbor_id"), col(centerCol))
-    val qLong = NaiveBayesOps.toLongForm(queries, Seq(idCol), arrCol)
-    val wProbe = Window.partitionBy(col(idCol))
-      .orderBy(col("qdist").asc, col(centerCol))
-    val probes = qLong.join(broadcast(centersLong), "dim")
-      .groupBy(col(idCol), col(centerCol))
-      .agg(sum(pow(col("v") - col("c"), 2)).as("qdist"))
-      .withColumn("_pr", row_number().over(wProbe))
-      .where(col("_pr") <= maxProbe)
-      .select(col(idCol).as("query_id"), col(centerCol), col("_pr"))
     truth
-      .join(cells, "neighbor_id")
-      .join(probes, Seq("query_id", centerCol), "left")
-      .select(coalesce(col("_pr"), lit(Int.MaxValue)).as("_found_at"))
+      .join(corpusCells(emb, idCol, arrCol, centersLong, centerCol),
+        "neighbor_id")
+      .join(probeCells(queries, idCol, arrCol, centersLong, centerCol,
+        maxProbe), Seq("query_id", centerCol), "left")
+      .select(coalesce(col("probe_rank"), lit(Int.MaxValue)).as("_found_at"))
       .crossJoin(
         emb.sparkSession.range(1, maxProbe + 1L)
           .select(col("id").cast("int").as("n_probe")))
@@ -843,7 +725,8 @@ object Similarity {
                         centersLong: DataFrame, centerCol: String,
                         pairBudget: Long, nProbe: Int = 1): DataFrame = {
     require(pairBudget >= 0, s"pairBudget=$pairBudget must be >= 0")
-    val cells = assignCells(emb, idCol, arrCol, centersLong, centerCol, nProbe)
+    val cells = ClusterOps.assignCells(emb, idCol, arrCol, centersLong,
+      centerCol, nProbe)
     val wCum = Window.orderBy(col("cell_size"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     cells.groupBy(col(centerCol))
@@ -921,7 +804,8 @@ object Similarity {
                     centersLong: DataFrame, centerCol: String, k: Int,
                     nProbe: Int = 1, maxCell: Int = 1 << 16): DataFrame = {
     require(k >= 1, s"k=$k must be positive")
-    val cells = assignCells(emb, idCol, arrCol, centersLong, centerCol, nProbe)
+    val cells = ClusterOps.assignCells(emb, idCol, arrCol, centersLong,
+      centerCol, nProbe)
     // degenerate-cell guard runs on the ID-SIZED assignment, before
     // any vector is attached
     val okCells = cells.groupBy(col(centerCol))
@@ -996,11 +880,8 @@ object Similarity {
             col("src_id").as("neighbor_id")))).as("_e"))
       .select(col("_e.src_id").as("src_id"),
         col("_e.neighbor_id").as("neighbor_id"), col("_cos"))
-    val wK = Window.partitionBy(col("src_id"))
-      .orderBy(col("_cos").desc, col("neighbor_id"))
-    mirrored
-      .withColumn("rnk", row_number().over(wK))
-      .where(col("rnk") <= k)
+    topKPerGroup(mirrored, Seq(col("src_id")),
+        Seq(col("_cos").desc, col("neighbor_id")), k)
       .select(col("src_id"), col("neighbor_id"), col("rnk"),
         round(col("_cos"), 4).as("cos"))
   }
@@ -1040,28 +921,25 @@ object Similarity {
     require(beam >= k, s"beam=$beam must be >= k=$k")
     require(rounds >= 0, s"rounds=$rounds must be non-negative")
     // corpus cell membership (each point's single nearest cell) and the
-    // query's entry cell — the native in-row argmin ([[assignCells]]
-    // nProbe=1: broadcast packed centroids, map-side, no long-form
-    // blowup; the first cut used the dim-keyed long-form join and
-    // OOM'd the 500k stress build — 32M exploded rows × centers).
-    val cells = assignCells(emb, idCol, arrCol, centersLong, centerCol, 1)
-      .select(col(idCol).as("neighbor_id"), col(centerCol))
-    val entryCell = assignCells(queries, idCol, arrCol, centersLong,
-      centerCol, 1)
+    // query's entry cell — the native in-row argmin
+    // ([[ClusterOps.assignCells]]; the first cut used the dim-keyed
+    // long-form join and OOM'd the 500k stress build — 32M exploded
+    // rows × centers).
+    val cells = corpusCells(emb, idCol, arrCol, centersLong, centerCol)
+    val entryCell = ClusterOps.assignCells(queries, idCol, arrCol,
+        centersLong, centerCol)
       .select(col(idCol).as("query_id"), col(centerCol))
     val qU = queries.select(col(idCol).as("query_id"), col(arrCol).as("_q"))
     val cU = emb.select(col(idCol).as("neighbor_id"), col(arrCol).as("_c"))
-    val wBeam = Window.partitionBy(col("query_id"))
-      .orderBy(col("_cos").desc, col("neighbor_id"))
+    val byCos = Seq(col("_cos").desc, col("neighbor_id"))
     // candidates arrive as SLIM deduped (query, point) pairs; vectors
     // attach per candidate (keyed joins), exact cosine, top-beam
-    def scoreAndBeam(pairs: DataFrame): DataFrame = pairs
-      .join(qU, "query_id")
-      .join(cU, "neighbor_id")
-      .withColumn("_cos",
-        graft.plans.GraftExpressions.cosine(col("_q"), col("_c")))
-      .withColumn("_rn", row_number().over(wBeam))
-      .where(col("_rn") <= beam)
+    def scoreAndBeam(pairs: DataFrame): DataFrame = topKPerGroup(pairs
+        .join(qU, "query_id")
+        .join(cU, "neighbor_id")
+        .withColumn("_cos",
+          graft.plans.GraftExpressions.cosine(col("_q"), col("_c"))),
+        Seq(col("query_id")), byCos, beam, "_rn")
       .select(col("query_id"), col("neighbor_id"), col("_cos"))
     val level = StorageLevel.MEMORY_AND_DISK
     val entry = graft.core.Caches.pin(scoreAndBeam(
@@ -1080,9 +958,7 @@ object Similarity {
         .distinct()
       Some(graft.core.Round(scoreAndBeam(expanded)))
     }
-    frontier.df
-      .withColumn("rnk", row_number().over(wBeam))
-      .where(col("rnk") <= k)
+    topKPerGroup(frontier.df, Seq(col("query_id")), byCos, k)
       .select(col("query_id"), col("neighbor_id"), col("rnk"),
         round(col("_cos"), 4).as("cos"))
   }
@@ -1252,11 +1128,8 @@ object Similarity {
             col("src_id").as("neighbor_id")))).as("_e"))
       .select(col("_e.src_id").as("src_id"),
         col("_e.neighbor_id").as("neighbor_id"), col("_cos"))
-    val wK = Window.partitionBy(col("src_id"))
-      .orderBy(col("_cos").desc, col("neighbor_id"))
-    mirroredAll
-      .withColumn("rnk", row_number().over(wK))
-      .where(col("rnk") <= k)
+    topKPerGroup(mirroredAll, Seq(col("src_id")),
+        Seq(col("_cos").desc, col("neighbor_id")), k)
       .select(col("src_id"), col("neighbor_id"), col("rnk"),
         round(col("_cos"), 4).as("cos"))
   }

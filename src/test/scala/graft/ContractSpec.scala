@@ -115,7 +115,7 @@ class ContractSpec extends AnyFunSuite {
     val df = (for { i <- 1 to 50; j <- 1 to 4 } yield
       (i.toDouble, j.toDouble, 2.0 + 3.0 * i - 4.0 * j))
       .toDF("x1", "x2", "y")
-    val fit = LinearOps.olsFit2(df, "x1", "x2", "y")
+    val fit = LinearOps.olsFitN(df, Seq("x1", "x2"), "y", roundTo = 6)
       .as[(Double, Double, Double)].head()
     assert(math.abs(fit._1 - 2.0) < 1e-5, s"b0=${fit._1}")
     assert(math.abs(fit._2 - 3.0) < 1e-5, s"b1=${fit._2}")

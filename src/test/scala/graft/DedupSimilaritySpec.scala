@@ -418,6 +418,61 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(gated.toSeq === exact.toSeq)
   }
 
+  test("embeddingNearDupCells nProbe=1 and the in-row assignCells agree " +
+    "with the long-form assignment, exact ties included") {
+    // integer coordinates 1..7 and centers (2c+1)·1: a point with
+    // coordinate sum 8c+8 is equidistant to centers c and c+1
+    val rnd = new scala.util.Random(5)
+    val emb = (0L until 60L)
+      .map(i => (i, Seq.fill(4)((1 + rnd.nextInt(7)).toFloat)))
+      .toDF("vec_id", "embedding")
+    val centers = (for (c <- 0L until 4L; d <- 1 to 4)
+      yield (c, d, (2 * c + 1).toDouble)).toDF("cell", "dim", "c")
+    // the long-form reference: Σ(v−c)² per (point, cell), argmin by
+    // (d2, cell), then every in-cell pair (threshold −1 keeps them all)
+    val d2 = emb
+      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("_d", "v")))
+      .select(col("vec_id"), (col("_d") + 1).as("dim"), col("v"))
+      .join(centers, "dim")
+      .groupBy(col("vec_id"), col("cell"))
+      .agg(sum(pow(col("v") - col("c"), 2)).as("d2"))
+    val ties = d2.groupBy(col("vec_id")).agg(min(col("d2")).as("d2"))
+      .join(d2, Seq("vec_id", "d2")).groupBy(col("vec_id")).count()
+      .where(col("count") > 1).count()
+    assert(ties > 0, "fixture must hold exact ties")
+    val cells = d2.groupBy(col("vec_id"))
+      .agg(min(struct(col("d2"), col("cell"))).as("_m"))
+      .select(col("vec_id"), col("_m.cell").as("cell"))
+    assert(graft.mlops.ClusterOps.assignCells(emb, "vec_id", "embedding",
+        centers, "cell").as[(Long, Long)].collect().toSet
+      === cells.as[(Long, Long)].collect().toSet)
+    val ref = cells.select(col("vec_id").as("id_a"), col("cell"))
+      .join(cells.select(col("vec_id").as("id_b"), col("cell")), "cell")
+      .where(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b")).as[(Long, Long)].collect().toSet
+    val got = Dedup.embeddingNearDupCells(emb, "vec_id", "embedding",
+        centers, "cell", threshold = -1.0)
+      .select(col("id_a"), col("id_b")).as[(Long, Long)].collect().toSet
+    assert(ref.nonEmpty)
+    assert(got === ref)
+  }
+
+  test("ivfTopK fails loudly on an empty or mis-dimensioned centroid " +
+    "table") {
+    val emb = Seq((0L, Seq(1.0f, 0.0f)), (1L, Seq(0.0f, 1.0f)))
+      .toDF("vec_id", "embedding")
+    def cause(centers: org.apache.spark.sql.DataFrame): String = {
+      val e = intercept[Exception](Similarity.ivfTopK(emb, emb, "vec_id",
+        "embedding", centers, "cell", nProbe = 1, k = 1).collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .flatMap(t => Option(t.getMessage)).mkString("\n")
+    }
+    assert(cause(Seq.empty[(Long, Int, Double)].toDF("cell", "dim", "c"))
+      .contains("empty centroid table"))
+    assert(cause(Seq((0L, 1, 1.0)).toDF("cell", "dim", "c"))
+      .contains("dim mismatch"))
+  }
+
   test("graphSearchTopK recall beats single-probe adaptive IVF on boundary queries") {
     // unit vectors by angle; cells = the two axes, so assignment splits
     // at 45 degrees — queries at 44/46 degrees sit ON the boundary and

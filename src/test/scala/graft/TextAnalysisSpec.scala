@@ -567,6 +567,32 @@ class TextAnalysisSpec extends AnyFunSuite {
     }
   }
 
+  test("Caches: checkpoints read by lazy results are freed at release") {
+    import graft.mlops.Eval
+    import graft.similarity.Similarity
+    val labels = Seq((0L, 1, 1), (1L, 1, 0), (2L, 0, 0), (3L, 0, 0))
+      .toDF("id", "label", "pred")
+    val emb = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.9, 0.1)),
+      (2L, Seq(0.0, 1.0)), (3L, Seq(0.1, 0.9)), (4L, Seq(0.2, 0.8)))
+      .toDF("vec_id", "embedding")
+    val centers = Seq((0L, 1, 1.0), (0L, 2, 0.0), (1L, 1, 0.0), (1L, 2, 1.0))
+      .toDF("cell", "dim", "c")
+    val ops: Seq[(String, () => DataFrame)] = Seq(
+      "ivfTopKAdaptive" -> (() => Similarity.ivfTopKAdaptive(emb, emb,
+        "vec_id", "embedding", centers, "cell", nProbe = 1, k = 2,
+        minCand = 2)),
+      "classificationReport" -> (() =>
+        Eval.classificationReport(labels, "label", "pred")),
+      "cohensKappa" -> (() => Eval.cohensKappa(labels, "label", "pred")))
+    ops.foreach { case (name, op) =>
+      Caches.release(spark)
+      val before = persistedIds
+      assert(op().collect().nonEmpty, name)
+      Caches.release(spark)
+      assert((persistedIds -- before).isEmpty, name)
+    }
+  }
+
   test("pplBuckets: thirds ordered by mean LM score, head = highest, " +
     "short docs dropped") {
     val docs = (1L to 9L).map { i =>
