@@ -1,13 +1,17 @@
 package graft.mlops
 
+import graft.core.Caches
 import graft.functions.GraftFunctions
 import org.apache.spark.ml.{Pipeline, PipelineModel, PipelineStage}
 import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.ml.tuning.{CrossValidator, CrossValidatorModel, ParamGridBuilder}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 
 /** Composition / meta-operators (SURVEY §2.7): the reference's
   * `SparkPipeline` / `SparkFeatureUnion` / `SparkGridSearchCV`
@@ -202,26 +206,39 @@ object Composition {
     * multinomial Naive Bayes (Laplace α, the estimator axis) — scored
     * by held-out accuracy. Unlike [[cvRidgeUnivariate]] this crosses
     * two DIFFERENT component families' params in one grid, the thing
-    * the reference's generic wrapper did with a driver loop; here the
-    * whole |caps|×|alphas| grid is one declarative plan.
+    * the reference's generic wrapper did with a driver loop.
     *
     * Every choice is deterministic so a SQL oracle replays it:
-    * folds are md5-assigned from `idCol`; the per-fold training
-    * vocabulary is the top-`cap` terms by (training count DESC, term
-    * ASC); NB is closed-form on training counts with α-smoothing over
-    * the REALIZED vocab size; prediction is argmax of prior + Σ tf·logP
-    * over in-vocabulary tokens (OOV dropped — CountVectorizer
-    * semantics), ties to the lexicographically first class; a held-out
-    * doc with no in-vocabulary token scores on priors alone.
+    * folds are md5-assigned from `idCol` (a key: one row per id); the
+    * per-fold training vocabulary is the top-`cap` terms by (training
+    * count DESC, term ASC); NB is closed-form on training counts with
+    * α-smoothing over the REALIZED vocab size; prediction is argmax of
+    * prior + Σ tf·logP over in-vocabulary tokens (OOV dropped —
+    * CountVectorizer semantics), ties to the lexicographically first
+    * class; a held-out doc with no in-vocabulary token is predicted on
+    * priors alone. A class with no training doc in a fold has the prior
+    * -1e9 there. `chosen` marks the best grid point (accuracy DESC, cap
+    * ASC, alpha ASC). Caps and alphas must be distinct, alphas > 0.
     *
-    * Scale shape: ONE corpus tokenization pass, materialized at the
-    * finest grain (fold, id, label, term, tf) — every coarser
-    * statistic (global/per-fold/per-class term counts, held-out tf) is
-    * an exact integer re-sum of that persisted frame, and none of it
-    * depends on grid size; everything else is vocab- or grid-sized
-    * and broadcast. The per-(fold,cap) vocab and the model
-    * matrix are k·Σcaps·|classes| rows. `chosen` marks the best grid
-    * point (accuracy DESC, cap ASC, alpha ASC).
+    * Fit the way the reference does: sufficient statistics are
+    * distributed, the candidate models are built on the driver and
+    * scored against the corpus as one broadcast. ONE corpus
+    * tokenization pass is pinned at the finest grain (fold, id, label,
+    * term, tf); its vocabulary-scale (fold, label, term) rollup ranks
+    * each fold's exact top-max(caps) vocabulary. The driver collects
+    * only model-scale tables: per fold its vocabulary terms' per-class
+    * training counts (at most k·max(caps)·|classes| rows, within
+    * k·Σcaps·|classes|) and the (fold, label) doc counts (k·|classes|
+    * rows, plus a null fold from null ids). From them it builds every
+    * candidate's log-probabilities (k·Σcaps·|classes|·|alphas| rows)
+    * and priors, with Spark's arithmetic (`StrictMath.log`, integer
+    * counts summed as longs). One pass over the pinned tf joins that
+    * broadcast model, sums tf·logP per (candidate, doc, class), picks
+    * each doc's class with one aggregate and returns per-(candidate,
+    * fold, label) scored and correct counts; the driver adds the docs
+    * with no in-vocabulary token at their fold's prior-only class.
+    * Term tables, per-doc tf and per-doc scores stay distributed. Both
+    * pins are freed before this returns a driver-built local frame.
     *
     * Returns one row per grid point:
     * (vocab_cap, alpha, cv_accuracy, chosen).
@@ -231,157 +248,144 @@ object Composition {
                        alphas: Seq[Double], k: Int = 2): DataFrame = {
     require(k >= 2, s"k=$k folds must be at least 2")
     require(caps.nonEmpty && alphas.nonEmpty, "empty param grid")
+    require(caps.distinct.size == caps.size &&
+      alphas.distinct.size == alphas.size, s"repeated grid value: $caps $alphas")
+    require(alphas.forall(_ > 0), s"alphas $alphas: smoothing needs alpha > 0")
     val spark = docs.sparkSession
-    import spark.implicits._
     val base = docs.select(col(idCol).as("id"),
       pmod(GraftFunctions.md5Long(col(idCol).cast("string"), 8), lit(k))
         .cast("int").as("fold"),
       col(labelCol).as("label"), col(textCol).as("text"))
+    val labelType = base.schema("label").dataType
     val toks = base.select(col("id"), col("fold"), col("label"),
       explode(split(col("text"), " ")).as("term"))
-    // THE one corpus pass: the finest-grain aggregate (fold, id, label,
-    // term, tf) every statistic below derives from — id→(fold, label)
-    // is functional, so every coarser count is an exact integer re-sum
-    // of _tf. Without this the explode + scan re-ran once per derived
-    // aggregation (measured 13.2s at sf0.1; the derived re-aggs over
-    // the persisted frame are a fraction of a corpus pass each).
-    // Corpus-sized and re-read five times → DISK_ONLY (r9 criterion).
-    // localCheckpoint(eager), not a lazy persist (r22): materializes
-    // the pass exactly once (no concurrent-subquery recompute race) at
-    // the AQE-coalesced width — bytes-derived, so a handful of blocks
-    // at bench scale and full width at corpus scale — where a cached
-    // plan would keep the session's fixed shuffle width however small
-    // the data. Lineage truncation is the established trade for these
-    // fan-in frames (Components adjacency discipline); Caches.release
-    // frees the checkpoint blocks.
-    val tfFull = graft.core.Caches.pinShared(
+
+    // (fold, label) doc counts: k·|classes| rows, sorted by label as
+    // Spark sorts, so a class's index is its rank in the argmax tie-break
+    val flDocs = base.groupBy(col("fold"), col("label"))
+      .agg(count(lit(1)).as("_ndfl"))
+      .coalesce(1).sortWithinPartitions(col("label")).collect()
+      .map(r => ((r.get(0), r.get(1)), r.getLong(2)))
+    val docsIn = flDocs.toMap
+    val classes = flDocs.map(_._1._2).filter(_ != null).distinct.toSeq
+    val nd = flDocs.map(_._2).sum
+    val ndf = flDocs.groupMapReduce(_._1._1)(_._2)(_ + _)
+    val ndl = flDocs.groupMapReduce(_._1._2)(_._2)(_ + _)
+    // training priors per (held-out fold, class), -1e9 for a class whose
+    // every doc is in the held-out fold (Spark's log(0) would be null)
+    val prior = (for (f <- 0 until k; c <- classes) yield {
+      val train = ndl(c) - docsIn.getOrElse((f, c), 0L)
+      (f, c) -> (if (train > 0)
+        StrictMath.log(train.toDouble / (nd - ndf.getOrElse(f, 0L)))
+      else -1e9)
+    }).toMap
+    val priorOnly = (0 until k).flatMap(f => classes
+      .maxByOption(c => prior((f, c)))(Ordering.Double.TotalOrdering)
+      .map(f -> _)).toMap
+
+    // THE one corpus pass, at the finest grain every statistic below
+    // re-sums (id→(fold, label) is functional). Corpus-sized and read
+    // twice → DISK_ONLY, pinned eagerly at the AQE-coalesced width, as
+    // is its vocabulary-scale rollup, which is also read twice.
+    val tfFull = Caches.pin(
       toks.groupBy(col("fold"), col("id"), col("label"), col("term"))
         .agg(count(lit(1)).as("_tf")),
-      org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    val folds = (0 until k).toDF("fold")
-    val classes = base.select(col("label")).distinct()
-    val capsDf = caps.toDF("vocab_cap")
-    val alphasDf = alphas.toDF("alpha")
+      StorageLevel.DISK_ONLY)
+    try {
+      val fltCounts = Caches.pin(
+        tfFull.df.groupBy(col("fold"), col("label"), col("term"))
+          .agg(sum(col("_tf")).as("_cflt")),
+        StorageLevel.MEMORY_AND_DISK)
+      // (fold, term, rank, label, count) for each fold's top-max(caps)
+      // training terms: a count trains every fold but its own (a null
+      // fold, from a null id, trains them all)
+      val vocabCounts = try {
+        val trained = fltCounts.df.select(
+          explode(filter(sequence(lit(0), lit(k - 1)),
+            f => col("fold").isNull || f =!= col("fold"))).as("fold"),
+          col("label"), col("term"), col("_cflt"))
+        val ranked = topTermsPerFold(
+          trained.groupBy(col("fold"), col("term"))
+            .agg(sum(col("_cflt")).as("_train")),
+          caps.max)
+        broadcast(ranked.select(col("fold"), col("term"), col("_rk")))
+          .join(trained, Seq("fold", "term"))
+          .groupBy(col("fold"), col("term"), col("_rk"), col("label"))
+          .agg(sum(col("_cflt")).as("_tlt"))
+          .collect()
+      } finally fltCounts.free(blocking = false)
+      val ranks = vocabCounts.map(r => (r.getInt(0), r.getString(1), r.getInt(2)))
+        .distinct.groupBy(_._1)
+      val trainCount = vocabCounts
+        .map(r => (r.getInt(0), r.getString(1), r.get(3)) -> r.getLong(4)).toMap
 
-    // ---- CountVectorizer stage: per-fold training vocabulary ----
-    // ONE aggregation over the finest-grain frame (r22): the four term
-    // statistics below — global (_ct), per-fold (_cft), per-class
-    // (_clt), per-(fold,class) (_cflt) — previously each ran a full
-    // HashAggregate pass over the corpus-sized tfFull. They are all
-    // exact integer re-sums of the (fold, label, term) rollup, whose
-    // cardinality is vocabulary-scale (folds × classes × terms), so
-    // aggregate tfFull ONCE to that grain, persist the slim result, and
-    // re-sum it three ways. Every number is still the same exact
-    // integer sum of _tf (long addition is associative) — the oracle's
-    // re-sum contract is unchanged.
-    // Same eager/AQE-width materialization as tfFull (r22, Drill-
-    // measured): the rollup is referenced by ~6 consumers below; lazily
-    // persisted it was recomputed by racing AQE subquery jobs AND read
-    // through full-width task waves of near-empty tasks.
-    val fltCounts = graft.core.Caches.pinShared(
-      tfFull.groupBy(col("fold"), col("label"), col("term"))
-        .agg(sum(col("_tf")).as("_cflt")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tCounts = fltCounts.groupBy(col("term"))
-      .agg(sum(col("_cflt")).as("_ct"))
-    val ftCounts = fltCounts.groupBy(col("fold"), col("term"))
-      .agg(sum(col("_cflt")).as("_cft"))
-    val maxCap = caps.max
-    val trainCounts = broadcast(folds).crossJoin(tCounts)
-      .join(ftCounts, Seq("fold", "term"), "left")
-      .select(col("fold"), col("term"),
-        (col("_ct") - coalesce(col("_cft"), lit(0L))).as("_train"))
-      .where(col("_train") > 0)
-    val ranked = topTermsPerFold(trainCounts, maxCap)
-    val vocab = ranked.join(broadcast(capsDf), col("_rk") <= col("vocab_cap"))
-      .select(col("fold"), col("vocab_cap"), col("term"))
-    val vsize = vocab.groupBy(col("fold"), col("vocab_cap"))
-      .agg(count(lit(1)).as("_vsz"))
+      // every candidate's log-probabilities, as Spark evaluates
+      // log((tlt + α) / (ctot + α·vsz))
+      val model = for {
+        f <- 0 until k
+        cap <- caps
+        terms = ranks.getOrElse(f, Array.empty[(Int, String, Int)])
+          .collect { case (_, t, rk) if rk <= cap => t }.toSeq
+        c <- classes
+        counts = terms.map(t => trainCount.getOrElse((f, t, c), 0L))
+        ctot = counts.sum
+        a <- alphas
+        (t, n) <- terms.zip(counts)
+      } yield Row(f, t, cap, a, c, StrictMath.log(
+        (n.toDouble + a) / (ctot.toDouble + a * terms.size.toDouble)))
+      val modelDf = spark.createDataFrame(model.asJava, StructType(Seq(
+        StructField("fold", IntegerType), StructField("term", StringType),
+        StructField("vocab_cap", IntegerType),
+        StructField("alpha", DoubleType), StructField("cls", labelType),
+        StructField("_lp", DoubleType))))
+      val priorDf = spark.createDataFrame(
+        prior.map { case ((f, c), p) => Row(f, c, p) }.toSeq.asJava,
+        StructType(Seq(StructField("fold", IntegerType),
+          StructField("cls", labelType), StructField("_prior", DoubleType))))
 
-    // ---- NB stage: smoothed log-likelihoods on training counts ----
-    // (fltCounts computed once above; per-class counts are its re-sum)
-    val ltCounts = fltCounts.groupBy(col("label"), col("term"))
-      .agg(sum(col("_cflt")).as("_clt"))
-    val vlc = vocab.crossJoin(broadcast(classes.select(col("label").as("cls"))))
-      .join(ltCounts.withColumnRenamed("label", "cls"), Seq("cls", "term"), "left")
-      .join(fltCounts.withColumnRenamed("label", "cls"),
-        Seq("fold", "cls", "term"), "left")
-      .select(col("fold"), col("vocab_cap"), col("cls"), col("term"),
-        (coalesce(col("_clt"), lit(0L)) - coalesce(col("_cflt"), lit(0L)))
-          .cast("double").as("_tlt"))
-    val classTotals = vlc.groupBy(col("fold"), col("vocab_cap"), col("cls"))
-      .agg(sum(col("_tlt")).as("_ctot"))
-    val lp = vlc
-      .join(classTotals, Seq("fold", "vocab_cap", "cls"))
-      .join(vsize, Seq("fold", "vocab_cap"))
-      .crossJoin(broadcast(alphasDf))
-      .select(col("fold"), col("vocab_cap"), col("alpha"), col("cls"),
-        col("term"),
-        log((col("_tlt") + col("alpha")) /
-          (col("_ctot") + col("alpha") * col("_vsz"))).as("_lp"))
-    // training priors per (held-out fold, class). Degenerate-class
-    // convention, explicit on BOTH engines: a class whose every doc
-    // fell into the held-out fold has zero training docs — Spark's
-    // non-ANSI log(0) is NULL while DuckDB's ln(0) is -inf, so without
-    // the guard the parity was accidental (both happen to sort last
-    // under the desc argmax) and a doc scoring only on priors yielded
-    // null score rows. Pin the prior to -1e9: finite, never wins the
-    // argmax, identical doubles on both sides (the oracle mirrors the
-    // same CASE).
-    // One doc-count pass (r22): the (fold, label) doc rollup is k×|C|
-    // rows and every coarser count is its exact integer re-sum — the
-    // same collapse as fltCounts above (was four separate base scans).
-    // Tiny frame, four readers → MEMORY_AND_DISK, session-tracked.
-    // k×|C| rows AT ANY CORPUS SCALE (folds × classes) — the AQE-sized
-    // eager checkpoint lands it in one block everywhere, and the eager
-    // pass prevents the same concurrent-materialization race as above.
-    val flDocs = graft.core.Caches.pinShared(
-      base.groupBy(col("fold"), col("label"))
-        .agg(count(lit(1)).as("_ndfl")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val labelDocs = flDocs.groupBy(col("label")).agg(sum(col("_ndfl")).as("_ndl"))
-    val foldDocs = flDocs.groupBy(col("fold")).agg(sum(col("_ndfl")).as("_ndf"))
-    val nDocs = flDocs.agg(sum(col("_ndfl")).as("_nd"))
-    val priors = broadcast(folds).crossJoin(classes)
-      .join(labelDocs, "label")
-      .join(flDocs, Seq("fold", "label"), "left")
-      .join(foldDocs, "fold")
-      .crossJoin(broadcast(nDocs))
-      .select(col("fold"), col("label").as("cls"),
-        when(col("_ndl") - coalesce(col("_ndfl"), lit(0L)) > 0,
-          log((col("_ndl") - coalesce(col("_ndfl"), lit(0L))).cast("double") /
-            (col("_nd") - col("_ndf"))))
-          .otherwise(lit(-1e9)).as("_prior"))
+      // ---- held-out evaluation: one pass over the pinned tf ----
+      val scores = tfFull.df.where(col("label").isNotNull)
+        .join(broadcast(modelDf), Seq("fold", "term"))
+        .groupBy(col("vocab_cap"), col("alpha"), col("fold"), col("label"),
+          col("id"), col("cls"))
+        .agg(sum(col("_tf") * col("_lp")).as("_ll"))
+        .join(broadcast(priorDf), Seq("fold", "cls"))
+        .withColumn("score", col("_ll") + col("_prior"))
+      val scored = NaiveBayesOps.argmaxClass(scores,
+          Seq("vocab_cap", "alpha", "fold", "label", "id"), "cls", "pred")
+        .groupBy(col("vocab_cap"), col("alpha"), col("fold"), col("label"))
+        .agg(count(lit(1)).as("_n"),
+          sum((col("pred") === col("label")).cast("long")).as("_ok"))
+        .collect()
+        .map(r => (r.getInt(0), r.getDouble(1), r.getInt(2), r.get(3)) ->
+          (r.getLong(4), r.getLong(5))).toMap
 
-    // ---- held-out evaluation: the same materialized pass ----
-    val tf = tfFull.select(col("fold"), col("id"), col("term"),
-      col("_tf"))
-    val docScores = tf.join(lp, Seq("fold", "term"))
-      .groupBy(col("fold"), col("vocab_cap"), col("alpha"), col("id"),
-        col("cls"))
-      .agg(sum(col("_tf") * col("_lp")).as("_ll"))
-    // docs×grid×classes universe so an all-OOV doc still scores (priors)
-    val universe = base.select(col("fold"), col("id"),
-        col("label").as("actual"))
-      .crossJoin(broadcast(capsDf.crossJoin(alphasDf)))
-      .crossJoin(broadcast(classes.select(col("label").as("cls"))))
-    val wDoc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vocab_cap"), col("alpha"), col("id"))
-      .orderBy(col("_score").desc, col("cls"))
-    val preds = universe
-      .join(docScores, Seq("fold", "vocab_cap", "alpha", "id", "cls"), "left")
-      .join(priors, Seq("fold", "cls"))
-      .withColumn("_score", coalesce(col("_ll"), lit(0.0)) + col("_prior"))
-      .withColumn("_rn", row_number().over(wDoc))
-      .where(col("_rn") === 1)
-    val scoresByGrid = preds.groupBy(col("vocab_cap"), col("alpha"))
-      .agg((round(avg((col("cls") === col("actual")).cast("int")), 4)
-        + lit(0.0)).as("cv_accuracy"))
-    val wBest = org.apache.spark.sql.expressions.Window
-      .orderBy(col("cv_accuracy").desc, col("vocab_cap"), col("alpha"))
-    scoresByGrid
-      .withColumn("chosen",
-        (row_number().over(wBest) === 1).cast("int"))
+      // accuracy over every labelled held-out doc; one without an
+      // in-vocabulary token takes its fold's prior-only class
+      val evaluated = classes.nonEmpty && ndf.keys.exists(_ != null)
+      val grid = for (cap <- caps; a <- alphas if evaluated) yield {
+        val (n, ok) = (for (f <- 0 until k; c <- classes) yield {
+          val nfc = docsIn.getOrElse((f, c), 0L)
+          val (sn, sok) = scored.getOrElse((cap, a, f, c), (0L, 0L))
+          (nfc, sok + (if (priorOnly.get(f).contains(c)) nfc - sn else 0L))
+        }).foldLeft((0L, 0L)) { case ((x, y), (u, v)) => (x + u, y + v) }
+        // Spark's round(avg, 4) + 0.0
+        (cap, a, Option.when(n > 0)(BigDecimal(ok.toDouble / n)
+          .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble + 0.0))
+      }
+      val best = grid.sortBy { case (cap, a, acc) =>
+        (acc.isEmpty, -acc.getOrElse(0.0), cap, a)
+      }(Ordering.Tuple4(Ordering.Boolean, Ordering.Double.TotalOrdering,
+        Ordering.Int, Ordering.Double.TotalOrdering)).headOption
+      spark.createDataFrame(grid.map { case g @ (cap, a, acc) =>
+          Row(cap, a, acc.fold[Any](null)(identity),
+            if (best.contains(g)) 1 else 0)
+        }.asJava,
+        StructType(Seq(StructField("vocab_cap", IntegerType, nullable = false),
+          StructField("alpha", DoubleType, nullable = false),
+          StructField("cv_accuracy", DoubleType),
+          StructField("chosen", IntegerType, nullable = false))))
+    } finally tfFull.free(blocking = false)
   }
 
   /** Exact top-`maxCap` terms per fold by (train count DESC, term ASC),

@@ -28,11 +28,9 @@ object MLQueries extends QueryPack {
     // agree on full-precision scores.
     "n3_nb_predict_lang" -> ((s, dir) => {
       val docs = Tables(s, dir).documents
-      // The token explode feeds both the class-conditional fit and the
-      // per-doc tf counts; a localCheckpoint here was MEASURED a wash
-      // (1.26s vs 1.04s at ~15% ambient drift, sf0.1 full set) — the
-      // explode is cheap next to the two aggregations, so the lazy plan
-      // keeps the memory and stays.
+      // multinomialPredict derives the fit's counts, classes, vocabulary
+      // and the scoring tf from one (doc, term, tf) aggregate, so the
+      // token explode runs once and needs no checkpoint here.
       val docTokens = docs.select(col("doc_id"),
         explode(split(col("text"), " ")).as("term"))
       val classDocs = docs.select(col("doc_id"), col("lang"))

@@ -598,4 +598,75 @@ class MLOpsSpec extends AnyFunSuite {
     assert(preds.size === 2)
     assert(!preds.values.exists(_ == "ghost"))
   }
+
+  // Both NB entry points pick a doc's class by highest score, ties to the
+  // lexicographically first class, a null score below every non-null one.
+  private def predictBoth(toks: org.apache.spark.sql.DataFrame,
+                          classDocs: org.apache.spark.sql.DataFrame,
+                          model: org.apache.spark.sql.DataFrame,
+                          classDocCounts: org.apache.spark.sql.DataFrame,
+                          alpha: Double): Seq[Map[Long, String]] =
+    Seq(NaiveBayesOps.multinomialPredict(toks, "doc_id", "term", classDocs,
+        "cls", alpha),
+      NaiveBayesOps.multinomialPredictFromModel(toks, "doc_id", "term",
+        model, "cls", classDocCounts))
+      .map(_.as[(Long, String)].collect().toMap)
+
+  test("NB argmax: an exact score tie goes to the first class by name") {
+    // "b" and "a" have identical counts and priors: every score ties
+    val docs = Seq((1L, "b", "p q"), (2L, "a", "q p"))
+      .toDF("doc_id", "cls", "text")
+    val toks = docs.select(col("doc_id"),
+      explode(split(col("text"), " ")).as("term"))
+    val model = Seq(("b", "p", -0.5), ("b", "q", -0.5), ("a", "p", -0.5),
+      ("a", "q", -0.5)).toDF("cls", "term", "log_prob")
+    val counts = Seq(("b", 1L), ("a", 1L)).toDF("cls", "n_docs")
+    for (pred <- predictBoth(toks, docs.select("doc_id", "cls"), model,
+        counts, alpha = 1.0))
+      assert(pred === Map(1L -> "a", 2L -> "a"))
+  }
+
+  test("NB argmax: a null score ranks below every non-null score") {
+    // alpha = 0: a term the class never saw has log(0) = null, so each
+    // doc's other class scores null; "a" sorts first by name but must
+    // lose doc 2
+    val docs = Seq((1L, "a", "x"), (2L, "b", "y"))
+      .toDF("doc_id", "cls", "text")
+    val toks = docs.select(col("doc_id"),
+      explode(split(col("text"), " ")).as("term"))
+    val model = Seq[(String, String, Option[Double])](("a", "x", Some(0.0)),
+      ("a", "y", None), ("b", "x", None), ("b", "y", Some(0.0)))
+      .toDF("cls", "term", "log_prob")
+    val counts = Seq(("a", 1L), ("b", 1L)).toDF("cls", "n_docs")
+    for (pred <- predictBoth(toks, docs.select("doc_id", "cls"), model,
+        counts, alpha = 0.0))
+      assert(pred === Map(1L -> "a", 2L -> "b"))
+  }
+
+  test("cvNbPipelineGrid: one-fold class, all-OOV held-out doc, " +
+      "accuracy ties broken by cap then alpha") {
+    // md5 2-fold split of the ids: 1 3 6 9 10 13 16 -> fold 0,
+    // 2 4 5 7 8 -> fold 1. Class z lives only in fold 0, so with fold 0
+    // held out its training prior is the -1e9 guard and z is never
+    // predicted. Doc 8 ("qqq", fold 1) has no in-vocabulary token: it is
+    // predicted on priors alone (b, 3 of 7 training docs) and counted.
+    val docs = Seq((1L, "zebra", "z"), (3L, "zebra", "z"),
+      (6L, "apple", "a"), (9L, "apple", "a"), (2L, "apple", "a"),
+      (4L, "apple", "a"), (10L, "banana", "b"), (13L, "banana", "b"),
+      (16L, "banana", "b"), (5L, "banana", "b"), (7L, "banana", "b"),
+      (8L, "qqq", "b")).toDF("doc_id", "text", "lang")
+    val grid = graft.mlops.Composition.cvNbPipelineGrid(docs, "doc_id",
+        "text", "lang", caps = Seq(1, 2, 3), alphas = Seq(0.5, 1.0), k = 2)
+      .orderBy("vocab_cap", "alpha")
+      .as[(Int, Double, Double, Int)].collect().toSeq
+    // cap 1 keeps one term per fold (apple / banana): 3 of 7 + 3 of 5;
+    // caps 2 and 3 miss only the z docs and tie at 10 of 12, so the
+    // smaller cap and then the smaller alpha is chosen
+    assert(grid === Seq((1, 0.5, 0.5, 0), (1, 1.0, 0.5, 0),
+      (2, 0.5, 0.8333, 1), (2, 1.0, 0.8333, 0),
+      (3, 0.5, 0.8333, 0), (3, 1.0, 0.8333, 0)))
+    // no docs, no grid rows
+    assert(graft.mlops.Composition.cvNbPipelineGrid(docs.limit(0), "doc_id",
+      "text", "lang", caps = Seq(1), alphas = Seq(1.0)).count() === 0)
+  }
 }
