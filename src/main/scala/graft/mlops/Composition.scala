@@ -9,7 +9,7 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.ml.tuning.{CrossValidator, CrossValidatorModel, ParamGridBuilder}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import scala.jdk.CollectionConverters._
 
@@ -230,15 +230,18 @@ object Composition {
     * training counts (at most k·max(caps)·|classes| rows, within
     * k·Σcaps·|classes|) and the (fold, label) doc counts (k·|classes|
     * rows, plus a null fold from null ids). From them it builds every
-    * candidate's log-probabilities (k·Σcaps·|classes|·|alphas| rows)
-    * and priors, with Spark's arithmetic (`StrictMath.log`, integer
-    * counts summed as longs). One pass over the pinned tf joins that
-    * broadcast model, sums tf·logP per (candidate, doc, class), picks
-    * each doc's class with one aggregate and returns per-(candidate,
-    * fold, label) scored and correct counts; the driver adds the docs
-    * with no in-vocabulary token at their fold's prior-only class.
-    * Term tables, per-doc tf and per-doc scores stay distributed. Both
-    * pins are freed before this returns a driver-built local frame.
+    * candidate's log-probabilities (k·Σcaps·|classes|·|alphas| values,
+    * broadcast as one row per (fold, term) with a value per (cap,
+    * alpha, class)) and priors, with Spark's arithmetic
+    * (`StrictMath.log`, integer counts summed as longs). One pass over
+    * the pinned tf joins that broadcast model and sums tf·logP per doc
+    * in |caps|·|alphas|·|classes| Spark sums; each doc's class per
+    * candidate is an in-row argmax, and a second aggregate returns
+    * per-(fold, label) scored and correct counts per candidate. The
+    * driver adds the docs with no in-vocabulary token at their fold's
+    * prior-only class. Term tables, per-doc tf and per-doc scores stay
+    * distributed. The pin is freed before this returns a driver-built
+    * local frame.
     *
     * Returns one row per grid point:
     * (vocab_cap, alpha, cv_accuracy, chosen).
@@ -256,7 +259,6 @@ object Composition {
       pmod(GraftFunctions.md5Long(col(idCol).cast("string"), 8), lit(k))
         .cast("int").as("fold"),
       col(labelCol).as("label"), col(textCol).as("text"))
-    val labelType = base.schema("label").dataType
     val toks = base.select(col("id"), col("fold"), col("label"),
       explode(split(col("text"), " ")).as("term"))
 
@@ -285,35 +287,33 @@ object Composition {
 
     // THE one corpus pass, at the finest grain every statistic below
     // re-sums (id→(fold, label) is functional). Corpus-sized and read
-    // twice → DISK_ONLY, pinned eagerly at the AQE-coalesced width, as
-    // is its vocabulary-scale rollup, which is also read twice.
+    // by two queries → DISK_ONLY, pinned eagerly at the AQE-coalesced
+    // width.
     val tfFull = Caches.pin(
       toks.groupBy(col("fold"), col("id"), col("label"), col("term"))
         .agg(count(lit(1)).as("_tf")),
       StorageLevel.DISK_ONLY)
     try {
-      val fltCounts = Caches.pin(
-        tfFull.df.groupBy(col("fold"), col("label"), col("term"))
-          .agg(sum(col("_tf")).as("_cflt")),
-        StorageLevel.MEMORY_AND_DISK)
       // (fold, term, rank, label, count) for each fold's top-max(caps)
-      // training terms: a count trains every fold but its own (a null
-      // fold, from a null id, trains them all)
-      val vocabCounts = try {
-        val trained = fltCounts.df.select(
-          explode(filter(sequence(lit(0), lit(k - 1)),
+      // training terms, from the vocabulary-scale (fold, label, term)
+      // rollup: a count trains every fold but its own (a null fold, from
+      // a null id, trains them all). The query reads `trained` twice and
+      // AQE reuses its one exchange.
+      val trained = tfFull.df.groupBy(col("fold"), col("label"), col("term"))
+        .agg(sum(col("_tf")).as("_cflt"))
+        .select(explode(filter(sequence(lit(0), lit(k - 1)),
             f => col("fold").isNull || f =!= col("fold"))).as("fold"),
           col("label"), col("term"), col("_cflt"))
-        val ranked = topTermsPerFold(
-          trained.groupBy(col("fold"), col("term"))
-            .agg(sum(col("_cflt")).as("_train")),
-          caps.max)
-        broadcast(ranked.select(col("fold"), col("term"), col("_rk")))
-          .join(trained, Seq("fold", "term"))
-          .groupBy(col("fold"), col("term"), col("_rk"), col("label"))
-          .agg(sum(col("_cflt")).as("_tlt"))
-          .collect()
-      } finally fltCounts.free(blocking = false)
+      val ranked = topTermsPerFold(
+        trained.groupBy(col("fold"), col("term"))
+          .agg(sum(col("_cflt")).as("_train")),
+        caps.max)
+      val vocabCounts = broadcast(ranked.select(col("fold"), col("term"),
+          col("_rk")))
+        .join(trained, Seq("fold", "term"))
+        .groupBy(col("fold"), col("term"), col("_rk"), col("label"))
+        .agg(sum(col("_cflt")).as("_tlt"))
+        .collect()
       val ranks = vocabCounts.map(r => (r.getInt(0), r.getString(1), r.getInt(2)))
         .distinct.groupBy(_._1)
       val trainCount = vocabCounts
@@ -321,7 +321,7 @@ object Composition {
 
       // every candidate's log-probabilities, as Spark evaluates
       // log((tlt + α) / (ctot + α·vsz))
-      val model = for {
+      val lp = (for {
         f <- 0 until k
         cap <- caps
         terms = ranks.getOrElse(f, Array.empty[(Int, String, Int)])
@@ -331,39 +331,64 @@ object Composition {
         ctot = counts.sum
         a <- alphas
         (t, n) <- terms.zip(counts)
-      } yield Row(f, t, cap, a, c, StrictMath.log(
-        (n.toDouble + a) / (ctot.toDouble + a * terms.size.toDouble)))
-      val modelDf = spark.createDataFrame(model.asJava, StructType(Seq(
-        StructField("fold", IntegerType), StructField("term", StringType),
-        StructField("vocab_cap", IntegerType),
-        StructField("alpha", DoubleType), StructField("cls", labelType),
-        StructField("_lp", DoubleType))))
-      val priorDf = spark.createDataFrame(
-        prior.map { case ((f, c), p) => Row(f, c, p) }.toSeq.asJava,
+      } yield (f, t, cap, a, c) -> StrictMath.log(
+        (n.toDouble + a) / (ctot.toDouble + a * terms.size.toDouble))).toMap
+      // the broadcast model: one row per (fold, vocabulary term), its
+      // log-probability in every (cap, alpha, class) slot, null where the
+      // term is outside the cap's vocabulary
+      val points = for (cap <- caps; a <- alphas) yield (cap, a)
+      val slots = for ((cap, a) <- points; c <- classes) yield (cap, a, c)
+      val modelDf = spark.createDataFrame(ranks.toSeq.flatMap {
+          case (f, terms) => terms.map { case (_, t, _) =>
+            Row(f, t, slots.map { case (cap, a, c) =>
+              lp.get((f, t, cap, a, c)).fold[Any](null)(identity) })
+          }
+        }.asJava,
         StructType(Seq(StructField("fold", IntegerType),
-          StructField("cls", labelType), StructField("_prior", DoubleType))))
+          StructField("term", StringType),
+          StructField("_lp", ArrayType(DoubleType)))))
 
       // ---- held-out evaluation: one pass over the pinned tf ----
-      val scores = tfFull.df.where(col("label").isNotNull)
-        .join(broadcast(modelDf), Seq("fold", "term"))
-        .groupBy(col("vocab_cap"), col("alpha"), col("fold"), col("label"),
-          col("id"), col("cls"))
-        .agg(sum(col("_tf") * col("_lp")).as("_ll"))
-        .join(broadcast(priorDf), Seq("fold", "cls"))
-        .withColumn("score", col("_ll") + col("_prior"))
-      val scored = NaiveBayesOps.argmaxClass(scores,
-          Seq("vocab_cap", "alpha", "fold", "label", "id"), "cls", "pred")
-        .groupBy(col("vocab_cap"), col("alpha"), col("fold"), col("label"))
-        .agg(count(lit(1)).as("_n"),
-          sum((col("pred") === col("label")).cast("long")).as("_ok"))
-        .collect()
-        .map(r => (r.getInt(0), r.getDouble(1), r.getInt(2), r.get(3)) ->
-          (r.getLong(4), r.getLong(5))).toMap
+      // Σ tf·logP per (doc, slot) as Spark sums; a doc with no token in a
+      // cap's vocabulary has null sums there, and every class of an
+      // in-vocabulary term has a log-probability, so a doc's sums for
+      // one grid point are all null or none
+      val scored = if (slots.isEmpty) Map.empty[Any, (Long, Long)] else {
+        val ll = slots.indices.map(j => col(s"_ll$j"))
+        val sums = slots.indices.map(j =>
+          sum(col("_tf") * col("_lp")(j)).as(s"_ll$j"))
+        // each grid point's argmax in-row, prior + Σ tf·logP DESC then
+        // class; scored and correct docs counted per (fold, label)
+        val classLit = array(classes.map(lit): _*)
+        val counts = points.indices.flatMap { g =>
+          val cls = classes.indices.map(i => g * classes.size + i)
+          val best = array_min(array(classes.indices.map { i =>
+            val classPrior = array((0 until k).map(f =>
+              lit(prior((f, classes(i))))): _*)
+            struct((-(ll(cls(i)) + classPrior(col("fold")))).as("_neg"),
+              lit(i).as("_i"))
+          }: _*)).getField("_i")
+          Seq(count(ll(cls.head)),
+            count(when(ll(cls.head).isNotNull &&
+              classLit(best) === col("label"), lit(1))))
+        }
+        tfFull.df.where(col("label").isNotNull)
+          .join(broadcast(modelDf), Seq("fold", "term"))
+          .groupBy(col("fold"), col("label"), col("id"))
+          .agg(sums.head, sums.tail: _*)
+          .groupBy(col("fold"), col("label"))
+          .agg(counts.head, counts.tail: _*)
+          .collect()
+          .flatMap(r => points.indices.map { g =>
+            (points(g)._1, points(g)._2, r.getInt(0), r.get(1)) ->
+              (r.getLong(2 + 2 * g), r.getLong(3 + 2 * g))
+          }).toMap[Any, (Long, Long)]
+      }
 
       // accuracy over every labelled held-out doc; one without an
       // in-vocabulary token takes its fold's prior-only class
       val evaluated = classes.nonEmpty && ndf.keys.exists(_ != null)
-      val grid = for (cap <- caps; a <- alphas if evaluated) yield {
+      val grid = for ((cap, a) <- points if evaluated) yield {
         val (n, ok) = (for (f <- 0 until k; c <- classes) yield {
           val nfc = docsIn.getOrElse((f, c), 0L)
           val (sn, sok) = scored.getOrElse((cap, a, f, c), (0L, 0L))

@@ -22,18 +22,11 @@ object NaiveBayesOps {
     */
   def multinomialFit(tokens: DataFrame, classCol: String, termCol: String,
                      alpha: Double = 1.0,
-                     roundDigits: Option[Int] = Some(6)): DataFrame =
-    fitCounts(tokens.groupBy(col(classCol), col(termCol))
-      .agg(count(lit(1)).as("cnt")), classCol, termCol, alpha, roundDigits)
-
-  /** [[multinomialFit]] over its (classCol, termCol, cnt) counts: the
-    * classes, the vocabulary and the class totals are re-sums of `counts`,
-    * so every one of them reads the same aggregate.
-    */
-  private def fitCounts(counts: DataFrame, classCol: String, termCol: String,
-                        alpha: Double, roundDigits: Option[Int]): DataFrame = {
-    val classes = counts.select(col(classCol)).distinct()
-    val vocab = counts.select(col(termCol)).distinct()
+                     roundDigits: Option[Int] = Some(6)): DataFrame = {
+    val counts = tokens.groupBy(col(classCol), col(termCol))
+      .agg(count(lit(1)).as("cnt"))
+    val classes = tokens.select(col(classCol)).distinct()
+    val vocab = tokens.select(col(termCol)).distinct()
     val vsize = vocab.agg(count(lit(1)).as("_v"))
     val totals = counts.groupBy(col(classCol)).agg(sum(col("cnt")).as("class_total"))
     val raw = log((col("cnt") + lit(alpha)) /
@@ -92,22 +85,18 @@ object NaiveBayesOps {
   def multinomialScores(docTokens: DataFrame, docCol: String, termCol: String,
                         classDocs: DataFrame, classCol: String,
                         alpha: Double = 1.0): DataFrame = {
-    // One (doc, term, tf) aggregate: the fit's class-term counts (and so
-    // its classes and vocabulary) and the scoring tf are all re-sums of
-    // it, so the token explode runs once per query.
-    val tf = docTokens.groupBy(col(docCol), col(termCol))
+    val logProb = multinomialFit(
+      docTokens.join(classDocs, docCol), classCol, termCol, alpha,
+      roundDigits = None)
+      .withColumnRenamed("log_prob", "_lp")
+      .drop("cnt")
+    val counts = docTokens.groupBy(col(docCol), col(termCol))
       .agg(count(lit(1)).as("tf"))
-    val logProb = fitCounts(
-      tf.join(classDocs, docCol).groupBy(col(classCol), col(termCol))
-        .agg(sum(col("tf")).as("cnt")),
-      classCol, termCol, alpha, roundDigits = None)
-      .select(col(classCol), col(termCol), col("log_prob").as("_lp"))
-    val classCounts = classDocs.groupBy(col(classCol))
-      .agg(count(lit(1)).as("_nc"))
-    val nDocs = classCounts.agg(sum(col("_nc")).as("_n"))
-    val priors = classCounts.crossJoin(broadcast(nDocs))
+    val nDocs = classDocs.agg(count(lit(1)).as("_n"))
+    val priors = classDocs.groupBy(col(classCol)).agg(count(lit(1)).as("_nc"))
+      .crossJoin(broadcast(nDocs))
       .select(col(classCol), log(col("_nc") / col("_n")).as("prior"))
-    tf
+    counts
       .join(logProb, Seq(termCol))
       .groupBy(col(docCol), col(classCol))
       .agg(sum(col("tf") * col("_lp")).as("ll"))
@@ -115,21 +104,20 @@ object NaiveBayesOps {
       .withColumn("score", col("ll") + col("prior"))
   }
 
-  /** One row per `keys` group with the `classCol` value of its highest
-    * `score` as `predCol`: the order of `score DESC NULLS LAST, class`
-    * (NaN highest, -0.0 equal to 0.0, as in Spark's sort), so a null
-    * score ranks below every other and a tie goes to the first class.
-    * One aggregate, `min` of a struct whose fields sort that way, with a
-    * map-side partial per group instead of a window's full sort.
+  /** One row per doc with the `classCol` value of its highest `score`
+    * as `pred`: the order of `score DESC NULLS LAST, class` (NaN
+    * highest, -0.0 equal to 0.0, as in Spark's sort), so a null score
+    * ranks below every other and a tie goes to the first class. One
+    * aggregate, `min` of a struct whose fields sort that way, with a
+    * map-side partial per doc instead of a window's full sort.
     */
-  private[mlops] def argmaxClass(scores: DataFrame, keys: Seq[String],
-                                 classCol: String,
-                                 predCol: String): DataFrame = {
+  private def argmaxClass(scores: DataFrame, docCol: String,
+                          classCol: String): DataFrame = {
     val s = col("score")
-    scores.groupBy(keys.map(col): _*)
+    scores.groupBy(col(docCol))
       .agg(min(struct(s.isNull.as("_null"), (!isnan(s)).as("_num"),
         (-s).as("_neg"), col(classCol).as("_cls"))).as("_best"))
-      .select(keys.map(col) :+ col("_best._cls").as(predCol): _*)
+      .select(col(docCol), col("_best._cls").as("pred"))
   }
 
   /** Predict from a PERSISTED model instead of refitting: `model` is a
@@ -163,7 +151,7 @@ object NaiveBayesOps {
       .agg(sum(col("tf") * col("_lp")).as("ll"))
       .join(broadcast(priors), Seq(classCol))
       .withColumn("score", col("ll") + col("prior"))
-    argmaxClass(scores, Seq(docCol), classCol, "pred")
+    argmaxClass(scores, docCol, classCol)
   }
 
   /** Multinomial NB predict: argmax over classes of the log-posterior
@@ -173,7 +161,7 @@ object NaiveBayesOps {
                          classDocs: DataFrame, classCol: String,
                          alpha: Double = 1.0): DataFrame =
     argmaxClass(multinomialScores(docTokens, docCol, termCol, classDocs,
-      classCol, alpha), Seq(docCol), classCol, "pred")
+      classCol, alpha), docCol, classCol)
 
   /** predict_proba (reference `splearn/naive_bayes.py:~L140-170`):
     * numerically-stable softmax of the per-doc log-posteriors —
